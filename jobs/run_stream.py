@@ -92,9 +92,11 @@ watermarked, pipeline/wire/neardup are foreachBatch exactly-once):
                (dropDuplicatesWithinWatermark on conv_id/turn_idx)
     counters   event-time windowed per-role counters
 
-``--drain`` uses trigger(availableNow=True): process everything present
-then exit — the batch-parity mode the tests use. Without it the query
-runs continuously (micro-batches as files land).
+``--drain`` uses trigger(availableNow=True) in every streaming mode:
+process everything present, then exit — the batch-parity mode the tests
+use. Without it the query runs continuously (a micro-batch as files
+land) until stopped. The compact modes and ann-train are one-shot
+either way.
 """
 
 from __future__ import annotations
@@ -104,19 +106,45 @@ import sys
 
 
 def main(argv: list[str]) -> int:
+    from slog_agent_spark.streaming import ann_stream as A
+    from slog_agent_spark.streaming import stream as S
+    from slog_agent_spark.streaming.store import STORES, compact, drain
+
+    def over(source, fn):
+        return lambda spark, path: fn(source(spark, path))
+
+    transcripts, docs = S.stream_transcripts, S.stream_documents
+    # mode -> (source, sink): the sink is a foreachBatch handler built
+    # from the parsed args, or None for append-mode parquet at --output
+    drains = {
+        "pipeline": (transcripts, lambda a: S.pipeline_batch_handler(
+            a.output, with_metrics=True)),
+        "wire": (transcripts, lambda a: S.wire_batch_handler(
+            a.output, salts=a.salts, wire_format=a.wire_format)),
+        "neardup": (docs, lambda a: S.neardup_batch_handler(a.output)),
+        "docdedup": (docs, lambda a: S.docdedup_batch_handler(a.output)),
+        "trainingcut": (S.stream_documents_mix,
+                        lambda a: S.training_cut_batch_handler(a.output)),
+        "boilerplate": (docs,
+                        lambda a: S.boilerplate_batch_handler(a.output)),
+        "simhash": (docs, lambda a: S.simhash_batch_handler(a.output)),
+        "ann-ingest": (A.stream_embeddings, lambda a: (
+            A.ann_ingest_batch_handler(a.output, a.centroids))),
+        "ann-neardup": (A.stream_embeddings, lambda a: (
+            A.ann_neardup_batch_handler(a.output, a.centroids))),
+        "attrib": (over(S.stream_events, S.attrib_stream), None),
+        "sessions": (over(transcripts, S.session_rollup_stream), None),
+        "dedup": (over(transcripts, S.dedup_stream), None),
+        "counters": (over(transcripts, S.windowed_role_counts), None),
+    }
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--mode", default="pipeline",
-                    choices=["pipeline", "wire", "neardup", "neardup-compact",
-                             "events-compact", "ann-train", "ann-ingest",
-                             "ann-neardup", "ann-compact", "docdedup",
-                             "docdedup-compact", "trainingcut",
-                             "trainingcut-compact", "boilerplate",
-                             "boilerplate-compact", "simhash", "simhash-compact",
-                             "attrib", "sessions",
-                             "dedup", "counters"])
+                    choices=[*drains, "ann-train",
+                             *(f"{name}-compact" for name in STORES)])
     ap.add_argument("--salts", type=int, default=1,
                     help="wire mode: sub-chunkers per hot tag")
     ap.add_argument("--wire-format", default="fluentd",
@@ -132,125 +160,51 @@ def main(argv: list[str]) -> int:
                     help="ann modes: path of the materialized centroid "
                          "table (written by ann-train, read by ann-ingest)")
     ap.add_argument("--drain", action="store_true",
-                    help="availableNow trigger: drain existing input, exit")
+                    help="availableNow trigger: drain existing input, "
+                         "exit (default: run continuously)")
     ap.add_argument("--metrics-out", default=None,
                     help="pipeline mode: dump the cumulative cross-batch "
                          "process counters as Prometheus text after the "
                          "drain (stream twin of run_pipeline --metrics-out)")
     args = ap.parse_args(argv)
+    if args.mode in ("ann-train", "ann-ingest", "ann-neardup") and (
+        not args.centroids
+    ):
+        raise SystemExit("--centroids is required for ann modes")
 
     from slog_agent_spark.session import build_session
-    from slog_agent_spark.streaming import stream as S
 
     spark = build_session(app_name=f"slog-agent-spark-stream-{args.mode}")
     try:
-        if args.mode == "pipeline":
-            # has its own foreachBatch writer + availableNow drain
-            S.run_stream_pipeline(
-                spark, args.input, args.output, args.checkpoint
+        if args.mode.endswith("-compact"):
+            # between drains (never concurrently with the stream): fold
+            # committed per-batch store partitions into the bounded base
+            spec = STORES[args.mode.removesuffix("-compact")]
+            report = compact(spark, args.output, spec, args.compact_mode)
+            for table, r in report.items():
+                print(f"compacted {table}: {r['rows']} rows, "
+                      f"{r['files_before']} -> {r['files_after']} files")
+        elif args.mode == "ann-train":
+            A.train_ann_centroids(
+                spark, spark.read.parquet(args.input), args.centroids
             )
-            if args.metrics_out:
-                from slog_agent_spark.operators.metrics import prometheus_dump
+            print(f"centroids -> {args.centroids}")
+        else:
+            source, handler = drains[args.mode]
+            drain(
+                source(spark, args.input), args.checkpoint,
+                handler(args) if handler else args.output,
+                available_now=args.drain,
+            ).awaitTermination()
+            if args.mode == "pipeline" and args.metrics_out:
+                from slog_agent_spark.operators.metrics import (
+                    prometheus_dump,
+                )
 
                 totals = S.stream_metrics_total(spark, args.output)
                 with open(args.metrics_out, "w", encoding="utf-8") as fh:
                     fh.write(prometheus_dump(totals))
                 print(f"metrics -> {args.metrics_out}")
-            return 0
-        if args.mode == "wire":
-            # protocol chunks per (batch, tag): fluentd
-            # CompressedPackedForward or datadog gzip JSON-array
-            S.run_stream_wire_sink(
-                spark, args.input, args.output, args.checkpoint,
-                salts=args.salts, wire_format=args.wire_format,
-            )
-            return 0
-        if args.mode == "neardup":
-            S.run_stream_neardup(
-                spark, args.input, args.output, args.checkpoint
-            )
-            return 0
-        if args.mode == "docdedup":
-            S.run_stream_docdedup(
-                spark, args.input, args.output, args.checkpoint
-            )
-            return 0
-        if args.mode in ("ann-train", "ann-ingest", "ann-neardup"):
-            from slog_agent_spark.streaming import ann_stream as A
-
-            if not args.centroids:
-                raise SystemExit("--centroids is required for ann modes")
-            if args.mode == "ann-train":
-                A.train_ann_centroids(
-                    spark, spark.read.parquet(args.input), args.centroids
-                )
-                print(f"centroids -> {args.centroids}")
-            else:
-                A.run_stream_ann_ingest(
-                    spark, args.input, args.output, args.checkpoint,
-                    args.centroids, neardup=(args.mode == "ann-neardup"),
-                )
-            return 0
-        if args.mode == "attrib":
-            S.run_stream_attrib(
-                spark, args.input, args.output, args.checkpoint
-            )
-            return 0
-        if args.mode == "simhash":
-            S.run_stream_simhash(
-                spark, args.input, args.output, args.checkpoint
-            )
-            return 0
-        if args.mode == "boilerplate":
-            S.run_stream_boilerplate(
-                spark, args.input, args.output, args.checkpoint
-            )
-            return 0
-        if args.mode == "trainingcut":
-            S.run_stream_training_cut(
-                spark, args.input, args.output, args.checkpoint
-            )
-            return 0
-        if args.mode in ("neardup-compact", "events-compact", "ann-compact",
-                         "docdedup-compact", "trainingcut-compact",
-                         "boilerplate-compact", "simhash-compact"):
-            # between drains (never concurrently with the stream): fold
-            # committed per-batch store partitions into the bounded base
-            if args.mode == "ann-compact":
-                from slog_agent_spark.streaming.ann_stream import (
-                    compact_ann_store as compact,
-                )
-            else:
-                compact = {
-                    "neardup-compact": S.compact_neardup_store,
-                    "events-compact": S.compact_events_sink,
-                    "docdedup-compact": S.compact_docdedup_store,
-                    "trainingcut-compact": S.compact_training_cut_store,
-                    "boilerplate-compact": S.compact_boilerplate_store,
-                    "simhash-compact": S.compact_simhash_store,
-                }[args.mode]
-            report = compact(spark, args.output, mode=args.compact_mode)
-            for table, r in report.items():
-                print(f"compacted {table}: {r['rows']} rows, "
-                      f"{r['files_before']} -> {r['files_after']} files")
-            return 0
-
-        src = S.stream_transcripts(spark, args.input)
-        df = {
-            "sessions": S.session_rollup_stream,
-            "dedup": S.dedup_stream,
-            "counters": S.windowed_role_counts,
-        }[args.mode](src)
-        writer = (
-            df.writeStream.format("parquet")
-            .option("path", args.output)
-            .option("checkpointLocation", args.checkpoint)
-            .outputMode("append")
-        )
-        if args.drain:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        q.awaitTermination()
     finally:
         spark.stop()
     return 0

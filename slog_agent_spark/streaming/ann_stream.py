@@ -37,12 +37,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, FloatType, IntegerType, LongType, StructField, StructType,
+)
 
 from ..functions.dialect import SPARK as SPARK_D
 from ..operators import similarity
 from ..plans.corpus_config import CorpusParams, DEFAULT_CORPUS_PARAMS
-from ..sinks.writers import write_table
 from . import store as _store
+
+EMBEDDING_SCHEMA = StructType([
+    StructField("vec_id", LongType()),
+    StructField("embedding", ArrayType(FloatType())),
+    StructField("label", IntegerType()),
+])
+_VECTORS, _PAIRS = _store.ANN["vectors"], _store.ANN["pairs"]
+
+
+def stream_embeddings(spark: SparkSession, input_dir: str) -> DataFrame:
+    return _store.source(spark, EMBEDDING_SCHEMA, input_dir, 4)
 
 
 def train_ann_centroids(
@@ -99,17 +112,6 @@ def _assign_batch(batch_df: DataFrame, cents_path: str, assign_r: int):
     """)
 
 
-def _commit_vectors(assigned: DataFrame, store_dir: str, batch_id: int) -> None:
-    # one task per list -> one file per (batch, centroid_id) dir
-    write_table(
-        assigned.repartition(F.col("centroid_id"))
-        .withColumn("batch_id", F.lit(batch_id)),
-        f"{store_dir}/vectors",
-        partition_by=["batch_id", "centroid_id"],
-        mode="overwrite_partitions",
-    )
-
-
 def ann_ingest_batch_handler(
     store_dir: str,
     cents_path: str,
@@ -131,7 +133,7 @@ def ann_ingest_batch_handler(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         assigned = _assign_batch(batch_df, cents_path, assign_r)
-        _commit_vectors(assigned, store_dir, batch_id)
+        _store.commit_batch(assigned, store_dir, _VECTORS, batch_id)
         if stats is not None:
             stats.append({
                 "batch_id": batch_id,
@@ -172,31 +174,18 @@ def ann_neardup_batch_handler(
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         new_assigned = _assign_batch(
             batch_df, cents_path, assign_r
         ).localCheckpoint()
         new_assigned.createOrReplaceTempView("annd_new")
-
-        path = f"{store_dir}/vectors"
-        _store.heal_swapped_dir(path)
-        touched = [
-            r["centroid_id"]
-            for r in new_assigned.select("centroid_id").distinct().collect()
-        ]
-        try:
-            store = spark.read.parquet(path)
-        except AnalysisException:
-            store = None
+        pruned, touched = _store.read_prior(
+            spark, store_dir, _VECTORS, batch_id, new_assigned
+        )
         n_scanned = 0
-        has_store = store is not None
+        has_store = pruned is not None
         if has_store:
-            pruned = store.where(
-                (F.col("batch_id").cast("long") != batch_id)
-                & F.col("centroid_id").isin(touched)
-            ).select(
+            pruned = pruned.select(
                 "vec_id", "embedding", "nrm",
                 F.col("centroid_id").cast("int").alias("centroid_id"),
             ).localCheckpoint()
@@ -241,13 +230,8 @@ def ann_neardup_batch_handler(
           JOIN embs eb ON eb.vec_id = c.vec_b
         ) v WHERE {SPARK_D.fence_pred()}cosine >= {threshold}
         """)
-        write_table(
-            pairs.withColumn("batch_id", F.lit(batch_id)),
-            f"{store_dir}/pairs",
-            partition_by=["batch_id"],
-            mode="overwrite_partitions",
-        )
-        _commit_vectors(new_assigned, store_dir, batch_id)
+        _store.commit_batch(pairs, store_dir, _PAIRS, batch_id)
+        _store.commit_batch(new_assigned, store_dir, _VECTORS, batch_id)
         if stats is not None:
             stats.append({
                 "batch_id": batch_id,
@@ -342,19 +326,7 @@ def compact_ann_store(
     base generation (shared primitive, streaming/store.py); each list's
     base files are sorted by vec_id for parquet row-group skipping.
     Run between drains."""
-    report = {}
-    r = _store.fold_batch_partitions(
-        spark, f"{store_dir}/vectors",
-        secondary="centroid_id", sort_keys=["vec_id"], mode=mode,
-    )
-    if r is not None:
-        report["vectors"] = r
-    r = _store.fold_batch_partitions(
-        spark, f"{store_dir}/pairs", mode=mode
-    )
-    if r is not None:
-        report["pairs"] = r
-    return report
+    return _store.compact(spark, store_dir, _store.ANN, mode)
 
 
 def run_stream_ann_ingest(
@@ -369,28 +341,9 @@ def run_stream_ann_ingest(
     """Drain an embedding stream (vec_id, label, embedding) into the IVF
     vector store (availableNow trigger); with ``neardup`` the near-dup
     handler also emits cosine pairs per micro-batch."""
-    from pyspark.sql.types import (
-        ArrayType, FloatType, IntegerType, LongType, StructField, StructType,
+    _store.drain(
+        stream_embeddings(spark, input_dir), checkpoint_dir,
+        ann_neardup_batch_handler(store_dir, cents_path, params=params)
+        if neardup
+        else ann_ingest_batch_handler(store_dir, cents_path, params),
     )
-
-    schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("label", IntegerType()),
-    ])
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(
-            ann_neardup_batch_handler(store_dir, cents_path, params=params)
-            if neardup
-            else ann_ingest_batch_handler(store_dir, cents_path, params)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

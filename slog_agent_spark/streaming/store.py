@@ -21,23 +21,92 @@ swapped in via two renames; :func:`heal_swapped_dir` recovers the
 window between them (used by every reader of a foldable store). Run
 compaction between drains — never concurrently with the stream.
 
-Used by: the near-dup state store (sigs/bands/pairs,
-streaming/stream.compact_neardup_store), the pipeline events+metrics
-sinks (compact_events_sink), and the streaming ANN vector store
-(streaming/ann_stream.compact_ann_store).
+Every store is declared once, in :data:`STORES`: its tables, each with
+its directory, bucket partition column, bucket count (the hash modulus
+the handler writes with AND the fold's task count) and sort keys. The
+handlers in streaming/stream.py and streaming/ann_stream.py write
+through :func:`commit_batch` and read prior state through
+:func:`read_prior` with the same :class:`Table` their store's
+:func:`compact` folds with. :func:`source` and :func:`drain` are the
+one file-source reader and the one trigger block every stream runs.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass, replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # base partition for compacted generations; real streaming batch_ids
 # are >= 0 so -1 can never collide with a live batch
 BASE_BATCH = -1
+
+
+@dataclass(frozen=True)
+class Table:
+    """One ``batch_id``-partitioned table of a store.
+
+    - ``bucket``: the partition column after ``batch_id`` (a state-store
+      hash bucket, the sink tag, the IVF list), kept through the fold.
+    - ``buckets``: the hash modulus of ``pmod(xxhash64(*key), buckets)``
+      and the fold's task count; None repartitions by the column alone.
+    - ``sort``: sortWithinPartitions keys of the folded generation.
+    """
+
+    name: str
+    bucket: str | None = None
+    buckets: int | None = None
+    key: tuple[str, ...] = ()
+    sort: tuple[str, ...] = ()
+
+    def bucketed(self, df: DataFrame) -> DataFrame:
+        """``df`` plus its hash-bucket column."""
+        return df.withColumn(
+            self.bucket,
+            F.pmod(F.xxhash64(*map(F.col, self.key)), F.lit(self.buckets))
+            .cast("int"),
+        )
+
+
+def _spec(*tables: Table) -> dict[str, Table]:
+    return {t.name: t for t in tables}
+
+
+def _under(prefix: str, spec: dict[str, Table]) -> list[Table]:
+    return [replace(t, name=f"{prefix}/{t.name}") for t in spec.values()]
+
+
+# Partition-level bucket counts: more buckets → finer partition pruning
+# per micro-batch, more directories; compaction bounds file counts
+# regardless.
+_CUT = Table("cut", "doc_bkt", 64, ("doc_id",), ("doc_id",))
+EVENTS = _spec(Table("events", "tag", sort=("conv_id", "turn_idx")),
+               Table("metrics"))
+NEARDUP = _spec(Table("sigs", "doc_bkt", 64, ("doc_id",)),
+                Table("bands", "band_bkt", 64, ("band_key",), ("band_key",)),
+                Table("pairs"))
+DOCDEDUP = _spec(
+    Table("hashes", "hash_bkt", 64, ("content_hash",), ("content_hash",)))
+TRAINING_CUT = _spec(_CUT, Table("totals"), *_under("dedup", DOCDEDUP),
+                     *_under("nd", NEARDUP))
+BOILERPLATE = _spec(
+    Table("freq", "shingle_bkt", 64, ("shingle",), ("shingle",)), _CUT)
+SIMHASH = _spec(
+    Table("sketches", "doc_bkt", 64, ("doc_id",), ("doc_id",)),
+    Table("bands", "band_bkt", 64, ("band_id", "band_key"),
+          ("band_id", "band_key")),
+    Table("pairs", sort=("doc_a", "doc_b")))
+ANN = _spec(Table("vectors", "centroid_id", sort=("vec_id",)),
+            Table("pairs"))
+# every store by its ``<name>-compact`` job mode
+STORES = {
+    "events": EVENTS, "neardup": NEARDUP, "docdedup": DOCDEDUP,
+    "trainingcut": TRAINING_CUT, "boilerplate": BOILERPLATE,
+    "simhash": SIMHASH, "ann": ANN,
+}
 
 
 def heal_swapped_dir(path: str) -> None:
@@ -79,6 +148,117 @@ def count_parquet_files(path: str) -> int:
     )
 
 
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """Heal, then read a store table; None while it does not exist yet
+    (a store's first micro-batch)."""
+    from pyspark.errors import AnalysisException
+
+    heal_swapped_dir(path)
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def read_prior(
+    spark: SparkSession, store_dir: str, table: Table, batch_id: int,
+    keys: DataFrame,
+) -> tuple[DataFrame | None, list]:
+    """The table's rows from other batches, partition-pruned to the
+    buckets that ``keys`` (carrying ``table.bucket``) touches — a read
+    bounded by the batch, not the store. Excluding ``batch_id`` makes a
+    replayed batch see the store exactly as its first attempt did.
+
+    Returns (rows, touched buckets); rows is None when the table does
+    not exist yet — then no bucket is collected — or no bucket is
+    touched."""
+    path = f"{store_dir}/{table.name}"
+    heal_swapped_dir(path)
+    if not os.path.isdir(path):
+        return None, []
+    touched = [r[0] for r in keys.select(table.bucket).distinct().collect()]
+    store = read_table(spark, path) if touched else None
+    if store is None:
+        return None, touched
+    return store.where(
+        (F.col("batch_id").cast("long") != batch_id)
+        & F.col(table.bucket).cast("int").isin(touched)
+    ), touched
+
+
+def commit_batch(
+    df: DataFrame, store_dir: str, table: Table, batch_id: int
+) -> None:
+    """Write one micro-batch's rows of ``table`` as its own
+    ``batch_id`` (plus bucket) partitions with dynamic overwrite, so a
+    replay rewrites exactly them. Bucketed rows are repartitioned one
+    task per bucket value → ONE file per (batch, bucket) dir, not one
+    per (task, bucket)."""
+    from ..sinks.writers import write_table
+
+    parts = ["batch_id"]
+    if table.bucket:
+        df = df.repartition(F.col(table.bucket))
+        parts.append(table.bucket)
+    write_table(
+        df.withColumn("batch_id", F.lit(batch_id)),
+        f"{store_dir}/{table.name}",
+        partition_by=parts,
+        mode="overwrite_partitions",
+    )
+
+
+def source(spark: SparkSession, schema, input_dir: str,
+           files_per_trigger: int) -> DataFrame:
+    """A parquet file-source stream taking ``files_per_trigger`` files
+    per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(input_dir)
+    )
+
+
+def drain(query: DataFrame, checkpoint_dir: str, sink,
+          available_now: bool = True):
+    """Start ``query`` into ``sink`` — a foreachBatch handler, or an
+    output dir for append-mode parquet — resuming from
+    ``checkpoint_dir``. ``available_now`` processes everything present,
+    then returns once the query has terminated; otherwise the query runs
+    continuously (a micro-batch as files land) and is returned running.
+    """
+    w = query.writeStream.option("checkpointLocation", checkpoint_dir)
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    else:
+        w = w.format("parquet").option("path", sink).outputMode("append")
+    if available_now:
+        w = w.trigger(availableNow=True)
+    q = w.start()
+    if available_now:
+        q.awaitTermination()
+    return q
+
+
+def compact(
+    spark: SparkSession, store_dir: str, spec: dict[str, Table],
+    mode: str = "incremental",
+) -> dict:
+    """Fold every table of a store (:func:`fold_batch_partitions`).
+    Returns {table: {rows, files_before, files_after}} for the tables
+    that had committed batches to fold, a nested table's ``/`` spelled
+    ``_``. Run between drains — never concurrently with the stream."""
+    report = {}
+    for t in spec.values():
+        r = fold_batch_partitions(
+            spark, f"{store_dir}/{t.name}", secondary=t.bucket,
+            n_tasks=t.buckets, sort_keys=list(t.sort), mode=mode,
+        )
+        if r is not None:
+            report[t.name.replace("/", "_")] = r
+    return report
+
+
 def _shape(df, secondary, n_tasks, sort_keys):
     if secondary:
         if n_tasks:
@@ -100,7 +280,6 @@ def fold_batch_partitions(
     secondary: str | None = None,
     n_tasks: int | None = None,
     sort_keys: list[str] | None = None,
-    base_batch: int = BASE_BATCH,
     mode: str = "incremental",
 ) -> dict | None:
     """Fold a ``batch_id``-partitioned table's committed batches into a
@@ -122,7 +301,7 @@ def fold_batch_partitions(
       step, then the sources are removed; :func:`heal_swapped_dir`
       completes the removal if the crash lands between the two.
     - ``full``: merge everything except the max live batch into the
-      single base generation (``batch_id = base_batch``) via the
+      single base generation (``batch_id = BASE_BATCH``) via the
       write-new-tree-and-swap protocol — O(store) IO, run rarely (the
       major compaction that also re-sorts old generations together).
 
@@ -136,14 +315,10 @@ def fold_batch_partitions(
       pruning (e.g. the band store sorts by band_key). Each incremental
       generation is sorted individually; the full fold re-sorts all.
     """
-    from pyspark.errors import AnalysisException
-
     if mode not in ("incremental", "full"):
         raise ValueError(f"unknown fold mode: {mode!r}")
-    heal_swapped_dir(path)
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException:
+    df = read_table(spark, path)
+    if df is None:
         return None
     batches = sorted(
         r["b"] for r in df.select(
@@ -161,7 +336,7 @@ def fold_batch_partitions(
         to_fold = [b for b in live if b != keep]
         if not to_fold:
             return None
-        gen = min(min(batches) - 1, base_batch)
+        gen = min(min(batches) - 1, BASE_BATCH)
         folded = _shape(
             df.where(F.col("batch_id").cast("long").isin(to_fold))
             .drop("batch_id"),
@@ -193,7 +368,7 @@ def fold_batch_partitions(
         return None  # single generation: nothing to merge
     folded = _shape(
         df.where(F.col("batch_id").cast("long") != keep).withColumn(
-            "batch_id", F.lit(base_batch).cast("long")
+            "batch_id", F.lit(BASE_BATCH).cast("long")
         ),
         secondary, n_tasks, sort_keys,
     )

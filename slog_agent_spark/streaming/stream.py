@@ -42,11 +42,7 @@ TRANSCRIPT_SCHEMA = StructType(
 
 
 def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
+    return _store.source(spark, TRANSCRIPT_SCHEMA, input_dir, 8)
 
 
 def pipeline_batch_handler(sink_dir: str, with_metrics: bool = False):
@@ -122,16 +118,10 @@ def run_stream_pipeline(
     with_metrics: bool = True,
 ) -> None:
     """Drain all available input through the full pipeline (availableNow)."""
-
-    handle_batch = pipeline_batch_handler(sink_dir, with_metrics=with_metrics)
-    q = (
-        stream_transcripts(spark, input_dir)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _store.drain(
+        stream_transcripts(spark, input_dir), checkpoint_dir,
+        pipeline_batch_handler(sink_dir, with_metrics=with_metrics),
     )
-    q.awaitTermination()
 
 
 CONV_PROGRESS_OUT = StructType(
@@ -279,41 +269,100 @@ DOCUMENT_SCHEMA = StructType(
 
 
 def stream_documents(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
+    return _store.source(spark, DOCUMENT_SCHEMA, input_dir, 4)
+
+
+def _banded_lsh(
+    store_dir: str, spec: dict, batch_id: int, sketch: DataFrame,
+    banded: DataFrame, payload: list[str], prefix: str, verify_sql: str,
+    counting: bool,
+):
+    """The banded-LSH core the MinHash and SimHash handlers share: band
+    lookup → candidates → pruned payload fetch → verify → commit.
+
+    ``sketch`` is the batch's checkpointed (doc_id, *payload, ...) rows,
+    ``banded`` its checkpointed (doc_id, band_id, band_key) rows, and
+    ``spec`` the store's (sketch, bands, pairs) tables, in that order.
+    Registers ``<prefix>_cand`` (doc_a, doc_b) and ``<prefix>_payload``
+    (doc_id, *payload: the batch's rows plus the candidates' stored
+    rows), then commits ``verify_sql``'s pairs, the sketches and the
+    bands. Returns the candidates and {touched: band buckets read,
+    band_rows / payload_rows: store rows read — counted only with
+    ``counting``, else 0}.
+
+    - BAND LOOKUP: the band store is partition-pruned to the buckets the
+      batch's band keys touch, excluding the current batch_id — it
+      consumes ``touched/buckets`` of the store, and after compaction
+      each bucket is few files SORTED by band key, so parquet min/max
+      stats skip row groups within the bucket too (an index lookup, not
+      a scan). New-vs-store catches pairs across batches, new-vs-new
+      pairs within one.
+    - PAYLOAD FETCH: pruned to the CANDIDATE doc_ids — partition-pruned
+      to their doc buckets, then inner-joined to the id set, so the
+      verify join sees |candidates| stored rows, never the corpus (zero
+      when a batch has no cross-batch candidates, at any store size).
+    """
+    spark = sketch.sparkSession
+    sketch_t, band_t, pair_t = spec.values()
+    banded.createOrReplaceTempView(f"{prefix}_new_banded")
+    bucketed = band_t.bucketed(banded)
+    bands, touched = _store.read_prior(
+        spark, store_dir, band_t, batch_id, bucketed
     )
+    n = {"touched": len(touched), "band_rows": 0, "payload_rows": 0}
+    store_band_rows = ""
+    if bands is not None:
+        bands = bands.select("doc_id", "band_id", "band_key")
+        bands.createOrReplaceTempView(f"{prefix}_store_banded")
+        store_band_rows = (
+            "UNION ALL SELECT doc_id, band_id, band_key "
+            f"FROM {prefix}_store_banded"
+        )
+        if counting:
+            n["band_rows"] = bands.count()
+    cand = spark.sql(f"""
+    WITH allb AS (
+      SELECT doc_id, band_id, band_key FROM {prefix}_new_banded
+      {store_band_rows}
+    )
+    SELECT DISTINCT least(n.doc_id, o.doc_id) AS doc_a,
+                    greatest(n.doc_id, o.doc_id) AS doc_b
+    FROM {prefix}_new_banded n
+    JOIN allb o ON n.band_id = o.band_id
+               AND n.band_key = o.band_key
+               AND n.doc_id <> o.doc_id
+    """).localCheckpoint()
+    cand.createOrReplaceTempView(f"{prefix}_cand")
 
+    old_ids = (
+        cand.select(F.col("doc_a").alias("doc_id"))
+        .union(cand.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+        .join(sketch.select("doc_id"), "doc_id", "left_anti")
+    ).localCheckpoint()
+    cols = ["doc_id", *payload]
+    fetched, _ = _store.read_prior(
+        spark, store_dir, sketch_t, batch_id, sketch_t.bucketed(old_ids)
+    )
+    rows = sketch.select(*cols)
+    if fetched is not None:
+        fetched = fetched.join(old_ids, "doc_id").select(*cols)
+        if counting:
+            n["payload_rows"] = fetched.count()
+        rows = rows.union(fetched)
+    rows.createOrReplaceTempView(f"{prefix}_payload")
 
-# store-layout knobs for the incremental near-dup state: partition-level
-# bucket counts. Size to the cluster/corpus (more buckets → finer
-# partition pruning per micro-batch, more directories); compaction keeps
-# file counts bounded regardless.
-NEARDUP_BAND_BUCKETS = 64
-NEARDUP_SIG_BUCKETS = 64
-# base partition for compacted state; real streaming batch_ids are >= 0
-NEARDUP_BASE_BATCH = _store.BASE_BATCH
-
-
-def _band_bucket(buckets: int):
-    return F.pmod(F.xxhash64(F.col("band_key")), F.lit(buckets)).cast("int")
-
-
-def _doc_bucket(buckets: int):
-    return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(buckets)).cast("int")
-
-
-# shared bounded-generation primitive (streaming/store.py); kept under
-# the old private name for the handler's store reads
-_heal_swapped_dir = _store.heal_swapped_dir
+    _store.commit_batch(spark.sql(verify_sql), store_dir, pair_t, batch_id)
+    _store.commit_batch(
+        sketch_t.bucketed(sketch), store_dir, sketch_t, batch_id
+    )
+    _store.commit_batch(bucketed, store_dir, band_t, batch_id)
+    return cand, n
 
 
 def neardup_batch_handler(
     store_dir: str,
     params=None,
-    band_buckets: int = NEARDUP_BAND_BUCKETS,
-    sig_buckets: int = NEARDUP_SIG_BUCKETS,
     stats: list | None = None,
 ):
     """foreachBatch handler for INCREMENTAL MinHash-LSH near-dup — the
@@ -336,45 +385,36 @@ def neardup_batch_handler(
 
     Scale shape (round-4 judge item — per-batch read volume is bounded
     by the BATCH, not the accumulated corpus, and ``stats`` makes that
-    measurable):
-
-    - BAND LOOKUP: the store is laid out by ``band_bkt =
-      hash(band_key) % band_buckets`` (partition column). A micro-batch
-      touches at most ``|new band keys|`` buckets; the store read is
-      partition-pruned to exactly those, so the join consumes
-      ``touched/band_buckets`` of the store, not all of it — and after
-      ``compact_neardup_store`` each bucket is few files SORTED by
-      band_key, so parquet min/max stats skip row groups within the
-      bucket too (an index lookup, not a scan).
-    - SIGNATURE FETCH: pruned to the CANDIDATE doc_ids — the store is
-      laid out by ``doc_bkt = hash(doc_id) % sig_buckets``, the read is
-      partition-pruned to the candidates' buckets and then inner-joined
-      to the candidate id set, so the verify join sees |candidates|
-      stored signatures, never the corpus (zero when a batch has no
-      cross-batch candidates, regardless of store size).
-    - COMPACTION: per-batch partitions sprawl one directory per batch;
-      ``compact_neardup_store`` folds committed batches into a single
-      base partition with bounded file counts (the streaming twin of
-      the reference's bounded queue dirs, ref:
-      buffer/hybridbuffer/bufferer.go:104-132).
+    measurable): the band store is laid out by ``band_bkt =
+    hash(band_key) % 64`` and the signature store by ``doc_bkt =
+    hash(doc_id) % 64`` (``store.NEARDUP``); the lookup and the fetch are
+    the pruned reads of :func:`_banded_lsh`. Per-batch partitions sprawl
+    one directory per batch; ``compact_neardup_store`` folds committed
+    batches into a single base partition with bounded file counts (the
+    streaming twin of the reference's bounded queue dirs, ref:
+    buffer/hybridbuffer/bufferer.go:104-132).
 
     ``stats``, when provided, receives one dict per batch with the
     pruned read/fetch row counts the bounded-read test asserts on.
     """
     from ..functions.dialect import SPARK as SPARK_D
-    from ..operators import dedup
+    from ..operators import dedup, shingle_batch
     from ..plans.corpus_config import DEFAULT_CORPUS_PARAMS
-    from ..sinks.writers import write_table
 
     params = params or DEFAULT_CORPUS_PARAMS
+    jac = dedup.jaccard_expr(SPARK_D, "a.shingle_set", "b.shingle_set")
+    verify = f"""
+    SELECT doc_a, doc_b, jaccard FROM (
+      SELECT c.doc_a, c.doc_b, {jac} AS jaccard{SPARK_D.fence_field()}
+      FROM nd_cand c
+      JOIN nd_payload a ON a.doc_id = c.doc_a
+      JOIN nd_payload b ON b.doc_id = c.doc_b
+    ) WHERE {SPARK_D.fence_pred()}jaccard >= {params.jaccard_threshold}
+    """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         batch_df.createOrReplaceTempView("nd_batch_docs")
-        from ..operators import shingle_batch
-
         new_sigs = shingle_batch.minhash_signatures_df(
             spark, "nd_batch_docs", params
         ).localCheckpoint()
@@ -382,143 +422,25 @@ def neardup_batch_handler(
         new_banded = spark.sql(
             dedup.banded_rows_sql(SPARK_D, "nd_new_sigs", params)
         ).localCheckpoint()
-        new_banded.createOrReplaceTempView("nd_new_banded")
-
-        def read_store(table: str):
-            path = f"{store_dir}/{table}"
-            _heal_swapped_dir(path)
-            try:
-                return spark.read.parquet(path)
-            except AnalysisException:
-                return None  # store not created yet (first batch)
-
-        # ---- band lookup: partition-pruned to the buckets this batch
-        # touches; excludes a failed prior attempt of THIS batch --------
-        touched = [
-            r["b"]
-            for r in new_banded.select(
-                _band_bucket(band_buckets).alias("b")
-            ).distinct().collect()
-        ]
-        bands_store = read_store("bands")
-        has_bands = bands_store is not None
-        n_band_scan = 0
-        if has_bands:
-            pruned_bands = bands_store.where(
-                (F.col("batch_id").cast("long") != batch_id)
-                & F.col("band_bkt").cast("int").isin(touched)
-            ).select("doc_id", "band_id", "band_key")
-            pruned_bands.createOrReplaceTempView("nd_store_banded")
-            if stats is not None:
-                n_band_scan = pruned_bands.count()
-
-        store_band_rows = (
-            "UNION ALL SELECT doc_id, band_id, band_key FROM nd_store_banded"
-            if has_bands
-            else ""
-        )
-        cand = spark.sql(f"""
-        WITH allb AS (
-          SELECT doc_id, band_id, band_key FROM nd_new_banded
-          {store_band_rows}
-        )
-        SELECT DISTINCT least(n.doc_id, o.doc_id) AS doc_a,
-                        greatest(n.doc_id, o.doc_id) AS doc_b
-        FROM nd_new_banded n
-        JOIN allb o ON n.band_id = o.band_id
-                   AND n.band_key = o.band_key
-                   AND n.doc_id <> o.doc_id
-        """).localCheckpoint()
-        cand.createOrReplaceTempView("nd_cand")
-
-        # ---- signature fetch: pruned to candidate doc_ids -------------
-        old_ids = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .union(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-            .join(new_sigs.select("doc_id"), "doc_id", "left_anti")
-        ).localCheckpoint()
-        doc_bkts = [
-            r["b"]
-            for r in old_ids.select(
-                _doc_bucket(sig_buckets).alias("b")
-            ).distinct().collect()
-        ]
-        sigs_store = read_store("sigs") if doc_bkts else None
-        n_sig_fetch = 0
-        if sigs_store is not None:
-            fetched = (
-                sigs_store.where(
-                    (F.col("batch_id").cast("long") != batch_id)
-                    & F.col("doc_bkt").cast("int").isin(doc_bkts)
-                )
-                .join(old_ids, "doc_id")
-                .select("doc_id", "shingle_set")
-            )
-            fetched.createOrReplaceTempView("nd_store_sigs_needed")
-            store_sig_rows = (
-                "UNION ALL SELECT doc_id, shingle_set FROM nd_store_sigs_needed"
-            )
-            if stats is not None:
-                n_sig_fetch = fetched.count()
-        else:
-            store_sig_rows = ""
-
-        jac = dedup.jaccard_expr(SPARK_D, "a.shingle_set", "b.shingle_set")
-        pairs = spark.sql(f"""
-        WITH sigs_all AS (
-          SELECT doc_id, shingle_set FROM nd_new_sigs
-          {store_sig_rows}
-        )
-        SELECT doc_a, doc_b, jaccard FROM (
-          SELECT c.doc_a, c.doc_b, {jac} AS jaccard{SPARK_D.fence_field()}
-          FROM nd_cand c
-          JOIN sigs_all a ON a.doc_id = c.doc_a
-          JOIN sigs_all b ON b.doc_id = c.doc_b
-        ) WHERE {SPARK_D.fence_pred()}jaccard >= {params.jaccard_threshold}
-        """)
-
-        def commit(df: DataFrame, path: str, extra_parts=()) -> None:
-            if extra_parts:
-                # one task per bucket value → ONE file per (batch,
-                # bucket) dir, not one per (task, bucket); without this
-                # a wide batch writes tasks x buckets small files
-                df = df.repartition(*[F.col(c) for c in extra_parts])
-            write_table(
-                df.withColumn("batch_id", F.lit(batch_id)),
-                path,
-                partition_by=["batch_id", *extra_parts],
-                mode="overwrite_partitions",
-            )
-
-        commit(pairs, f"{store_dir}/pairs")
-        commit(
-            new_sigs.withColumn("doc_bkt", _doc_bucket(sig_buckets)),
-            f"{store_dir}/sigs", ("doc_bkt",),
-        )
-        commit(
-            new_banded.withColumn("band_bkt", _band_bucket(band_buckets)),
-            f"{store_dir}/bands", ("band_bkt",),
+        cand, n = _banded_lsh(
+            store_dir, _store.NEARDUP, batch_id, new_sigs, new_banded,
+            ["shingle_set"], "nd", verify, stats is not None,
         )
         if stats is not None:
             stats.append({
                 "batch_id": batch_id,
                 "n_new_docs": new_sigs.count(),
                 "n_cand": cand.count(),
-                "store_band_rows_scanned": n_band_scan,
-                "store_sig_rows_fetched": n_sig_fetch,
-                "touched_band_buckets": len(touched),
+                "store_band_rows_scanned": n["band_rows"],
+                "store_sig_rows_fetched": n["payload_rows"],
+                "touched_band_buckets": n["touched"],
             })
 
     return handle
 
 
 def compact_neardup_store(
-    spark: SparkSession,
-    store_dir: str,
-    band_buckets: int = NEARDUP_BAND_BUCKETS,
-    sig_buckets: int = NEARDUP_SIG_BUCKETS,
-    mode: str = "incremental",
+    spark: SparkSession, store_dir: str, mode: str = "incremental"
 ) -> dict:
     """Fold the near-dup store's committed per-batch partitions into one
     base partition (``batch_id=-1``) with bounded file counts — the
@@ -534,27 +456,12 @@ def compact_neardup_store(
     - Bands are repartitioned one-task-per-bucket and SORTED by
       band_key inside each bucket, so post-compaction lookups skip row
       groups via parquet min/max stats on top of partition pruning.
-    - Crash-safe: the new generation is written to ``<table>_tmp``,
-      then swapped via two renames; ``_heal_swapped_dir`` (used by the
-      handler's reads and by this function) recovers the window between
-      them. Run between drains — never concurrently with the stream.
+    - Crash-safe: streaming/store.fold_batch_partitions. Run between
+      drains — never concurrently with the stream.
 
     Returns per-table (rows, files_before, files_after).
     """
-    report = {}
-    for table, bucket_col, nbkts, sort_keys in (
-        ("sigs", "doc_bkt", sig_buckets, None),
-        ("bands", "band_bkt", band_buckets, ["band_key"]),
-        ("pairs", None, 1, None),
-    ):
-        r = _store.fold_batch_partitions(
-            spark, f"{store_dir}/{table}",
-            secondary=bucket_col, n_tasks=nbkts, sort_keys=sort_keys,
-            mode=mode,
-        )
-        if r is not None:
-            report[table] = r
-    return report
+    return _store.compact(spark, store_dir, _store.NEARDUP, mode)
 
 
 def compact_events_sink(
@@ -578,19 +485,7 @@ def compact_events_sink(
 
     Run between drains — never concurrently with the stream.
     """
-    report = {}
-    r = _store.fold_batch_partitions(
-        spark, f"{sink_dir}/events",
-        secondary="tag", sort_keys=["conv_id", "turn_idx"], mode=mode,
-    )
-    if r is not None:
-        report["events"] = r
-    r = _store.fold_batch_partitions(
-        spark, f"{sink_dir}/metrics", mode=mode
-    )
-    if r is not None:
-        report["metrics"] = r
-    return report
+    return _store.compact(spark, sink_dir, _store.EVENTS, mode)
 
 
 def run_stream_neardup(
@@ -604,23 +499,15 @@ def run_stream_neardup(
     (``neardup_batch_handler``); the pair store at
     ``<store>/pairs`` accumulates every near-duplicate pair exactly
     once."""
-    q = (
-        stream_documents(spark, input_dir)
-        .writeStream.foreachBatch(neardup_batch_handler(store_dir, params))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _store.drain(
+        stream_documents(spark, input_dir), checkpoint_dir,
+        neardup_batch_handler(store_dir, params),
     )
-    q.awaitTermination()
 
 
 # -- streaming exact document dedup -------------------------------------------
-DOCDEDUP_HASH_BUCKETS = 64
-
-
 def docdedup_batch_handler(
     store_dir: str,
-    hash_buckets: int = DOCDEDUP_HASH_BUCKETS,
     stats: list | None = None,
 ):
     """foreachBatch handler for INCREMENTAL exact dedup over a document
@@ -651,63 +538,34 @@ def docdedup_batch_handler(
     the identical partition content.
     """
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
+    table = _store.DOCDEDUP["hashes"]
 
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        winners = (
-            batch_df.groupBy(F.md5("text").alias("content_hash"))
-            .agg(
+        winners = table.bucketed(
+            batch_df.groupBy(F.md5("text").alias("content_hash")).agg(
                 F.min("doc_id").alias("keep_doc_id"),
                 F.count("*").alias("cnt"),
             )
-            .withColumn(
-                "hash_bkt",
-                F.pmod(F.xxhash64(F.col("content_hash")), F.lit(hash_buckets))
-                .cast("int"),
-            )
         ).localCheckpoint()
-
-        path = f"{store_dir}/hashes"
-        _heal_swapped_dir(path)
-        try:
-            store = spark.read.parquet(path)
-        except AnalysisException:
-            store = None
+        seen, _ = _store.read_prior(spark, store_dir, table, batch_id, winners)
         n_scanned = 0
-        if store is not None:
-            touched = [
-                r["hash_bkt"]
-                for r in winners.select("hash_bkt").distinct().collect()
-            ]
+        fresh = winners
+        if seen is not None:
             seen = (
-                store.where(
-                    (F.col("batch_id").cast("long") != batch_id)
-                    & F.col("hash_bkt").cast("int").isin(touched)
-                )
-                .select("content_hash")
+                seen.select("content_hash")
                 .join(winners.select("content_hash"), "content_hash")
                 .distinct()
             ).localCheckpoint()
             if stats is not None:
                 n_scanned = seen.count()
             fresh = winners.join(seen, "content_hash", "left_anti")
-        else:
-            fresh = winners
         out = winners.join(
             fresh.select("content_hash").withColumn("is_first", F.lit(True)),
             "content_hash",
             "left",
         ).withColumn("is_first", F.coalesce(F.col("is_first"), F.lit(False)))
-        from ..sinks.writers import write_table
-
-        write_table(
-            out.repartition(F.col("hash_bkt"))
-            .withColumn("batch_id", F.lit(batch_id)),
-            path,
-            partition_by=["batch_id", "hash_bkt"],
-            mode="overwrite_partitions",
-        )
+        _store.commit_batch(out, store_dir, table, batch_id)
         if stats is not None:
             stats.append({
                 "batch_id": batch_id,
@@ -737,22 +595,12 @@ def docdedup_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 def compact_docdedup_store(
-    spark: SparkSession, store_dir: str,
-    hash_buckets: int = DOCDEDUP_HASH_BUCKETS,
-    mode: str = "incremental",
+    spark: SparkSession, store_dir: str, mode: str = "incremental"
 ) -> dict:
     """Bounded-generation fold for the dedup hash store (shared
     primitive, streaming/store.py); base buckets sort by content_hash
     for row-group skipping on the seen-check. Run between drains."""
-    report = {}
-    r = _store.fold_batch_partitions(
-        spark, f"{store_dir}/hashes",
-        secondary="hash_bkt", n_tasks=hash_buckets,
-        sort_keys=["content_hash"], mode=mode,
-    )
-    if r is not None:
-        report["hashes"] = r
-    return report
+    return _store.compact(spark, store_dir, _store.DOCDEDUP, mode)
 
 
 def run_stream_docdedup(
@@ -763,14 +611,10 @@ def run_stream_docdedup(
 ) -> None:
     """Drain a document stream (doc_id, text) through incremental exact
     dedup (availableNow trigger)."""
-    q = (
-        stream_documents(spark, input_dir)
-        .writeStream.foreachBatch(docdedup_batch_handler(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _store.drain(
+        stream_documents(spark, input_dir), checkpoint_dir,
+        docdedup_batch_handler(store_dir),
     )
-    q.awaitTermination()
 
 
 def run_stream_wire_sink(
@@ -800,15 +644,10 @@ def run_stream_wire_sink(
     cleaned by the writer. (Round-3 judge finding: time-based IDs +
     makedirs(exist_ok) accumulated a second uniquely-named chunk set on
     replay.)"""
-    handle_batch = wire_batch_handler(sink_dir, max_records, salts, wire_format)
-    q = (
-        stream_transcripts(spark, input_dir)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _store.drain(
+        stream_transcripts(spark, input_dir), checkpoint_dir,
+        wire_batch_handler(sink_dir, max_records, salts, wire_format),
     )
-    q.awaitTermination()
 
 
 def wire_batch_handler(
@@ -857,16 +696,11 @@ DOCUMENT_MIX_SCHEMA = StructType(
         StructField("lang", StringType()),
     ]
 )
-TRAINING_CUT_DOC_BUCKETS = 64
 
 
 def stream_documents_mix(spark: SparkSession, input_dir: str) -> DataFrame:
     """Document stream carrying ``lang`` (the mix-sampling stratum)."""
-    return (
-        spark.readStream.schema(DOCUMENT_MIX_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
+    return _store.source(spark, DOCUMENT_MIX_SCHEMA, input_dir, 4)
 
 
 def training_cut_batch_handler(
@@ -910,9 +744,9 @@ def training_cut_batch_handler(
     from ..functions.dialect import SPARK as SPARK_D
     from ..operators import textops
     from ..plans.corpus_config import DEFAULT_CORPUS_PARAMS
-    from ..sinks.writers import write_table
 
     params = params or DEFAULT_CORPUS_PARAMS
+    spec = _store.TRAINING_CUT
     dedup_handle = docdedup_batch_handler(f"{store_dir}/dedup")
     nd_handle = neardup_batch_handler(f"{store_dir}/nd", params=params)
 
@@ -957,17 +791,12 @@ def training_cut_batch_handler(
         docs.select("doc_id").createOrReplaceTempView("tc_batch_ids")
 
         # running selected-token total from prior batches (tiny table)
-        totals_path = f"{store_dir}/totals"
-        _heal_swapped_dir(totals_path)
-        try:
-            prior = (
-                spark.read.parquet(totals_path)
-                .where(F.col("batch_id").cast("long") != batch_id)
-                .agg(F.coalesce(F.sum("selected_tokens"), F.lit(0)))
-                .first()[0]
-            )
-        except AnalysisException:
-            prior = 0
+        totals = _store.read_table(spark, f"{store_dir}/totals")
+        prior = 0 if totals is None else (
+            totals.where(F.col("batch_id").cast("long") != batch_id)
+            .agg(F.coalesce(F.sum("selected_tokens"), F.lit(0)))
+            .first()[0]
+        )
 
         q = textops.quality_items(SPARK_D)
         t = textops.token_count_items(SPARK_D)
@@ -1041,23 +870,14 @@ def training_cut_batch_handler(
             .agg(F.coalesce(F.sum("n_tokens"), F.lit(0)))
             .first()[0]
         )
-        write_table(
-            cut.withColumn(
-                "doc_bkt", _doc_bucket(TRAINING_CUT_DOC_BUCKETS)
-            )
-            .repartition(F.col("doc_bkt"))
-            .withColumn("batch_id", F.lit(batch_id)),
-            f"{store_dir}/cut",
-            partition_by=["batch_id", "doc_bkt"],
-            mode="overwrite_partitions",
+        _store.commit_batch(
+            spec["cut"].bucketed(cut), store_dir, spec["cut"], batch_id
         )
-        write_table(
+        _store.commit_batch(
             spark.createDataFrame(
                 [(int(batch_tokens),)], "selected_tokens BIGINT"
-            ).withColumn("batch_id", F.lit(batch_id)),
-            totals_path,
-            partition_by=["batch_id"],
-            mode="overwrite_partitions",
+            ),
+            store_dir, spec["totals"], batch_id,
         )
         if stats is not None:
             stats.append({
@@ -1090,26 +910,7 @@ def compact_training_cut_store(
 ) -> dict:
     """Fold the cut/totals tables plus the delegated dedup and near-dup
     stores — one call bounds every table this handler grows."""
-    report = {}
-    r = _store.fold_batch_partitions(
-        spark, f"{store_dir}/cut",
-        secondary="doc_bkt", n_tasks=TRAINING_CUT_DOC_BUCKETS,
-        sort_keys=["doc_id"], mode=mode,
-    )
-    if r is not None:
-        report["cut"] = r
-    r = _store.fold_batch_partitions(spark, f"{store_dir}/totals", mode=mode)
-    if r is not None:
-        report["totals"] = r
-    for name, rep in compact_docdedup_store(
-        spark, f"{store_dir}/dedup", mode=mode
-    ).items():
-        report[f"dedup_{name}"] = rep
-    for name, rep in compact_neardup_store(
-        spark, f"{store_dir}/nd", mode=mode
-    ).items():
-        report[f"nd_{name}"] = rep
-    return report
+    return _store.compact(spark, store_dir, _store.TRAINING_CUT, mode)
 
 
 def run_stream_training_cut(
@@ -1121,16 +922,10 @@ def run_stream_training_cut(
 ) -> None:
     """Drain a document stream (doc_id, text, lang) through the
     incremental training cut (availableNow trigger)."""
-    q = (
-        stream_documents_mix(spark, input_dir)
-        .writeStream.foreachBatch(
-            training_cut_batch_handler(store_dir, params=params)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _store.drain(
+        stream_documents_mix(spark, input_dir), checkpoint_dir,
+        training_cut_batch_handler(store_dir, params=params),
     )
-    q.awaitTermination()
 
 
 # -- streaming window attribution: native stream-stream interval join ---------
@@ -1146,11 +941,7 @@ EVENT_SCHEMA = StructType(
 
 
 def stream_events(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
-    )
+    return _store.source(spark, EVENT_SCHEMA, input_dir, 4)
 
 
 def attrib_stream(
@@ -1240,23 +1031,14 @@ def run_stream_attrib(
     inputs ordered within ``late_sec`` of event time (see
     attrib_stream's lateness caveat); size it to the input's actual
     disorder."""
-    q = (
+    _store.drain(
         attrib_stream(stream_events(spark, input_dir),
-                      horizon_sec=horizon_sec, late_sec=late_sec)
-        .writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+                      horizon_sec=horizon_sec, late_sec=late_sec),
+        checkpoint_dir, output_dir,
     )
-    q.awaitTermination()
 
 
 # -- streaming boilerplate: incremental shingle document-frequency store ------
-BOILERPLATE_SHINGLE_BUCKETS = 64
-
-
 def boilerplate_batch_handler(
     store_dir: str,
     min_docs: int | None = None,
@@ -1288,13 +1070,11 @@ def boilerplate_batch_handler(
     """
     from ..functions.dialect import SPARK as SPARK_D
     from ..operators import textops
-    from ..sinks.writers import write_table
 
     min_docs = textops.BOILERPLATE_MIN_DOCS if min_docs is None else min_docs
+    freq_t, cut_t = _store.BOILERPLATE["freq"], _store.BOILERPLATE["cut"]
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         docs = batch_df.select("doc_id", "text").localCheckpoint()
         docs.createOrReplaceTempView("bl_batch_docs")
@@ -1303,44 +1083,23 @@ def boilerplate_batch_handler(
         ).localCheckpoint()
         post.createOrReplaceTempView("bl_batch_post")
 
-        batch_freq = (
+        batch_freq = freq_t.bucketed(
             post.groupBy("shingle")
             .agg(F.countDistinct("doc_id").alias("n_docs"))
-            .withColumn(
-                "shingle_bkt",
-                F.pmod(F.xxhash64(F.col("shingle")),
-                       F.lit(BOILERPLATE_SHINGLE_BUCKETS)).cast("int"),
-            )
         ).localCheckpoint()
-
-        freq_path = f"{store_dir}/freq"
-        _heal_swapped_dir(freq_path)
+        prior, _ = _store.read_prior(
+            spark, store_dir, freq_t, batch_id, batch_freq
+        )
         n_scanned = 0
-        try:
-            store = spark.read.parquet(freq_path)
-        except AnalysisException:
-            store = None
-        if store is not None:
-            touched = [
-                r["shingle_bkt"]
-                for r in batch_freq.select("shingle_bkt").distinct().collect()
-            ]
+        total = batch_freq.select("shingle", "n_docs")
+        if prior is not None:
             prior = (
-                store.where(
-                    (F.col("batch_id").cast("long") != batch_id)
-                    & F.col("shingle_bkt").cast("int").isin(touched)
-                )
-                .join(batch_freq.select("shingle"), "shingle")
+                prior.join(batch_freq.select("shingle"), "shingle")
                 .groupBy("shingle")
                 .agg(F.sum("n_docs").alias("prior_docs"))
             ).localCheckpoint()
             if stats is not None:
                 n_scanned = prior.count()
-        else:
-            prior = None
-
-        total = batch_freq.select("shingle", "n_docs")
-        if prior is not None:
             total = (
                 total.join(prior, "shingle", "left")
                 .select(
@@ -1361,23 +1120,10 @@ def boilerplate_batch_handler(
                 SPARK_D, "bl_batch_docs", "bl_batch_post", "bl_common"
             )
         )
-        write_table(
-            verdict.withColumn(
-                "doc_bkt", _doc_bucket(TRAINING_CUT_DOC_BUCKETS)
-            )
-            .repartition(F.col("doc_bkt"))
-            .withColumn("batch_id", F.lit(batch_id)),
-            f"{store_dir}/cut",
-            partition_by=["batch_id", "doc_bkt"],
-            mode="overwrite_partitions",
+        _store.commit_batch(
+            cut_t.bucketed(verdict), store_dir, cut_t, batch_id
         )
-        write_table(
-            batch_freq.repartition(F.col("shingle_bkt"))
-            .withColumn("batch_id", F.lit(batch_id)),
-            freq_path,
-            partition_by=["batch_id", "shingle_bkt"],
-            mode="overwrite_partitions",
-        )
+        _store.commit_batch(batch_freq, store_dir, freq_t, batch_id)
         if stats is not None:
             stats.append({
                 "batch_id": batch_id,
@@ -1405,22 +1151,7 @@ def boilerplate_freq_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
 def compact_boilerplate_store(
     spark: SparkSession, store_dir: str, mode: str = "incremental",
 ) -> dict:
-    report = {}
-    r = _store.fold_batch_partitions(
-        spark, f"{store_dir}/freq",
-        secondary="shingle_bkt", n_tasks=BOILERPLATE_SHINGLE_BUCKETS,
-        sort_keys=["shingle"], mode=mode,
-    )
-    if r is not None:
-        report["freq"] = r
-    r = _store.fold_batch_partitions(
-        spark, f"{store_dir}/cut",
-        secondary="doc_bkt", n_tasks=TRAINING_CUT_DOC_BUCKETS,
-        sort_keys=["doc_id"], mode=mode,
-    )
-    if r is not None:
-        report["cut"] = r
-    return report
+    return _store.compact(spark, store_dir, _store.BOILERPLATE, mode)
 
 
 def run_stream_boilerplate(
@@ -1431,194 +1162,72 @@ def run_stream_boilerplate(
 ) -> None:
     """Drain a document stream through incremental boilerplate detection
     (availableNow trigger)."""
-    q = (
-        stream_documents(spark, input_dir)
-        .writeStream.foreachBatch(boilerplate_batch_handler(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _store.drain(
+        stream_documents(spark, input_dir), checkpoint_dir,
+        boilerplate_batch_handler(store_dir),
     )
-    q.awaitTermination()
 
 
 # -- incremental SimHash near-dup ----------------------------------------------
-SIMHASH_BAND_BUCKETS = 64
-SIMHASH_DOC_BUCKETS = 64
-
-
-def simhash_batch_handler(
-    store_dir: str,
-    k: int | None = None,
-    stats: list | None = None,
-):
+def simhash_batch_handler(store_dir: str, stats: list | None = None):
     """foreachBatch handler for INCREMENTAL banded-Hamming SimHash
     near-dup — the streaming twin of the batch ``dedup_simhash_neardup``
     query, completing the dedup family's incremental matrix (exact,
     MinHash-LSH, embedding-cosine, SimHash).
 
-    Same store discipline as the MinHash handler: each batch sketches
-    its documents once, joins its band rows against the band store
-    (partition-pruned to the buckets the batch touches, excluding the
-    current batch_id), verifies candidates by Hamming distance over the
-    stored SKETCHES (pruned to the candidates' doc buckets — SimHash
-    needs no shingle sets at verify time, so the fetch is a few ints
-    per candidate), and appends (sketches, bands, pairs) partitioned by
-    batch_id with dynamic overwrite. Invariant (tested): the drained
-    pair union equals the batch pair set — each unordered pair exactly
-    once, in its later document's batch.
+    Same store discipline as the MinHash handler (:func:`_banded_lsh`):
+    each batch sketches its documents once, joins its band rows against
+    the band store (partition-pruned to the buckets the batch touches,
+    excluding the current batch_id), verifies candidates by Hamming
+    distance over the stored SKETCHES (pruned to the candidates' doc
+    buckets — SimHash needs no shingle sets at verify time, so the
+    fetch is a few ints per candidate), and appends (sketches, bands,
+    pairs) partitioned by batch_id with dynamic overwrite. Invariant
+    (tested): the drained pair union equals the batch pair set — each
+    unordered pair exactly once, in its later document's batch.
     """
     from ..functions.dialect import SPARK as SPARK_D
-    from ..operators import dedup
-    from ..sinks.writers import write_table
+    from ..operators import dedup, shingle_batch
 
-    k = dedup.SIMHASH_HAMMING_K if k is None else k
-    bands = dedup.SIMHASH_BANDS
-    band_names = [f"sb{b}" for b in range(bands)]
+    band_names = [f"sb{b}" for b in range(dedup.SIMHASH_BANDS)]
+    band_rows = " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band_key, '{b}' AS band_id FROM sh_new_sk"
+        for b in band_names
+    )
+    hamming = " + ".join(
+        SPARK_D.bit_count(SPARK_D.xor(f"a.{b}", f"b.{b}"))
+        for b in band_names
+    )
+    verify = f"""
+    SELECT doc_a, doc_b, hamming FROM (
+      SELECT c.doc_a, c.doc_b,
+             CAST(({hamming}) AS INT) AS hamming{SPARK_D.fence_field()}
+      FROM sh_cand c
+      JOIN sh_payload a ON a.doc_id = c.doc_a
+      JOIN sh_payload b ON b.doc_id = c.doc_b
+    ) scored WHERE {SPARK_D.fence_pred()}hamming <= {dedup.SIMHASH_HAMMING_K}
+    """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         batch_df.select("doc_id", "text").createOrReplaceTempView(
             "sh_batch_docs"
         )
-        from ..operators import shingle_batch
-
         new_sk = shingle_batch.simhash_sketches_df(
             spark, "sh_batch_docs"
         ).localCheckpoint()
         new_sk.createOrReplaceTempView("sh_new_sk")
-        band_rows = " UNION ALL ".join(
-            f"SELECT doc_id, {b} AS band_key, '{b}' AS band_id "
-            "FROM sh_new_sk"
-            for b in band_names
-        )
         new_banded = spark.sql(band_rows).localCheckpoint()
-        new_banded.createOrReplaceTempView("sh_new_banded")
-
-        def read_store(table: str):
-            path = f"{store_dir}/{table}"
-            _heal_swapped_dir(path)
-            try:
-                return spark.read.parquet(path)
-            except AnalysisException:
-                return None
-
-        band_bkt = F.pmod(
-            F.xxhash64(F.col("band_id"), F.col("band_key")),
-            F.lit(SIMHASH_BAND_BUCKETS),
-        ).cast("int")
-        touched = [
-            r["b"]
-            for r in new_banded.select(band_bkt.alias("b"))
-            .distinct().collect()
-        ]
-        bands_store = read_store("bands")
-        n_band_scan = 0
-        if bands_store is not None:
-            pruned = bands_store.where(
-                (F.col("batch_id").cast("long") != batch_id)
-                & F.col("band_bkt").cast("int").isin(touched)
-            ).select("doc_id", "band_key", "band_id")
-            pruned.createOrReplaceTempView("sh_store_banded")
-            store_rows = (
-                "UNION ALL SELECT doc_id, band_key, band_id "
-                "FROM sh_store_banded"
-            )
-            if stats is not None:
-                n_band_scan = pruned.count()
-        else:
-            store_rows = ""
-        cand = spark.sql(f"""
-        WITH allb AS (
-          SELECT doc_id, band_key, band_id FROM sh_new_banded
-          {store_rows}
-        )
-        SELECT DISTINCT least(n.doc_id, o.doc_id) AS doc_a,
-                        greatest(n.doc_id, o.doc_id) AS doc_b
-        FROM sh_new_banded n
-        JOIN allb o ON n.band_id = o.band_id
-                   AND n.band_key = o.band_key
-                   AND n.doc_id <> o.doc_id
-        """).localCheckpoint()
-        cand.createOrReplaceTempView("sh_cand")
-
-        old_ids = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .union(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-            .join(new_sk.select("doc_id"), "doc_id", "left_anti")
-        ).localCheckpoint()
-        doc_bkts = [
-            r["b"]
-            for r in old_ids.select(
-                _doc_bucket(SIMHASH_DOC_BUCKETS).alias("b")
-            ).distinct().collect()
-        ]
-        sk_store = read_store("sketches") if doc_bkts else None
-        n_sk_fetch = 0
-        if sk_store is not None:
-            fetched = (
-                sk_store.where(
-                    (F.col("batch_id").cast("long") != batch_id)
-                    & F.col("doc_bkt").cast("int").isin(doc_bkts)
-                )
-                .join(old_ids, "doc_id")
-                .select("doc_id", *band_names)
-            )
-            fetched.createOrReplaceTempView("sh_store_sk_needed")
-            store_sk_rows = (
-                f"UNION ALL SELECT doc_id, {', '.join(band_names)} "
-                "FROM sh_store_sk_needed"
-            )
-            if stats is not None:
-                n_sk_fetch = fetched.count()
-        else:
-            store_sk_rows = ""
-
-        hamming = " + ".join(
-            SPARK_D.bit_count(SPARK_D.xor(f"a.{b}", f"b.{b}"))
-            for b in band_names
-        )
-        pairs = spark.sql(f"""
-        WITH sk_all AS (
-          SELECT doc_id, {', '.join(band_names)} FROM sh_new_sk
-          {store_sk_rows}
-        )
-        SELECT doc_a, doc_b, hamming FROM (
-          SELECT c.doc_a, c.doc_b,
-                 CAST(({hamming}) AS INT) AS hamming{SPARK_D.fence_field()}
-          FROM sh_cand c
-          JOIN sk_all a ON a.doc_id = c.doc_a
-          JOIN sk_all b ON b.doc_id = c.doc_b
-        ) scored WHERE {SPARK_D.fence_pred()}hamming <= {k}
-        """)
-
-        def commit(df: DataFrame, path: str, extra_parts=()) -> None:
-            if extra_parts:
-                df = df.repartition(*[F.col(c) for c in extra_parts])
-            write_table(
-                df.withColumn("batch_id", F.lit(batch_id)),
-                path,
-                partition_by=["batch_id", *extra_parts],
-                mode="overwrite_partitions",
-            )
-
-        commit(pairs, f"{store_dir}/pairs")
-        commit(
-            new_sk.withColumn("doc_bkt", _doc_bucket(SIMHASH_DOC_BUCKETS)),
-            f"{store_dir}/sketches", ("doc_bkt",),
-        )
-        commit(
-            new_banded.withColumn("band_bkt", band_bkt),
-            f"{store_dir}/bands", ("band_bkt",),
+        _, n = _banded_lsh(
+            store_dir, _store.SIMHASH, batch_id, new_sk, new_banded,
+            band_names, "sh", verify, stats is not None,
         )
         if stats is not None:
             stats.append({
                 "batch_id": batch_id,
                 "n_new_docs": new_sk.count(),
-                "store_band_rows_scanned": n_band_scan,
-                "store_sketch_rows_fetched": n_sk_fetch,
+                "store_band_rows_scanned": n["band_rows"],
+                "store_sketch_rows_fetched": n["payload_rows"],
             })
 
     return handle
@@ -1627,19 +1236,7 @@ def simhash_batch_handler(
 def compact_simhash_store(
     spark: SparkSession, store_dir: str, mode: str = "incremental",
 ) -> dict:
-    report = {}
-    for table, secondary, n_tasks, sort in (
-        ("sketches", "doc_bkt", SIMHASH_DOC_BUCKETS, ["doc_id"]),
-        ("bands", "band_bkt", SIMHASH_BAND_BUCKETS, ["band_id", "band_key"]),
-        ("pairs", None, None, ["doc_a", "doc_b"]),
-    ):
-        r = _store.fold_batch_partitions(
-            spark, f"{store_dir}/{table}",
-            secondary=secondary, n_tasks=n_tasks, sort_keys=sort, mode=mode,
-        )
-        if r is not None:
-            report[table] = r
-    return report
+    return _store.compact(spark, store_dir, _store.SIMHASH, mode)
 
 
 def run_stream_simhash(
@@ -1650,11 +1247,7 @@ def run_stream_simhash(
 ) -> None:
     """Drain a document stream through incremental SimHash near-dup
     (availableNow trigger)."""
-    q = (
-        stream_documents(spark, input_dir)
-        .writeStream.foreachBatch(simhash_batch_handler(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _store.drain(
+        stream_documents(spark, input_dir), checkpoint_dir,
+        simhash_batch_handler(store_dir),
     )
-    q.awaitTermination()

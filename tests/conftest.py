@@ -61,3 +61,13 @@ def assert_df_equals_oracle(spark_df, duck_con, oracle_sql, sort_cols=None):
     assert len(s_rows) == len(d_rows), f"row count {len(s_rows)} vs {len(d_rows)}"
     for i, (a, b) in enumerate(zip(s_rows, d_rows)):
         assert a == b, f"row {i} differs:\n spark: {a}\n  duck: {b}"
+
+
+def store_tables(store: str) -> set[str]:
+    """The batch-partitioned tables under a drained store dir, named as
+    compaction reports them (a nested table's ``/`` spelled ``_``)."""
+    return {
+        os.path.relpath(root, store).replace(os.sep, "_")
+        for root, dirs, _ in os.walk(store)
+        if any(d.startswith("batch_id=") for d in dirs)
+    }

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import tempfile
 
+from conftest import store_tables
 from pyspark.sql import functions as F
 
 from slog_agent_spark.plans import corpus as C
@@ -54,6 +55,7 @@ def test_streamed_store_equals_batch_ann(spark, sf_dir):
         assert report["vectors"]["files_after"] <= (
             report["vectors"]["files_before"]
         )
+        assert set(report) == store_tables(store)
         batch_ids = sorted(
             r["b"]
             for r in spark.read.parquet(f"{store}/vectors")
@@ -139,6 +141,7 @@ def test_streaming_emb_neardup_equals_batch(spark, sf_dir):
         # compaction folds vectors AND pairs, preserving both answers
         report = compact_ann_store(spark, store)
         assert set(report) == {"vectors", "pairs"}
+        assert set(report) == store_tables(store)
         assert pair_rows(
             spark.read.parquet(f"{store}/pairs")
             .select("vec_a", "vec_b", "cosine")

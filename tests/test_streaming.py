@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+from conftest import store_tables
 from pyspark.sql import functions as F
 
 from slog_agent_spark.plans.pipeline import transform_transcripts
@@ -434,6 +435,7 @@ def test_streaming_neardup_compaction(spark, sf_dir):
         n_sigs = spark.read.parquet(f"{store}/sigs").count()
         report = compact_neardup_store(spark, store)
         assert set(report) == {"sigs", "bands", "pairs"}
+        assert set(report) == store_tables(store)
         for t in report.values():
             assert t["files_after"] <= t["files_before"]
         # contents preserved; batches 0,1 folded into base, 2 kept live
@@ -555,6 +557,7 @@ def test_streaming_events_sink_compaction(spark, sf_dir):
 
         report = compact_events_sink(spark, sink)
         assert set(report) == {"events", "metrics"}
+        assert set(report) == store_tables(sink)
         for r in report.values():
             assert r["files_after"] <= r["files_before"]
         # batches 0,1 folded into base, max live batch 2 kept
@@ -673,6 +676,7 @@ def test_streaming_docdedup_equals_batch_any_order(spark, sf_dir):
         assert report["hashes"]["files_after"] <= (
             report["hashes"]["files_before"]
         )
+        assert set(report) == store_tables(store)
         batch_ids = sorted(
             r["b"] for r in spark.read.parquet(f"{store}/hashes")
             .selectExpr("CAST(batch_id AS LONG) AS b").distinct().collect()
@@ -793,6 +797,7 @@ def test_streaming_training_cut_equals_batch_in_order(spark, sf_dir):
         assert any(not r[1] for r in got)    # some docs cut
         rep = compact_training_cut_store(spark, f"{work}/store")
         assert "cut" in rep and "totals" in rep
+        assert set(rep) == store_tables(f"{work}/store")
         after = sorted(
             tuple(r[c] for c in cols)
             for r in training_cut_rollup(spark, f"{work}/store").collect()
@@ -938,6 +943,7 @@ def test_streaming_boilerplate_first_arrival_and_freq_rollup(spark):
         assert stats[1]["store_freq_rows_scanned"] <= stats[1]["n_batch_shingles"]
         rep = compact_boilerplate_store(spark, f"{work}/store")
         assert "freq" in rep and "cut" in rep
+        assert set(rep) == store_tables(f"{work}/store")
         after = {
             r["shingle"]: r["n_docs"]
             for r in boilerplate_freq_rollup(spark, f"{work}/store").collect()
@@ -986,4 +992,87 @@ def test_streaming_simhash_equals_batch(spark, sf_dir):
         assert read_pairs() == got
         rep = compact_simhash_store(spark, f"{work}/store")
         assert "sketches" in rep and "bands" in rep
+        assert set(rep) == store_tables(f"{work}/store")
         assert read_pairs() == got
+
+
+def test_drain_continuous_equals_available_now(spark, sf_dir):
+    """Without ``availableNow`` (the stream job without ``--drain``) the
+    one drain runs a foreachBatch store continuously; driven until it
+    has processed every file, then stopped, its store holds exactly
+    what the availableNow drain writes, micro-batch for micro-batch."""
+    from slog_agent_spark.streaming.store import drain
+    from slog_agent_spark.streaming.stream import (
+        docdedup_batch_handler,
+        run_stream_docdedup,
+        stream_documents,
+    )
+
+    with tempfile.TemporaryDirectory() as work:
+        ddir = f"{work}/documents"
+        (
+            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .select("doc_id", "text")
+            .repartition(8)  # 8 files / maxFilesPerTrigger=4 → 2 batches
+            .write.parquet(ddir)
+        )
+        run_stream_docdedup(spark, ddir, f"{work}/once", f"{work}/ckpt1")
+        q = drain(
+            stream_documents(spark, ddir), f"{work}/ckpt2",
+            docdedup_batch_handler(f"{work}/continuous"),
+            available_now=False,
+        )
+        try:
+            assert q.isActive
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+        def rows(store):
+            return sorted(map(tuple, spark.read.parquet(
+                f"{store}/hashes"
+            ).selectExpr(
+                "content_hash", "keep_doc_id", "cnt", "is_first",
+                "CAST(hash_bkt AS INT)", "CAST(batch_id AS LONG)",
+            ).collect()))
+
+        once = rows(f"{work}/once")
+        assert {r[-1] for r in once} == {0, 1}
+        assert rows(f"{work}/continuous") == once
+
+
+def test_drains_call_handler_factory_at_call_time(spark, sf_dir, monkeypatch):
+    """The benchmark's traced runs swap a wrapper onto
+    ``stream.pipeline_batch_handler`` and ``stream.neardup_batch_handler``
+    (factory called with the store dir first). That only records
+    anything if ``run_stream_pipeline`` / ``run_stream_neardup`` look
+    the factory up through the module attribute when they run."""
+    from slog_agent_spark.streaming import stream as S
+
+    calls = []
+
+    def counting(name):
+        factory = getattr(S, name)
+
+        def make(store_dir, *a, **kw):
+            handle = factory(store_dir, *a, **kw)
+
+            def counted(batch_df, batch_id):
+                calls.append((name, store_dir, batch_id))
+                handle(batch_df, batch_id)
+            return counted
+        return make
+
+    for name in ("pipeline_batch_handler", "neardup_batch_handler"):
+        monkeypatch.setattr(S, name, counting(name))
+    with tempfile.TemporaryDirectory() as work:
+        transcripts_df(spark, sf_dir).coalesce(1).write.parquet(f"{work}/t")
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id", "text"
+        ).coalesce(1).write.parquet(f"{work}/d")
+        S.run_stream_pipeline(spark, f"{work}/t", f"{work}/sink", f"{work}/c1")
+        S.run_stream_neardup(spark, f"{work}/d", f"{work}/store", f"{work}/c2")
+        assert calls == [
+            ("pipeline_batch_handler", f"{work}/sink", 0),
+            ("neardup_batch_handler", f"{work}/store", 0),
+        ]
