@@ -54,7 +54,6 @@ REPEATS = int(os.environ.get("SLOG_BENCH_REPEATS", "5"))
 
 
 def run_bench(sf_dir: str, cpus: int, explode: int) -> dict:
-    os.environ.setdefault("SLOG_DRIVER_MEM", "24g")
     os.environ.setdefault("SLOG_JVM_TUNED", "1")
     spark = build_session(
         app_name="slog-agent-spark-bench",

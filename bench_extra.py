@@ -33,7 +33,6 @@ from slog_agent_spark.session import build_session  # noqa: E402
 
 
 def _spark(cpus: int):
-    os.environ.setdefault("SLOG_DRIVER_MEM", "24g")
     os.environ.setdefault("SLOG_JVM_TUNED", "1")
     return build_session(
         app_name="slog-agent-spark-bench-extra",

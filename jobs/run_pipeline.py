@@ -12,6 +12,14 @@ Reads the transcript table, runs parse → transform → route, writes
 per-tag sinks through the resumable checkpointer (plans/checkpoint.py),
 and dumps Prometheus-style metrics. Idempotent: rerunning after a crash
 completes only the partitions without a committed manifest.
+
+One chain per job: the transformed frame is persisted once and every
+consumer (the sink counts and write, the optional wire chunks, the
+process metrics) reads that one cached relation, as the reference runs
+each record through parse → transform once and counts it in the same
+pass (reference: base/logtransform.go:5-13,
+base/logprocesscounterset.go:105-143). The job owns the cache and
+releases it at exit; the consumers never persist or unpersist it.
 """
 
 from __future__ import annotations

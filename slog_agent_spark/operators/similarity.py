@@ -628,6 +628,8 @@ def unrolled_sorted_structs(
     exact assignment rule (see :func:`unrolled_assign_sql`)."""
     import math
 
+    if not cent_rows:
+        raise ValueError("unrolled_sorted_structs needs at least one centroid")
     dims = len(cent_rows[0][1])
     structs_fast, structs_slow = [], []
     for cid, emb in sorted(cent_rows, key=lambda r: r[0]):
@@ -880,6 +882,11 @@ def neardup_pairs_from_assigned_df(
         dims = A.shape[1]
         cut = threshold - 1e-4          # exact-cosine cut (unchanged)
         cut32 = threshold - 1e-3        # float32 screen, ≥100× the error bound
+        # the screen's float32 error bound must stay well inside its
+        # margin, or true pairs would be screened out silently
+        assert (dims + 4) * np.finfo(np.float32).eps < 1e-4, (
+            f"float32 screen error bound exceeds its margin at dims={dims}"
+        )
         out_a, out_b, out_dot, out_nn = [], [], [], []
         BLOCK = 1024
         jj = np.arange(n)

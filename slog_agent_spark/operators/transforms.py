@@ -24,10 +24,9 @@ Compilation state threads through the step list:
                base/bsupport/logtransforms.go:13-20 — later counters must
                not see dropped rows)
 
-Dialect-parameterized: the same compiler emits Spark SQL (product path,
-applied as stacked ``withColumns`` of ``F.expr``) or DuckDB SQL (oracle
-path, nested subqueries), so correctness is checked engine-vs-engine on
-identical semantics.
+Dialect-parameterized: the same compiler emits Spark SQL (product path)
+or DuckDB SQL (oracle path); both apply the layers as nested subqueries,
+so correctness is checked engine-vs-engine on identical semantics.
 
 Documented divergences from the reference (see SURVEY.md §2.4):
 - `drop` percentage<100: the reference keeps a sequential running ratio
@@ -42,6 +41,7 @@ Documented divergences from the reference (see SURVEY.md §2.4):
 
 from __future__ import annotations
 
+import itertools
 import re
 from dataclasses import dataclass, field
 
@@ -537,11 +537,58 @@ def compile_chain(
 # warmup (~10^5 rows/core).
 CODEGEN_SPAN_MAX_LAYERS = 40
 
-_span_seq = 0
+_span_seq = itertools.count(1)
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _span_spark(df, layers: list[dict[str, str]]):
+    """One nested ``SELECT`` applying ``layers`` to ``df``, analyzed once.
+
+    Each layer keeps ``withColumns`` semantics: a key naming an existing
+    column (case-insensitively, as ``withColumns`` resolves it) replaces
+    that column in place under the key's spelling; new keys append in
+    layer order. The input is bound through a uniquely named temp view on
+    ``df``'s own session (the one a ``foreachBatch`` frame carries),
+    dropped once ``spark.sql`` has analyzed the text.
+    """
+    if not layers:
+        return df
+    spark = df.sparkSession
+    view = f"__chain_src_{next(_span_seq)}"
+    cols = list(df.columns)
+    sql = _quote(view)
+    for layer in layers:
+        by_lower = {k.lower(): k for k in layer}
+        present = {c.lower() for c in cols}
+        cols = [by_lower.get(c.lower(), c) for c in cols]
+        cols += [k for k in layer if k.lower() not in present]
+        items = ", ".join(
+            f"{layer[c]} AS {_quote(c)}" if c in layer else _quote(c)
+            for c in cols
+        )
+        sql = f"SELECT {items} FROM ({sql})"
+    df.createOrReplaceTempView(view)
+    try:
+        return spark.sql(sql)
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 def apply_chain_spark(df, chain: CompiledChain):
-    """Apply the layer stack to a Spark DataFrame (stacked withColumns).
+    """Apply the layer stack to a Spark DataFrame, one ``SELECT`` per
+    codegen span — the Spark twin of :func:`chain_oracle_subquery`.
+
+    Why one statement and not a ``withColumns`` per layer: Spark
+    re-analyzes the whole growing plan on every ``withColumns``, so
+    building the flagship's 61 layers that way took about twice the
+    driver time of one nested ``SELECT`` per span analyzed once (0.70 s
+    against 0.34 s, median of alternating warm builds on a 4-core host;
+    the physical plan is the same either way). The deployed job pays
+    this once per run, the streaming pipeline handler once per
+    micro-batch.
 
     Long chains get one whole-stage-codegen span break at the 60% layer
     (see CODEGEN_SPAN_MAX_LAYERS) — value-identical: `observe` adds a
@@ -549,17 +596,14 @@ def apply_chain_spark(df, chain: CompiledChain):
     """
     from pyspark.sql import functions as F
 
-    global _span_seq
     n = len(chain.layers)
-    break_at = (3 * n) // 5 if n > CODEGEN_SPAN_MAX_LAYERS else -1
-    for i, layer in enumerate(chain.layers):
-        if i == break_at:
-            _span_seq += 1
-            df = df.observe(
-                f"__chain_span_{_span_seq}", F.count(F.lit(1))
-            )
-        df = df.withColumns({k: F.expr(e) for k, e in layer.items()})
-    return df
+    if n <= CODEGEN_SPAN_MAX_LAYERS:
+        return _span_spark(df, chain.layers)
+    break_at = (3 * n) // 5
+    df = _span_spark(df, chain.layers[:break_at]).observe(
+        f"__chain_span_{next(_span_seq)}", F.count(F.lit(1))
+    )
+    return _span_spark(df, chain.layers[break_at:])
 
 
 def chain_oracle_subquery(

@@ -113,6 +113,11 @@ def write_sinks_resumable(
     idempotently (same recovery contract as the reference's on-disk
     queues, buffer/hybridbuffer/bufferer.go:104-171).
 
+    Reads ``transformed`` twice (the counts, then the write) and leaves
+    caching to the caller: the deployed job (jobs/run_pipeline.py)
+    persists it once for the sinks, the wire chunks and the metrics, and
+    an ``unpersist`` here would drop that cache for the later readers.
+
     ``fail_after``: test hook — raise after N manifest commits
     (simulates a crash between sink ACKs).
 
@@ -121,42 +126,38 @@ def write_sinks_resumable(
     """
     from pyspark.sql import functions as F
 
-    transformed = transformed.persist()
-    try:
-        passed = transformed.where(~transformed["dropped"])
-        counts = {
-            r["tag"]: (r["rows"], r["bytes"] or 0)
-            for r in passed.groupBy("tag").agg(
-                F.count("*").alias("rows"),
-                F.sum("raw_length").alias("bytes"),
-            ).collect()
-        }
-        pending = sorted(t for t in counts if not ckpt.committed(t))
-        if not pending:
-            return {}
+    passed = transformed.where(~transformed["dropped"])
+    counts = {
+        r["tag"]: (r["rows"], r["bytes"] or 0)
+        for r in passed.groupBy("tag").agg(
+            F.count("*").alias("rows"),
+            F.sum("raw_length").alias("bytes"),
+        ).collect()
+    }
+    pending = sorted(t for t in counts if not ckpt.committed(t))
+    if not pending:
+        return {}
 
-        salt = F.pmod(F.xxhash64("conv_id"), F.lit(max(salt_buckets, 1)))
-        # routed through the table-IO abstraction: Iceberg
-        # overwritePartitions (one atomic snapshot per run) when
-        # SLOG_ICEBERG_CATALOG is set, dynamic-overwrite parquet otherwise
-        from ..sinks.writers import write_table
+    salt = F.pmod(F.xxhash64("conv_id"), F.lit(max(salt_buckets, 1)))
+    # routed through the table-IO abstraction: Iceberg
+    # overwritePartitions (one atomic snapshot per run) when
+    # SLOG_ICEBERG_CATALOG is set, dynamic-overwrite parquet otherwise
+    from ..sinks.writers import write_table
 
-        write_table(
-            passed.where(F.col("tag").isin(pending))
-            .repartition(F.col("tag"), salt)
-            .sortWithinPartitions("tag", "conv_id", "turn_idx"),
-            ckpt.root,
-            partition_by=["tag"],
-            mode="overwrite_partitions",
-        )
+    write_table(
+        passed.where(F.col("tag").isin(pending))
+        .repartition(F.col("tag"), salt)
+        .sortWithinPartitions("tag", "conv_id", "turn_idx"),
+        ckpt.root,
+        partition_by=["tag"],
+        mode="overwrite_partitions",
+    )
 
-        written: dict[str, int] = {}
-        for done, tag in enumerate(pending, start=1):
-            rows, bytes_ = counts[tag]
-            ckpt.commit(tag, rows, int(bytes_))
-            written[tag] = rows
-            if fail_after is not None and done >= fail_after:
-                raise RuntimeError(f"injected failure after {done} commits")
-        return written
-    finally:
-        transformed.unpersist()
+    written: dict[str, int] = {}
+    for done, tag in enumerate(pending, start=1):
+        rows, bytes_ = counts[tag]
+        ckpt.commit(tag, rows, int(bytes_))
+        written[tag] = rows
+        if fail_after is not None and done >= fail_after:
+            raise RuntimeError(f"injected failure after {done} commits")
+    return written

@@ -177,10 +177,14 @@ def run_fanout(
     Metrics then come from a cheap columnar READ-BACK of the written
     files, not from a second chain pass or a cache.
 
-    Why not `persist()` + filter-write (the round-1 shape): caching the
-    full-width transformed frame costs more than the chain itself (the
-    in-memory columnar encode of 34 columns), and at cluster scale it
-    spills. Why not a plain Filter over the projection: Catalyst
+    Why not `persist()` + filter-write (the round-1 shape): with one
+    write and one metrics read, caching the full-width transformed frame
+    costs more than the chain itself (the in-memory columnar encode of
+    34 columns), and at cluster scale it spills. The deployed job
+    (jobs/run_pipeline.py) does persist: it has three consumers (sink
+    counts + write, wire chunks, metrics), and it writes only passed
+    rows, so a read-back there would not see the dropped rows the
+    counters need. Why not a plain Filter over the projection: Catalyst
     pushdown-inlines it into a multi-KB expression that re-runs every
     regex (measured 3×). Writing the ~9% dropped rows is the cheapest
     way to keep metrics single-pass — and the quarantine tier is what a

@@ -16,7 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the sandbox (local[32], 128 GiB). On a real cluster
+# Defaults for a single local-mode JVM; the driver heap comes from
+# $SLOG_DRIVER_MEM (8g unless set, see build_session). On a real cluster
 # these are overridden by spark-submit conf; nothing here assumes local mode.
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",

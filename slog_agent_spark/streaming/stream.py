@@ -62,7 +62,9 @@ def pipeline_batch_handler(sink_dir: str, with_metrics: bool = False):
     dynamic-overwrite discipline, so a replayed batch rewrites its own
     counter partials instead of double-counting. The counters are pure
     sums, so :func:`stream_metrics_total` rolls the partials up into
-    exactly the batch-job metrics table.
+    exactly the batch-job metrics table. With both writes the batch's
+    chain output is cached once and read by each, and released before
+    the handler returns, so a long-running stream holds no cache.
     """
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -71,19 +73,25 @@ def pipeline_batch_handler(sink_dir: str, with_metrics: bool = False):
         from ..sinks.writers import write_table
 
         tf = transform_transcripts(batch_df)
-        write_table(
-            fence_filter(tf, "NOT dropped").withColumn("batch_id", F.lit(batch_id)),
-            f"{sink_dir}/events",
-            partition_by=["batch_id", "tag"],
-            mode="overwrite_partitions",
-        )
         if with_metrics:
+            tf = tf.persist()
+        try:
             write_table(
-                process_metrics(tf).withColumn("batch_id", F.lit(batch_id)),
-                f"{sink_dir}/metrics",
-                partition_by=["batch_id"],
+                fence_filter(tf, "NOT dropped").withColumn("batch_id", F.lit(batch_id)),
+                f"{sink_dir}/events",
+                partition_by=["batch_id", "tag"],
                 mode="overwrite_partitions",
             )
+            if with_metrics:
+                write_table(
+                    process_metrics(tf).withColumn("batch_id", F.lit(batch_id)),
+                    f"{sink_dir}/metrics",
+                    partition_by=["batch_id"],
+                    mode="overwrite_partitions",
+                )
+        finally:
+            if with_metrics:
+                tf.unpersist()
 
     return handle_batch
 

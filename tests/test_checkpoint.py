@@ -28,12 +28,16 @@ def _final_state(spark, root: str) -> dict:
 
 
 def test_kill_and_resume_converges(spark, sf_dir):
-    tf = P.transformed_df(spark, sf_dir)
+    from pyspark import StorageLevel
+
+    tf = P.transformed_df(spark, sf_dir).persist()
 
     with tempfile.TemporaryDirectory() as clean_root, \
          tempfile.TemporaryDirectory() as crash_root:
         clean_ckpt = SinkCheckpointer(clean_root, "cfg-v1", "fp-1")
         write_sinks_resumable(tf, clean_ckpt)
+        # the caller's cache survives the call (its later readers use it)
+        assert tf.storageLevel != StorageLevel.NONE
         clean = _final_state(spark, clean_root)
         assert len(clean) >= 3  # several tag sinks exist
 
@@ -53,6 +57,7 @@ def test_kill_and_resume_converges(spark, sf_dir):
         for m in crash_ckpt.manifests():
             assert m["config_hash"] == clean_ckpt.config_hash
             assert m["rows"] >= 0 and m["bytes"] > 0
+    tf.unpersist()
 
 
 def test_config_change_invalidates(spark, sf_dir):

@@ -99,15 +99,92 @@ def test_unrolled_assign_matches_aggregate_form(embs):
 
 
 def test_codegen_span_barrier_is_row_invisible(spark, monkeypatch):
-    """apply_chain_spark's observe barrier must never change rows."""
+    """apply_chain_spark's observe barrier must never change rows; the
+    flagship chain gets exactly one, a chain of at most
+    CODEGEN_SPAN_MAX_LAYERS layers none, and every layer keeps
+    ``withColumns`` semantics: reassigning an input column (under any
+    case) replaces it in place, new keys append in layer order, odd
+    identifiers are quoted."""
+    from pyspark.sql import functions as F
+
     import slog_agent_spark.operators.transforms as T
     from slog_agent_spark.plans.pipeline import transform_transcripts
     from slog_agent_spark.sources.transcripts import transcripts_df
 
+    df = spark.createDataFrame([(1, "a", 2)], ["x", "s", "y"])
+    layers = [{"s": "upper(s)"}, {"X": "x + 1", "n`b": "y * 10"}]
+    layers += [{"y": f"y + {i}"} for i in range(T.CODEGEN_SPAN_MAX_LAYERS - 2)]
+    short = T.apply_chain_spark(df, T.CompiledChain(
+        layers=layers, fields=[], dropped_col="FALSE", counters=[]))
+    assert _collect_metrics_nodes(short) == 0
+    ref = df
+    for layer in layers:
+        ref = ref.withColumns({k: F.expr(e) for k, e in layer.items()})
+    assert short.columns == ref.columns == ["X", "s", "y", "n`b"]
+    want_y = 2 + sum(range(T.CODEGEN_SPAN_MAX_LAYERS - 2))
+    assert ([tuple(r) for r in short.collect()]
+            == [tuple(r) for r in ref.collect()] == [(2, "A", want_y, 20)])
+    assert not [t for t in spark.catalog.listTables() if t.isTemporary
+                and t.name.startswith("__chain_src_")]
+
     src = transcripts_df(spark, "/root/testdata/sf0.001", 1)
-    with_barrier = transform_transcripts(src).orderBy(
-        "conv_id", "turn_idx").collect()
+    flagship = transform_transcripts(src)
+    assert _collect_metrics_nodes(flagship) == 1
+    with_barrier = flagship.orderBy("conv_id", "turn_idx").collect()
     monkeypatch.setattr(T, "CODEGEN_SPAN_MAX_LAYERS", 10**9)
     without = transform_transcripts(src).orderBy(
         "conv_id", "turn_idx").collect()
     assert with_barrier == without
+
+
+def _collect_metrics_nodes(df) -> int:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(ln.lstrip(" :+-").startswith("CollectMetrics ")
+               for ln in plan.splitlines())
+
+
+def test_unrolled_structs_reject_empty_centroids():
+    with pytest.raises(ValueError, match="at least one centroid"):
+        similarity.unrolled_sorted_structs([])
+
+
+def test_bucket_verify_rejects_dims_past_screen_margin(spark):
+    """At dims where the float32 screen's error bound reaches its margin
+    the verify fails loudly instead of dropping true pairs."""
+    dims = 900  # (900 + 4) · eps32 ≈ 1.08e-4 ≥ 1e-4
+    spark.createDataFrame(
+        [(i, [1.0] * dims, float(dims) ** 0.5) for i in (1, 2)],
+        "vec_id long, embedding array<double>, nrm double",
+    ).createOrReplaceTempView("__wide_norms")
+    spark.createDataFrame(
+        [(0, 1), (0, 2)], "centroid_id long, vec_id long"
+    ).createOrReplaceTempView("__wide_assigned")
+    pairs = similarity.neardup_pairs_from_assigned_df(
+        spark, "__wide_norms", "__wide_assigned")
+    with pytest.raises(Exception, match="error bound exceeds its margin"):
+        pairs.collect()
+
+
+def test_make_replica_rejects_k_not_below_dims(tmp_path):
+    import importlib.util
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spec = importlib.util.spec_from_file_location(
+        "make_replica",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "make_replica.py"),
+    )
+    make_replica = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(make_replica)
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.0, 1.0]]}),
+        str(src / "embeddings.parquet"),
+    )
+    dst = tmp_path / "dst"
+    with pytest.raises(ValueError, match="K < dims"):
+        make_replica.replicate(str(src), str(dst), 2)
+    assert not dst.exists()

@@ -513,9 +513,13 @@ def test_stream_metrics_equal_batch_and_replay_safe(spark, sf_dir):
         cols = sorted(df.columns)
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     with tempfile.TemporaryDirectory() as work:
         handler = pipeline_batch_handler(f"{work}/sink", with_metrics=True)
         handler(half_a, 0)
+        # the batch's cached chain is released: no cache per micro-batch
+        assert cache.isEmpty()
         handler(half_b, 1)
         total = stream_metrics_total(spark, f"{work}/sink")
         expect = process_metrics(transform_transcripts(t))

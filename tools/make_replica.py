@@ -59,6 +59,12 @@ def _permute_text(text: str, mapping: dict[str, str]) -> str:
 
 
 def replicate(src: str, dst: str, k: int) -> None:
+    # copy c rotates each vector by c elements, so copy `dims` would be
+    # bit-identical to copy 0: k >= dims fabricates cross-copy near-dups
+    emb = pq.read_table(os.path.join(src, "embeddings.parquet"))
+    dims = len(emb.column("embedding")[0].as_py())
+    if k >= dims:
+        raise ValueError(f"K={k} copies need K < dims={dims}")
     os.makedirs(dst, exist_ok=True)
 
     # pass-through side tables
@@ -90,7 +96,6 @@ def replicate(src: str, dst: str, k: int) -> None:
     pq.write_table(pa.concat_tables(parts), os.path.join(dst, "documents.parquet"))
 
     # --- embeddings ---
-    emb = pq.read_table(os.path.join(src, "embeddings.parquet"))
     vecs = np.array(emb.column("embedding").to_pylist(), dtype=np.float32)
     vid = emb.column("vec_id").to_numpy()
     vid_span = int(vid.max()) + 1

@@ -45,7 +45,6 @@ def main():
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     group = int(sys.argv[3]) if len(sys.argv) > 3 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    os.environ.setdefault("SLOG_DRIVER_MEM", "16g")
     os.environ.setdefault("SLOG_JVM_TUNED", "1")
     spark = build_session(master=f"local[{cpus}]", shuffle_partitions=2 * cpus)
     work = tempfile.mkdtemp(prefix="slog-prof-", dir="/dev/shm")

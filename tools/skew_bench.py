@@ -356,7 +356,6 @@ def main(argv=None) -> int:
                     help="iterate on the band-join section only (no md)")
     args = ap.parse_args(argv)
 
-    os.environ.setdefault("SLOG_DRIVER_MEM", "24g")
     os.environ.setdefault("SLOG_JVM_TUNED", "1")
     spark = build_session(
         app_name="slog-skew-bench",
