@@ -47,100 +47,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return P.routed_counts_df(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # The six queries below are declared FIRST: the driver's
-        # correctness gate verifies entries in declaration order (r5
-        # verdict: only the first 50 got CORRECTNESS rows), and these
-        # six were the never-driver-verified tail. Rotation noted in
-        # SURVEY §8.
-        "events_sessionize": C.sessionize_query,
-        "events_funnel": C.funnel_query,
-        "corpus_retention": C.corpus_retention_query,
-        "corpus_training_cut": C.corpus_training_cut_query,
-        "multimodal_feature_extract": lambda spark, sf: _mm_features(spark, sf),
-        "multimodal_frame_sample": lambda spark, sf: _mm_frames(spark, sf),
-        "transcripts_derivation": lambda spark, sf: transcripts_df(spark, sf).drop("ts"),
-        "grok_parse_rfc5424": lambda spark, sf: _cast_counts_long(
-            parse_transcripts(transcripts_df(spark, sf)).drop("ts")
-        ),
-        "pipeline_passed_rows": lambda spark, sf: P.transformed_df(spark, sf)
-        .where("NOT dropped")
-        .select(*PASSED_COLS),
-        "pipeline_routed_counts": lambda spark, sf: _cast_counts_long(
-            P.routed_counts_df(spark, sf)
-        ),
-        "pipeline_metrics": lambda spark, sf: _cast_counts_long(P.metrics_df(spark, sf)),
-        "pipeline_input_counters": lambda spark, sf: _cast_counts_long(
-            P.input_counters_df(spark, sf)
-        ),
-        "conversation_reassembly": lambda spark, sf: _cast_counts_long(
-            P.conversation_reassembly_df(spark, sf)
-        ),
-        "conversation_sessions": P.conversation_sessions_df,
-        "conversation_dedup": lambda spark, sf: _cast_counts_long(
-            P.conversation_dedup_df(spark, sf)
-        ),
-        "pipeline_team_enrich": P.team_enrich_rollup_df,
-        "keyset_length_stats": P.keyset_length_stats_df,
-        "sink_serialized_events": lambda spark, sf: P.serialized_events_df(spark, sf),
-        "sink_output_counters": lambda spark, sf: _cast_counts_long(
-            P.output_counters_df(spark, sf)
-        ),
-        "doc_token_count": lambda spark, sf: _cast_counts_long(
-            C.token_count_query(spark, sf)
-        ),
-        "doc_quality_score": C.quality_query,
-        "doc_language_id": lambda spark, sf: _cast_counts_long(
-            C.langid_query(spark, sf)
-        ),
-        "doc_fingerprint": C.fingerprint_query,
-        "dedup_exact": lambda spark, sf: _cast_counts_long(
-            C.exact_dedup_query(spark, sf)
-        ),
-        "dedup_minhash_lsh": C.minhash_lsh_query,
-        "dedup_minhash_lsh_salted": C.minhash_lsh_salted_query,
-        "dedup_band_index": C.band_index_query,
-        "corpus_pack_chunks": C.pack_chunks_query,
-        "corpus_mix_sample": C.mix_sample_query,
-        "dedup_simhash": lambda spark, sf: _cast_counts_long(
-            C.simhash_query(spark, sf)
-        ),
-        "dedup_simhash_neardup": lambda spark, sf: _cast_counts_long(
-            C.simhash_neardup_query(spark, sf)
-        ),
-        "dedup_ngram_jaccard": lambda spark, sf: _cast_counts_long(
-            C.ngram_jaccard_query(spark, sf)
-        ),
-        "dedup_groups_cc": C.dedup_groups_query,
-        "ann_topk_bruteforce": C.ann_bruteforce_query,
-        "ann_topk_ivf": C.ann_ivf_query,
-        "ann_topk_ivf_quantized": C.ann_ivf_quantized_query,
-        "ann_topk_ivf_trained": C.ann_ivf_trained_query,
-        "ann_topk_batch": C.ann_topk_batch_query,
-        "embedding_neardup_ivf": C.emb_neardup_query,
-        "embedding_neardup_exact": C.emb_neardup_exact_query,
-        "embedding_neardup_trained": C.emb_neardup_trained_query,
-        "corpus_stats": C.corpus_stats_query,
-        "doc_length_histogram": C.doc_length_histogram_query,
-        "doc_length_quantiles": C.doc_length_quantiles_query,
-        "doc_chunk_split": C.doc_chunk_split_query,
-        "ann_list_occupancy": C.ann_list_occupancy_query,
-        "doc_repetition": lambda spark, sf: _cast_counts_long(
-            C.doc_repetition_query(spark, sf)
-        ),
-        "doc_gopher_flags": C.gopher_flags_query,
-        "corpus_pii_scan": C.pii_scan_query,
-        "corpus_vocab_top": C.vocab_top_query,
-        "corpus_bpe_merges": C.bpe_merges_query,
-        "corpus_contamination": C.contamination_query,
-        "corpus_boilerplate": C.boilerplate_query,
-        "events_asof_enrich": C.asof_enrich_query,
-        "events_window_attrib": C.window_attrib_query,
-        "events_asof_segmented": C.asof_segmented_query,
-    }
-
-
 def _mm_features(spark: SparkSession, sf: str) -> DataFrame:
     from slog_agent_spark.operators.multimodal import extract_features, media_table
 
@@ -155,74 +61,6 @@ def _mm_frames(spark: SparkSession, sf: str) -> DataFrame:
     return sample_frames(media_table(spark, sf))
 
 
-def oracle_sql() -> dict[str, str]:
-    return {
-        "events_sessionize": C.sessionize_oracle(),
-        "events_funnel": C.funnel_oracle(),
-        "corpus_retention": C.corpus_retention_oracle(),
-        "corpus_training_cut": C.corpus_training_cut_oracle(),
-        "multimodal_feature_extract": _mm_oracle(),
-        "multimodal_frame_sample": _mm_frames_oracle(),
-        "transcripts_derivation": "WITH t AS ("
-        + transcripts_oracle_cte()
-        + ") SELECT conv_id, turn_idx, role, text, tool FROM t",
-        "grok_parse_rfc5424": "WITH transcripts AS ("
-        + transcripts_oracle_cte()
-        + "), p AS ("
-        + parse_oracle_select("transcripts")
-        + ") SELECT conv_id, turn_idx, role, tool, parse_ok, facility, level,"
-        " time, host, app, pid, source, extradata, log, unescaped, raw_length FROM p",
-        "pipeline_passed_rows": P.passed_rows_oracle_sql(PASSED_COLS),
-        "pipeline_routed_counts": P.routed_counts_oracle_sql(),
-        "pipeline_metrics": P.metrics_oracle_sql(),
-        "pipeline_input_counters": P.input_counters_oracle_sql(),
-        "conversation_reassembly": P.conversation_reassembly_oracle_sql(),
-        "conversation_sessions": P.conversation_sessions_oracle_sql(),
-        "conversation_dedup": P.conversation_dedup_oracle_sql(),
-        "pipeline_team_enrich": P.team_enrich_rollup_oracle_sql(),
-        "keyset_length_stats": P.keyset_length_stats_oracle_sql(),
-        "sink_serialized_events": P.serialized_events_oracle_sql(),
-        "sink_output_counters": P.output_counters_oracle_sql(),
-        "doc_token_count": C.token_count_oracle(),
-        "doc_quality_score": C.quality_oracle(),
-        "doc_language_id": C.langid_oracle(),
-        "doc_fingerprint": C.fingerprint_oracle(),
-        "dedup_exact": C.exact_dedup_oracle(),
-        "dedup_minhash_lsh": C.minhash_lsh_oracle(),
-        "dedup_minhash_lsh_salted": C.minhash_lsh_salted_oracle(),
-        "dedup_band_index": C.band_index_oracle(),
-        "corpus_pack_chunks": C.pack_chunks_oracle(),
-        "corpus_mix_sample": C.mix_sample_oracle(),
-        "dedup_simhash": C.simhash_oracle(),
-        "dedup_simhash_neardup": C.simhash_neardup_oracle(),
-        "dedup_ngram_jaccard": C.ngram_jaccard_oracle(),
-        "dedup_groups_cc": C.dedup_groups_oracle(),
-        "ann_topk_bruteforce": C.ann_bruteforce_oracle(),
-        "ann_topk_ivf": C.ann_ivf_oracle(),
-        "ann_topk_ivf_quantized": C.ann_ivf_quantized_oracle(),
-        "ann_topk_ivf_trained": C.ann_ivf_trained_oracle(),
-        "ann_topk_batch": C.ann_topk_batch_oracle(),
-        "embedding_neardup_ivf": C.emb_neardup_oracle(),
-        "embedding_neardup_exact": C.emb_neardup_exact_oracle(),
-        "embedding_neardup_trained": C.emb_neardup_trained_oracle(),
-        "corpus_stats": C.corpus_stats_oracle(),
-        "doc_length_histogram": C.doc_length_histogram_oracle(),
-        "doc_length_quantiles": C.doc_length_quantiles_oracle(),
-        "doc_chunk_split": C.doc_chunk_split_oracle(),
-        "ann_list_occupancy": C.ann_list_occupancy_oracle(),
-        "doc_repetition": C.doc_repetition_oracle(),
-        "doc_gopher_flags": C.gopher_flags_oracle(),
-        "corpus_pii_scan": C.pii_scan_oracle(),
-        "corpus_vocab_top": C.vocab_top_oracle(),
-        "corpus_bpe_merges": C.bpe_merges_oracle(),
-        "corpus_contamination": C.contamination_oracle(),
-        "corpus_boilerplate": C.boilerplate_oracle(),
-        "events_asof_enrich": C.asof_enrich_oracle(),
-        "events_window_attrib": C.window_attrib_oracle(),
-        "events_asof_segmented": C.asof_segmented_oracle(),
-    }
-
-
 def _mm_oracle() -> str:
     from slog_agent_spark.functions.dialect import DUCKDB
     from slog_agent_spark.operators.multimodal import features_oracle_sql
@@ -235,3 +73,91 @@ def _mm_frames_oracle() -> str:
     from slog_agent_spark.operators.multimodal import frames_oracle_sql
 
     return frames_oracle_sql(DUCKDB)
+
+
+def _transcripts_oracle() -> str:
+    return (
+        "WITH t AS (" + transcripts_oracle_cte()
+        + ") SELECT conv_id, turn_idx, role, text, tool FROM t"
+    )
+
+
+def _grok_oracle() -> str:
+    return (
+        "WITH transcripts AS (" + transcripts_oracle_cte()
+        + "), p AS (" + parse_oracle_select("transcripts")
+        + ") SELECT conv_id, turn_idx, role, tool, parse_ok, facility, level,"
+        " time, host, app, pid, source, extradata, log, unescaped, raw_length FROM p"
+    )
+
+
+_CORPUS = list(C.DEFAULT_QUERIES.items())
+
+# name -> (run(spark, sf), oracle()), in the driver's verification order.
+# The six queries the driver never verified lead (r5 verdict: its gate
+# verifies entries in declaration order and only the first 50 got
+# CORRECTNESS rows; rotation noted in SURVEY §8): the first four corpus
+# queries (plans/corpus.build_corpus_queries' order), then the two
+# multimodal ones.
+_TABLE = {
+    **dict(_CORPUS[:4]),
+    "multimodal_feature_extract": (_mm_features, _mm_oracle),
+    "multimodal_frame_sample": (_mm_frames, _mm_frames_oracle),
+    "transcripts_derivation": (
+        lambda spark, sf: transcripts_df(spark, sf).drop("ts"), _transcripts_oracle,
+    ),
+    "grok_parse_rfc5424": (
+        lambda spark, sf: parse_transcripts(transcripts_df(spark, sf)).drop("ts"),
+        _grok_oracle,
+    ),
+    "pipeline_passed_rows": (
+        lambda spark, sf: P.transformed_df(spark, sf)
+        .where("NOT dropped").select(*PASSED_COLS),
+        lambda: P.passed_rows_oracle_sql(PASSED_COLS),
+    ),
+    "pipeline_routed_counts": (P.routed_counts_df, P.routed_counts_oracle_sql),
+    "pipeline_metrics": (P.metrics_df, P.metrics_oracle_sql),
+    "pipeline_input_counters": (P.input_counters_df, P.input_counters_oracle_sql),
+    "conversation_reassembly": (
+        P.conversation_reassembly_df, P.conversation_reassembly_oracle_sql,
+    ),
+    "conversation_sessions": (
+        P.conversation_sessions_df, P.conversation_sessions_oracle_sql,
+    ),
+    "conversation_dedup": (P.conversation_dedup_df, P.conversation_dedup_oracle_sql),
+    "pipeline_team_enrich": (
+        P.team_enrich_rollup_df, P.team_enrich_rollup_oracle_sql,
+    ),
+    "keyset_length_stats": (
+        P.keyset_length_stats_df, P.keyset_length_stats_oracle_sql,
+    ),
+    "sink_serialized_events": (
+        P.serialized_events_df, P.serialized_events_oracle_sql,
+    ),
+    "sink_output_counters": (P.output_counters_df, P.output_counters_oracle_sql),
+    **dict(_CORPUS[4:]),
+}
+
+# queries whose integer columns are widened to long for the gate
+_CAST_LONG = {
+    "grok_parse_rfc5424", "pipeline_routed_counts", "pipeline_metrics",
+    "pipeline_input_counters", "conversation_reassembly", "conversation_dedup",
+    "sink_output_counters", "doc_token_count", "doc_language_id", "dedup_exact",
+    "dedup_simhash", "dedup_simhash_neardup", "dedup_ngram_jaccard",
+    "doc_repetition",
+}
+
+
+def _cast_run(run: Callable[[SparkSession, str], DataFrame]):
+    return lambda spark, sf: _cast_counts_long(run(spark, sf))
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {
+        name: _cast_run(run) if name in _CAST_LONG else run
+        for name, (run, _) in _TABLE.items()
+    }
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: oracle() for name, (_, oracle) in _TABLE.items()}

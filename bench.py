@@ -52,6 +52,18 @@ from slog_agent_spark.sources.transcripts import transcripts_df  # noqa: E402
 # cost ~10s and make the reported min a stable steady-state number
 REPEATS = int(os.environ.get("SLOG_BENCH_REPEATS", "5"))
 
+# the timed corpus queries (gate names in plans/corpus.DEFAULT_QUERIES),
+# also bench_extra.py's corpus mode
+CORPUS_QUERIES = (
+    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_neardup",
+    "embedding_neardup_trained", "ann_topk_ivf_trained", "corpus_stats",
+    "corpus_retention", "ann_topk_batch", "corpus_contamination",
+    "doc_length_histogram", "doc_length_quantiles", "dedup_groups_cc",
+    "corpus_boilerplate", "corpus_training_cut", "events_asof_enrich",
+    "events_window_attrib", "events_funnel", "ann_topk_ivf_quantized",
+    "corpus_bpe_merges",
+)
+
 
 def run_bench(sf_dir: str, cpus: int, explode: int) -> dict:
     os.environ.setdefault("SLOG_JVM_TUNED", "1")
@@ -200,29 +212,10 @@ def run_bench(sf_dir: str, cpus: int, explode: int) -> dict:
         corpus_secs: dict[str, float] = {}
         corpus_repeats = int(os.environ.get("SLOG_BENCH_CORPUS_REPEATS", "3"))
         if os.environ.get("SLOG_BENCH_CORPUS", "1") == "1":
-            from slog_agent_spark.plans import corpus as CQ
+            from slog_agent_spark.plans.corpus import DEFAULT_QUERIES
 
-            for name, q in (
-                ("dedup_minhash_lsh", CQ.minhash_lsh_query),
-                ("dedup_ngram_jaccard", CQ.ngram_jaccard_query),
-                ("dedup_simhash_neardup", CQ.simhash_neardup_query),
-                ("embedding_neardup_trained", CQ.emb_neardup_trained_query),
-                ("ann_topk_ivf_trained", CQ.ann_ivf_trained_query),
-                ("corpus_stats", CQ.corpus_stats_query),
-                ("corpus_retention", CQ.corpus_retention_query),
-                ("ann_topk_batch", CQ.ann_topk_batch_query),
-                ("corpus_contamination", CQ.contamination_query),
-                ("doc_length_histogram", CQ.doc_length_histogram_query),
-                ("doc_length_quantiles", CQ.doc_length_quantiles_query),
-                ("dedup_groups_cc", CQ.dedup_groups_query),
-                ("corpus_boilerplate", CQ.boilerplate_query),
-                ("corpus_training_cut", CQ.corpus_training_cut_query),
-                ("events_asof_enrich", CQ.asof_enrich_query),
-                ("events_window_attrib", CQ.window_attrib_query),
-                ("events_funnel", CQ.funnel_query),
-                ("ann_topk_ivf_quantized", CQ.ann_ivf_quantized_query),
-                ("corpus_bpe_merges", CQ.bpe_merges_query),
-            ):
+            for name in CORPUS_QUERIES:
+                q = DEFAULT_QUERIES[name][0]
                 best = None
                 for _ in range(max(corpus_repeats, 1)):
                     t0 = time.time()

@@ -1,4 +1,4 @@
-"""Round-6 optimization measurement harness (bench.py stays FROZEN).
+"""Round-6 optimization measurement harness.
 
 Isolates the components of the driver-timed surface per guide §1:
 
@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import CORPUS_QUERIES  # noqa: E402
 from slog_agent_spark.session import build_session  # noqa: E402
 
 
@@ -41,49 +42,12 @@ def _spark(cpus: int):
     )
 
 
-CORPUS_QUERIES = [
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_neardup",
-    "embedding_neardup_trained", "ann_topk_ivf_trained", "corpus_stats",
-    "corpus_retention", "ann_topk_batch", "corpus_contamination",
-    "doc_length_histogram", "doc_length_quantiles", "dedup_groups_cc",
-    "corpus_boilerplate", "corpus_training_cut", "events_asof_enrich",
-    "events_window_attrib", "events_funnel", "ann_topk_ivf_quantized",
-    "corpus_bpe_merges",
-]
-
-
-def corpus_builders():
-    from slog_agent_spark.plans import corpus as CQ
-
-    return {
-        "dedup_minhash_lsh": CQ.minhash_lsh_query,
-        "dedup_ngram_jaccard": CQ.ngram_jaccard_query,
-        "dedup_simhash_neardup": CQ.simhash_neardup_query,
-        "embedding_neardup_trained": CQ.emb_neardup_trained_query,
-        "ann_topk_ivf_trained": CQ.ann_ivf_trained_query,
-        "corpus_stats": CQ.corpus_stats_query,
-        "corpus_retention": CQ.corpus_retention_query,
-        "ann_topk_batch": CQ.ann_topk_batch_query,
-        "corpus_contamination": CQ.contamination_query,
-        "doc_length_histogram": CQ.doc_length_histogram_query,
-        "doc_length_quantiles": CQ.doc_length_quantiles_query,
-        "dedup_groups_cc": CQ.dedup_groups_query,
-        "corpus_boilerplate": CQ.boilerplate_query,
-        "corpus_training_cut": CQ.corpus_training_cut_query,
-        "events_asof_enrich": CQ.asof_enrich_query,
-        "events_window_attrib": CQ.window_attrib_query,
-        "events_funnel": CQ.funnel_query,
-        "ann_topk_ivf_quantized": CQ.ann_ivf_quantized_query,
-        "corpus_bpe_merges": CQ.bpe_merges_query,
-    }
-
-
 def run_corpus(spark, sf_dir, repeats, only=None):
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES
+
     out = {}
-    builders = corpus_builders()
-    names = only or CORPUS_QUERIES
-    for name in names:
-        q = builders[name]
+    for name in only or CORPUS_QUERIES:
+        q = DEFAULT_QUERIES[name][0]
         best = None
         for _ in range(repeats):
             t0 = time.time()

@@ -6,7 +6,7 @@ Usage (cluster):
         jobs/run_corpus.py \\
         --data <dir with documents.parquet / embeddings.parquet> \\
         --output <result root> \\
-        [--ops dedup_exact,dedup_minhash_lsh,...]   (default: all)
+        [--ops dedup_exact,dedup_minhash_lsh,...]   (default: all but OPT_IN_OPS)
         [--corpus-config corpus.yml]   (sketch/index sizing overrides)
 
 Runs the selected operators and writes each result as parquet under
@@ -22,7 +22,8 @@ Scale notes: every operator here is shuffle-shaped for a real cluster
 O(n²) pass except the explicitly-named *exact* near-dup baseline, which
 is excluded from the default set and intended for samples). Expensive
 signature/centroid stages are materialized once per run
-(plans/corpus.py:_staged_query).
+(plans/corpus.py:_run_stages). The operators are those of
+plans/corpus.build_corpus_queries, bound to the --corpus-config sizing.
 """
 
 from __future__ import annotations
@@ -31,105 +32,24 @@ import argparse
 import os
 import sys
 
-DOC_OPS = (
-    "doc_token_count",
-    "doc_quality_score",
-    "doc_language_id",
-    "doc_fingerprint",
-    "corpus_stats",
-    "doc_length_histogram",
-    "doc_length_quantiles",
-    "doc_chunk_split",
-    "ann_list_occupancy",
-    "doc_repetition",
-    "doc_gopher_flags",
-    "corpus_pii_scan",
-    "corpus_vocab_top",
-    "corpus_bpe_merges",
-    "corpus_pack_chunks",
-    "corpus_mix_sample",
-    "corpus_contamination",
-    "corpus_boilerplate",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_salted",
-    "dedup_band_index",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_neardup",
-    "dedup_groups_cc",
-    "corpus_retention",
-    "corpus_training_cut",
-)
-EVENT_OPS = (
-    "events_asof_enrich",
-    "events_asof_segmented",
-    "events_window_attrib",
-    "events_sessionize",
-    "events_funnel",
-)
-EMB_OPS = (
-    "ann_topk_bruteforce",
-    "ann_topk_ivf",
-    "ann_topk_ivf_quantized",
-    "ann_topk_ivf_trained",
-    "ann_topk_batch",
-    "embedding_neardup_trained",
-)
-# O(n²) verification tier — opt-in only, run it on a sample
-EXTRA_OPS = ("embedding_neardup_exact",)
+# gate operators a default run skips (--ops runs them): the O(n²) exact
+# near-dup baseline (run it on a sample) and two intermediate tiers, the
+# 16-bit SimHash groups and the untrained IVF near-dup
+OPT_IN_OPS = ("embedding_neardup_exact", "dedup_simhash", "embedding_neardup_ivf")
 
 
 def registry(params=None):
-    from slog_agent_spark.plans import corpus as C
+    """Op name -> runner(spark, data), bound to ``params`` (defaults
+    otherwise): every operator of plans/corpus.build_corpus_queries."""
+    from slog_agent_spark.plans.corpus import build_corpus_queries
+    from slog_agent_spark.plans.corpus_config import DEFAULT_CORPUS_PARAMS
 
-    base = {
-        "doc_token_count": C.token_count_query,
-        "doc_quality_score": C.quality_query,
-        "doc_language_id": C.langid_query,
-        "doc_fingerprint": C.fingerprint_query,
-        "corpus_stats": C.corpus_stats_query,
-        "doc_length_histogram": C.doc_length_histogram_query,
-        "doc_length_quantiles": C.doc_length_quantiles_query,
-        "doc_chunk_split": C.doc_chunk_split_query,
-        "ann_list_occupancy": C.ann_list_occupancy_query,
-        "doc_repetition": C.doc_repetition_query,
-        "doc_gopher_flags": C.gopher_flags_query,
-        "corpus_pii_scan": C.pii_scan_query,
-        "corpus_vocab_top": C.vocab_top_query,
-        "corpus_bpe_merges": C.bpe_merges_query,
-        "corpus_pack_chunks": C.pack_chunks_query,
-        "corpus_mix_sample": C.mix_sample_query,
-        "corpus_contamination": C.contamination_query,
-        "corpus_boilerplate": C.boilerplate_query,
-        "events_asof_enrich": C.asof_enrich_query,
-        "events_asof_segmented": C.asof_segmented_query,
-        "events_window_attrib": C.window_attrib_query,
-        "events_sessionize": C.sessionize_query,
-        "events_funnel": C.funnel_query,
-        "dedup_exact": C.exact_dedup_query,
-        "dedup_minhash_lsh": C.minhash_lsh_query,
-        "dedup_minhash_lsh_salted": C.minhash_lsh_salted_query,
-        "dedup_band_index": C.band_index_query,
-        "dedup_ngram_jaccard": C.ngram_jaccard_query,
-        "dedup_simhash_neardup": C.simhash_neardup_query,
-        "dedup_groups_cc": C.dedup_groups_query,
-        "corpus_retention": C.corpus_retention_query,
-        "corpus_training_cut": C.corpus_training_cut_query,
-        "ann_topk_bruteforce": C.ann_bruteforce_query,
-        "ann_topk_ivf": C.ann_ivf_query,
-        "ann_topk_ivf_quantized": C.ann_ivf_quantized_query,
-        "ann_topk_ivf_trained": C.ann_ivf_trained_query,
-        "ann_topk_batch": C.ann_topk_batch_query,
-        "embedding_neardup_trained": C.emb_neardup_trained_query,
-        "embedding_neardup_exact": C.emb_neardup_exact_query,
-    }
-    if params is not None:
-        # rebind the parameterized operators to the configured sizing
-        # (plans/corpus_config.CorpusParams; defaults otherwise)
-        for name, (run, _oracle) in C.build_corpus_queries(params).items():
-            if name in base:
-                base[name] = run
-    return base
+    queries = build_corpus_queries(params or DEFAULT_CORPUS_PARAMS)
+    return {name: run for name, (run, _oracle) in queries.items()}
+
+
+def default_ops() -> list[str]:
+    return [op for op in registry() if op not in OPT_IN_OPS]
 
 
 def run_ops(spark, data: str, output: str, ops, params=None) -> dict[str, int]:
@@ -177,13 +97,14 @@ def main(argv: list[str]) -> int:
     ops = (
         [o.strip() for o in args.ops.split(",") if o.strip()]
         if args.ops
-        else list(DOC_OPS + EVENT_OPS + EMB_OPS)
+        else default_ops()
     )
     # reject op-name typos before spinning up a session; ValueErrors
     # raised during execution propagate with their tracebacks
-    unknown = [o for o in ops if o not in registry(params)]
+    reg = registry(params)
+    unknown = [o for o in ops if o not in reg]
     if unknown:
-        print(f"unknown ops: {unknown}; available: {sorted(registry(params))}")
+        print(f"unknown ops: {unknown}; available: {sorted(reg)}")
         return 2
 
     spark = build_session(app_name="slog-agent-spark-corpus")

@@ -10,7 +10,8 @@ import tempfile
 from conftest import store_tables
 from pyspark.sql import functions as F
 
-from slog_agent_spark.plans import corpus as C
+from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
+from slog_agent_spark.plans.corpus import emb_neardup_trained_query
 from slog_agent_spark.streaming.ann_stream import (
     ann_ingest_batch_handler,
     ann_query_store,
@@ -38,7 +39,7 @@ def test_streamed_store_equals_batch_ann(spark, sf_dir):
 
         stats: dict = {}
         got = _rows(ann_query_store(spark, store, cents, stats=stats))
-        want = _rows(C.ann_topk_batch_query(spark, sf_dir))
+        want = _rows(Q["ann_topk_batch"][0](spark, sf_dir))
         assert got == want and got
 
         # bounded read: the scan is the probed lists, never the corpus
@@ -109,7 +110,7 @@ def test_streaming_emb_neardup_equals_batch(spark, sf_dir):
             spark.read.parquet(f"{store}/pairs")
             .select("vec_a", "vec_b", "cosine")
         )
-        want = pair_rows(C.emb_neardup_trained_query(spark, sf_dir))
+        want = pair_rows(emb_neardup_trained_query(spark, sf_dir))
         assert got == want and got
         assert len(got) == len({(a, b) for a, b, _ in got})  # once each
 
@@ -134,7 +135,7 @@ def test_streaming_emb_neardup_equals_batch(spark, sf_dir):
         )
         want_topk = sorted(
             (r["q_id"], r["vec_id"], r["label"], r["cosine"])
-            for r in C.ann_topk_batch_query(spark, sf_dir).collect()
+            for r in Q["ann_topk_batch"][0](spark, sf_dir).collect()
         )
         assert got_topk == want_topk
 

@@ -17,7 +17,7 @@ from conftest import assert_df_equals_oracle
 
 from slog_agent_spark.functions.dialect import DUCKDB, SPARK
 from slog_agent_spark.operators import dedup
-from slog_agent_spark.plans.corpus import build_corpus_queries
+from slog_agent_spark.plans.corpus import DEFAULT_QUERIES, build_corpus_queries
 from slog_agent_spark.plans.corpus_config import (
     DEFAULT_CORPUS_PARAMS,
     parse_corpus_config,
@@ -71,6 +71,27 @@ def test_minhash_k24_bands6_is_live(spark, duck, sf_dir):
 
     run, oracle = build_corpus_queries(params)["dedup_minhash_lsh"]
     assert_df_equals_oracle(run(spark, sf_dir), duck, oracle())
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_minhash_lsh_salted", "ann_topk_ivf_quantized", "ann_list_occupancy"],
+)
+def test_job_sizing_is_live(spark, duck, sf_dir, name):
+    """The corpus job's runner takes the configured sizing: its result
+    matches the oracle twin AT those params, whose SQL differs from the
+    default's. Each knob changes the fixture's rows (2 bands of 12 rows
+    drop one of the 28 default MinHash pairs; 6 bands keep all 28), so
+    a runner left at default sizing fails."""
+    from jobs.run_corpus import registry
+
+    params = dataclasses.replace(
+        DEFAULT_CORPUS_PARAMS, minhash_k=24, lsh_bands=2,
+        trained_centroids=12, topk=5,
+    ).validate()
+    _, oracle = build_corpus_queries(params)[name]
+    assert oracle() != DEFAULT_QUERIES[name][1]()
+    assert_df_equals_oracle(registry(params)[name](spark, sf_dir), duck, oracle())
 
 
 def test_simhash_4x32_is_live(spark, duck, sf_dir):

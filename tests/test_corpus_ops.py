@@ -7,29 +7,31 @@ import pytest
 from conftest import SF_DIR, assert_df_equals_oracle
 
 from slog_agent_spark.plans import corpus as C
+from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
 
+# (test id, gate name)
 PAIRS = [
-    ("token_count", C.token_count_query, C.token_count_oracle),
-    ("quality", C.quality_query, C.quality_oracle),
-    ("langid", C.langid_query, C.langid_oracle),
-    ("fingerprint", C.fingerprint_query, C.fingerprint_oracle),
-    ("exact_dedup", C.exact_dedup_query, C.exact_dedup_oracle),
-    ("minhash_lsh", C.minhash_lsh_query, C.minhash_lsh_oracle),
+    ("token_count", "doc_token_count"),
+    ("quality", "doc_quality_score"),
+    ("langid", "doc_language_id"),
+    ("fingerprint", "doc_fingerprint"),
+    ("exact_dedup", "dedup_exact"),
+    ("minhash_lsh", "dedup_minhash_lsh"),
     # the salted form's oracle IS the plain single-SQL pairs query, so
     # this parity row pins "salting is placement-only" on the fixture
-    ("minhash_lsh_salted", C.minhash_lsh_salted_query,
-     C.minhash_lsh_salted_oracle),
-    ("simhash", C.simhash_query, C.simhash_oracle),
-    ("ngram_jaccard", C.ngram_jaccard_query, C.ngram_jaccard_oracle),
-    ("boilerplate", C.boilerplate_query, C.boilerplate_oracle),
-    ("ann_bruteforce", C.ann_bruteforce_query, C.ann_bruteforce_oracle),
-    ("ann_ivf", C.ann_ivf_query, C.ann_ivf_oracle),
-    ("emb_neardup", C.emb_neardup_query, C.emb_neardup_oracle),
+    ("minhash_lsh_salted", "dedup_minhash_lsh_salted"),
+    ("simhash", "dedup_simhash"),
+    ("ngram_jaccard", "dedup_ngram_jaccard"),
+    ("boilerplate", "corpus_boilerplate"),
+    ("ann_bruteforce", "ann_topk_bruteforce"),
+    ("ann_ivf", "ann_topk_ivf"),
+    ("emb_neardup", "embedding_neardup_ivf"),
 ]
 
 
-@pytest.mark.parametrize("name,query,oracle", PAIRS, ids=[p[0] for p in PAIRS])
-def test_parity(spark, duck, name, query, oracle):
+@pytest.mark.parametrize("name", [g for _, g in PAIRS], ids=[i for i, _ in PAIRS])
+def test_parity(spark, duck, name):
+    query, oracle = Q[name]
     df = query(spark, SF_DIR)
     # normalize integer widths for comparison
     from pyspark.sql import functions as F
@@ -42,7 +44,7 @@ def test_parity(spark, duck, name, query, oracle):
 
 def test_minhash_finds_near_duplicates(spark):
     """LSH candidates verified by true Jaccard must be real near-dups."""
-    rows = C.minhash_lsh_query(spark, SF_DIR).collect()
+    rows = Q["dedup_minhash_lsh"][0](spark, SF_DIR).collect()
     assert rows, "corpus should contain near-duplicate documents"
     assert all(r["jaccard"] >= 0.35 for r in rows)
     assert all(r["doc_a"] < r["doc_b"] for r in rows)
@@ -55,13 +57,13 @@ def test_ngram_jaccard_exact_superset_of_lsh(spark):
     pairs may differ only via the documented stop-shingle cut."""
     exact_pairs = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in C.ngram_jaccard_query(spark, SF_DIR).collect()
+        for r in Q["dedup_ngram_jaccard"][0](spark, SF_DIR).collect()
     }
     assert exact_pairs, "corpus should contain near-duplicate documents"
     assert all(j >= 0.35 for j in exact_pairs.values())
     lsh_strong = {
         (r["doc_a"], r["doc_b"])
-        for r in C.minhash_lsh_query(spark, SF_DIR).collect()
+        for r in Q["dedup_minhash_lsh"][0](spark, SF_DIR).collect()
         if r["jaccard"] >= 0.45
     }
     # Pinned to the sf0.01 fixture: the exact query's NGRAM_DF_CAP
@@ -72,15 +74,15 @@ def test_ngram_jaccard_exact_superset_of_lsh(spark):
 
 
 def test_ann_ivf_recall_vs_bruteforce(spark):
-    exact = {r["vec_id"] for r in C.ann_bruteforce_query(spark, SF_DIR).collect()}
-    approx = {r["vec_id"] for r in C.ann_ivf_query(spark, SF_DIR).collect()}
+    exact = {r["vec_id"] for r in Q["ann_topk_bruteforce"][0](spark, SF_DIR).collect()}
+    approx = {r["vec_id"] for r in Q["ann_topk_ivf"][0](spark, SF_DIR).collect()}
     assert len(approx) == len(exact) == 10
     # IVF with 2/8 probes: expect meaningful (not necessarily full) recall
     assert len(exact & approx) >= 3
 
 
 def test_exact_dedup_covers_corpus(spark):
-    rows = C.exact_dedup_query(spark, SF_DIR).collect()
+    rows = Q["dedup_exact"][0](spark, SF_DIR).collect()
     assert sum(r["group_size"] for r in rows) == 500
 
 
@@ -238,7 +240,7 @@ def test_pack_chunks_matches_naive_cumsum(spark, duck, sf_dir):
 
     rows = {
         r["doc_id"]: r
-        for r in C.pack_chunks_query(spark, sf_dir).collect()
+        for r in Q["corpus_pack_chunks"][0](spark, sf_dir).collect()
     }
     t = token_count_items(DUCKDB)["n_tokens"]
     naive = duck.execute(f"""
@@ -313,8 +315,8 @@ def test_mix_sample_rates_and_determinism(spark, sf_dir):
     downsampled language, all of the rest, and is stable across runs."""
     from slog_agent_spark.operators.textops import MIX_KEEP_PERMILLE
 
-    rows = C.mix_sample_query(spark, sf_dir).collect()
-    again = C.mix_sample_query(spark, sf_dir).collect()
+    rows = Q["corpus_mix_sample"][0](spark, sf_dir).collect()
+    again = Q["corpus_mix_sample"][0](spark, sf_dir).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
     by_lang: dict = {}
     for r in rows:
@@ -337,11 +339,11 @@ def test_training_cut_composes_retention_mix_pack(spark, sf_dir):
     from slog_agent_spark.operators.textops import pack_chunks_sql
 
     cut = {r["doc_id"]: r for r in
-           C.corpus_training_cut_query(spark, sf_dir).collect()}
+           Q["corpus_training_cut"][0](spark, sf_dir).collect()}
     retention = {r["doc_id"]: r["kept"] for r in
-                 C.corpus_retention_query(spark, sf_dir).collect()}
+                 Q["corpus_retention"][0](spark, sf_dir).collect()}
     mix = {r["doc_id"]: r["kept"] for r in
-           C.mix_sample_query(spark, sf_dir).collect()}
+           Q["corpus_mix_sample"][0](spark, sf_dir).collect()}
     assert set(cut) == set(retention) == set(mix)
     selected_ids = set()
     for doc_id, r in cut.items():
@@ -494,9 +496,8 @@ def test_quantile_rank_convention_parity(spark, duck):
 def test_doc_length_quantiles_matches_oracle(spark, duck, sf_dir):
     from slog_agent_spark.functions.dialect import DUCKDB
     from slog_agent_spark.operators.textops import doc_length_quantiles_sql
-    from slog_agent_spark.plans.corpus import doc_length_quantiles_query
 
-    df = doc_length_quantiles_query(spark, sf_dir)
+    df = Q["doc_length_quantiles"][0](spark, sf_dir)
     assert_df_equals_oracle(df, duck, doc_length_quantiles_sql(DUCKDB))
     # the stopword split is real on the fixture (both verdicts present)
     assert df.select("stopword_ok").distinct().count() == 2

@@ -9,7 +9,7 @@ from conftest import SF_DIR, assert_df_equals_oracle
 
 from slog_agent_spark.functions.dialect import DUCKDB, SPARK
 from slog_agent_spark.operators.eventops import asof_enrich_sql, window_attrib_sql
-from slog_agent_spark.plans import corpus as C
+from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
 
 US = 1_000_000
 
@@ -74,9 +74,8 @@ def test_asof_tie_rules_and_left_semantics(spark, duck):
 
 
 def test_asof_gate_parity_on_fixture(spark, duck):
-    assert_df_equals_oracle(
-        C.asof_enrich_query(spark, SF_DIR), duck, C.asof_enrich_oracle()
-    )
+    run, oracle = Q["events_asof_enrich"]
+    assert_df_equals_oracle(run(spark, SF_DIR), duck, oracle())
 
 
 def test_window_attrib_matches_naive_range_join(duck):
@@ -149,10 +148,8 @@ def test_asof_segmented_equals_plain(spark, duck):
 
 
 def test_asof_segmented_gate_parity_on_fixture(spark, duck):
-    assert_df_equals_oracle(
-        C.asof_segmented_query(spark, SF_DIR), duck,
-        C.asof_segmented_oracle(),
-    )
+    run, oracle = Q["events_asof_segmented"]
+    assert_df_equals_oracle(run(spark, SF_DIR), duck, oracle())
 
 
 def test_sessionize_gap_semantics(duck):
@@ -186,9 +183,8 @@ def test_sessionize_gap_semantics(duck):
 
 
 def test_sessionize_gate_parity_on_fixture(spark, duck):
-    assert_df_equals_oracle(
-        C.sessionize_query(spark, SF_DIR), duck, C.sessionize_oracle()
-    )
+    run, oracle = Q["events_sessionize"]
+    assert_df_equals_oracle(run(spark, SF_DIR), duck, oracle())
 
 
 def test_funnel_semantics(duck):
@@ -226,9 +222,8 @@ def test_funnel_semantics(duck):
 
 
 def test_funnel_gate_parity_on_fixture(spark, duck):
-    assert_df_equals_oracle(
-        C.funnel_query(spark, SF_DIR), duck, C.funnel_oracle()
-    )
+    run, oracle = Q["events_funnel"]
+    assert_df_equals_oracle(run(spark, SF_DIR), duck, oracle())
 
 
 NULL_MARK_FIXTURE = [

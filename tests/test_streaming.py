@@ -279,7 +279,7 @@ def test_streaming_neardup_equals_batch(spark, sf_dir):
     """Incremental MinHash-LSH: after draining the documents corpus in
     micro-batches, the accumulated pair store equals the batch LSH pair
     set — every pair exactly once, same Jaccard values."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import run_stream_neardup
 
     with tempfile.TemporaryDirectory() as work:
@@ -297,7 +297,7 @@ def test_streaming_neardup_equals_batch(spark, sf_dir):
         }
         want = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in C.minhash_lsh_query(spark, sf_dir).collect()
+            for r in Q["dedup_minhash_lsh"][0](spark, sf_dir).collect()
         }
         assert got == want and got
 
@@ -307,7 +307,7 @@ def test_streaming_neardup_resumes_across_restarts(spark, sf_dir):
     the second run must process only the new files (checkpoint resume)
     and the accumulated pair store must equal the batch pair set over
     the full corpus — the incremental ingestion story end to end."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import run_stream_neardup
 
     docs = (
@@ -327,7 +327,7 @@ def test_streaming_neardup_resumes_across_restarts(spark, sf_dir):
         }
         want = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in C.minhash_lsh_query(spark, sf_dir).collect()
+            for r in Q["dedup_minhash_lsh"][0](spark, sf_dir).collect()
         }
         assert got == want and len(got) >= n_first
 
@@ -412,7 +412,7 @@ def test_streaming_neardup_compaction(spark, sf_dir):
     contents, keeps the max batch replayable, and the stream continues
     correctly on the compacted store (final pairs == batch LSH over the
     full corpus)."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import (
         compact_neardup_store,
         neardup_batch_handler,
@@ -463,7 +463,7 @@ def test_streaming_neardup_compaction(spark, sf_dir):
         }
         want = {
             (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in C.minhash_lsh_query(spark, sf_dir).collect()
+            for r in Q["dedup_minhash_lsh"][0](spark, sf_dir).collect()
         }
         assert got == want and got
 
@@ -627,7 +627,7 @@ def test_streaming_docdedup_equals_batch_any_order(spark, sf_dir):
     over the union of inputs — under an arrival order that puts LATER
     doc_ids first, so first-arrival and batch-min genuinely diverge and
     only the commuting (min, count) partials can reconcile them."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import (
         compact_docdedup_store,
         docdedup_batch_handler,
@@ -658,7 +658,7 @@ def test_streaming_docdedup_equals_batch_any_order(spark, sf_dir):
             )
 
         got = rows(docdedup_rollup(spark, store))
-        want = rows(C.exact_dedup_query(spark, sf_dir))
+        want = rows(Q["dedup_exact"][0](spark, sf_dir))
         assert got == want and got
 
         # the seen-check is bounded by the batch's hash set
@@ -767,7 +767,7 @@ def test_streaming_training_cut_equals_batch_in_order(spark, sf_dir):
     (first-arrival == min-doc_id; the pair's later side == greater
     doc_id; pack offsets compose through the totals table) — and stays
     identical after compacting every store the handler grows."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import (
         compact_training_cut_store,
         training_cut_batch_handler,
@@ -794,7 +794,7 @@ def test_streaming_training_cut_equals_batch_in_order(spark, sf_dir):
         )
         want = sorted(
             tuple(r[c] for c in cols)
-            for r in C.corpus_training_cut_query(spark, sf_dir).collect()
+            for r in Q["corpus_training_cut"][0](spark, sf_dir).collect()
         )
         assert got == want and len(got) == docs.count()
         assert any(r[3] for r in got)        # some docs selected
@@ -849,7 +849,7 @@ def test_streaming_attrib_equals_batch(spark, sf_dir):
     one operator where Structured Streaming's built-in stateful join
     is the right primitive, with state bounded by the join's own time
     horizon."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import run_stream_attrib
 
     with tempfile.TemporaryDirectory() as work:
@@ -868,7 +868,7 @@ def test_streaming_attrib_equals_batch(spark, sf_dir):
             ).collect())
         )
         want = sorted(
-            map(tuple, C.window_attrib_query(spark, sf_dir).select(
+            map(tuple, Q["events_window_attrib"][0](spark, sf_dir).select(
                 "probe_event_id", "mark_event_id", "user_id",
                 "probe_ts_us", "mark_ts_us", "probe_value", "mark_value",
                 "age_us",
@@ -881,7 +881,7 @@ def test_streaming_boilerplate_single_batch_equals_batch(spark, sf_dir):
     """In the single-batch limit, counts-so-far == corpus counts, so the
     streamed verdicts are value-identical to the batch
     corpus_boilerplate operator; replaying the batch changes nothing."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import boilerplate_batch_handler
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -899,7 +899,7 @@ def test_streaming_boilerplate_single_batch_equals_batch(spark, sf_dir):
         got = read()
         want = sorted(
             tuple(r[c] for c in cols)
-            for r in C.boilerplate_query(spark, sf_dir).collect()
+            for r in Q["corpus_boilerplate"][0](spark, sf_dir).collect()
         )
         assert got == want and got
         handler(docs, 0)  # replay
@@ -960,7 +960,7 @@ def test_streaming_simhash_equals_batch(spark, sf_dir):
     micro-batches, the accumulated pair store equals the batch
     banded-Hamming pair set — every pair exactly once, same Hamming
     values; replaying the last batch changes nothing."""
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.streaming.stream import (
         compact_simhash_store,
         simhash_batch_handler,
@@ -984,7 +984,7 @@ def test_streaming_simhash_equals_batch(spark, sf_dir):
         got = read_pairs()
         want = {
             (r["doc_a"], r["doc_b"]): r["hamming"]
-            for r in C.simhash_neardup_query(spark, sf_dir).collect()
+            for r in Q["dedup_simhash_neardup"][0](spark, sf_dir).collect()
         }
         assert got == want and got
         # sketch fetches stay candidate-bounded

@@ -56,7 +56,7 @@ def level_main(args) -> int:
     import shutil
     import tempfile
 
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES
     from slog_agent_spark.session import build_session
 
     spark = build_session(
@@ -90,11 +90,7 @@ def level_main(args) -> int:
         )
         timings: dict[str, float] = {}
         for name in QUERIES:
-            q = {
-                "dedup_minhash_lsh": C.minhash_lsh_query,
-                "corpus_training_cut": C.corpus_training_cut_query,
-                "corpus_boilerplate": C.boilerplate_query,
-            }[name]
+            q = DEFAULT_QUERIES[name][0]
             best = None
             for _ in range(args.repeats):
                 t0 = time.time()

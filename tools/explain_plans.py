@@ -52,7 +52,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from slog_agent_spark.plans import corpus as C
+    from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
     from slog_agent_spark.plans import pipeline as P
     from slog_agent_spark.session import build_session
     from slog_agent_spark.sources.parser import parse_transcripts
@@ -157,7 +157,7 @@ def main() -> None:
     # 2c. sequence packing: the distributed prefix sum must shuffle the
     # corpus-sized relation ONLY on bucket (within-bucket window); the
     # single-partition window runs over the tiny bucket-totals relation.
-    pk = C.pack_chunks_query(spark, sf)
+    pk = Q["corpus_pack_chunks"][0](spark, sf)
     rawpk = plan_of(pk)
     sections.append((
         "sequence packing (`pack_chunks_query`)",
@@ -177,7 +177,7 @@ def main() -> None:
     # the final plan must READ the materialized retention stage —
     # signatures/pairs/retention are each computed once, never re-derived
     # inside the composite (the staged-materialization contract).
-    tc = C.corpus_training_cut_query(spark, sf)
+    tc = Q["corpus_training_cut"][0](spark, sf)
     rawtc = plan_of(tc)
     sections.append((
         "training cut (`corpus_training_cut_query`)",
@@ -216,7 +216,7 @@ def main() -> None:
           m is not None and len(cols.split(",")) <= 2, cols)
 
     # 4. ngram-jaccard join shape
-    nj = C.ngram_jaccard_query(spark, sf)
+    nj = Q["dedup_ngram_jaccard"][0](spark, sf)
     raw4 = plan_of(nj)
     sections.append((
         "n-gram Jaccard dedup (`ngram_jaccard_query`)",
@@ -230,7 +230,7 @@ def main() -> None:
           "ExistingRDD" in raw4 and "array_join" not in raw4, "")
 
     # 5. MinHash LSH join shape
-    mh = C.minhash_lsh_query(spark, sf)
+    mh = Q["dedup_minhash_lsh"][0](spark, sf)
     raw5 = plan_of(mh)
     check("lsh: no cartesian/nested-loop",
           "Cartesian" not in raw5 and "NestedLoop" not in raw5, "")
@@ -246,7 +246,7 @@ def main() -> None:
     # bucket's pairs spread over S² join-key groups — if the block
     # equalities slide into the post-join filter instead of the join key,
     # the salting is decorative and the hot task is back
-    mhs = C.minhash_lsh_salted_query(spark, sf)
+    mhs = Q["dedup_minhash_lsh_salted"][0](spark, sf)
     raw5s = plan_of(mhs)
     check("lsh-salted: no cartesian/nested-loop",
           "Cartesian" not in raw5s and "NestedLoop" not in raw5s, "")
@@ -263,7 +263,7 @@ def main() -> None:
     check("lsh-salted: block cols are join/partition keys", blk_in_key, "")
 
     # 6. SimHash banded-Hamming near-dup join shape
-    sn = C.simhash_neardup_query(spark, sf)
+    sn = Q["dedup_simhash_neardup"][0](spark, sf)
     raw6 = plan_of(sn)
     check("simhash-neardup: no cartesian/nested-loop",
           "Cartesian" not in raw6 and "NestedLoop" not in raw6, "")
@@ -272,7 +272,7 @@ def main() -> None:
 
     # 7. trained IVF: centroid side must broadcast (tiny relation),
     # never a shuffle-heavy sort-merge against the corpus
-    iv = C.ann_ivf_trained_query(spark, sf)
+    iv = Q["ann_topk_ivf_trained"][0](spark, sf)
     raw7 = plan_of(iv)
     check("ivf-trained: centroid joins broadcast",
           "BroadcastHashJoin" in raw7 or "BroadcastNestedLoopJoin" in raw7,
@@ -302,7 +302,7 @@ def main() -> None:
 
     # 8. trained embedding near-dup: assignment staged, so the pair plan
     # must contain NO window (the row_number assignment) and no k-means
-    en = C.emb_neardup_trained_query(spark, sf)
+    en = Q["embedding_neardup_trained"][0](spark, sf)
     raw8 = plan_of(en)
     check("emb-neardup-trained: assignment materialized (no Window)",
           "ExistingRDD" in raw8 and "Window" not in raw8, "")
@@ -311,7 +311,7 @@ def main() -> None:
 
     # 8b. batch ANN: query + centroid relations broadcast; candidates
     # come from joins, never a corpus x corpus cartesian
-    ab = C.ann_topk_batch_query(spark, sf)
+    ab = Q["ann_topk_batch"][0](spark, sf)
     raw8b = plan_of(ab)
     check("ann-batch: broadcasts (query/centroid sides)",
           "BroadcastHashJoin" in raw8b or "BroadcastNestedLoopJoin" in raw8b,
@@ -327,7 +327,7 @@ def main() -> None:
 
     # 8c. contamination scan: postings join on the shingle key, reusing
     # the materialized n-gram sets — no shingle recompute, no cartesian
-    ct = C.contamination_query(spark, sf)
+    ct = Q["corpus_contamination"][0](spark, sf)
     raw8c = plan_of(ct)
     check("contamination: no cartesian/nested-loop",
           "CartesianProduct" not in raw8c and "NestedLoop" not in raw8c, "")
@@ -337,7 +337,7 @@ def main() -> None:
     # 8d. boilerplate span removal: both the shingle-frequency count and
     # the hit join read the MATERIALIZED postings (no per-reference
     # re-explode of the corpus); joins are keyed, never cartesian
-    bl = C.boilerplate_query(spark, sf)
+    bl = Q["corpus_boilerplate"][0](spark, sf)
     raw8d = plan_of(bl)
     sections.append((
         "cross-document boilerplate removal (`corpus_boilerplate`)",
@@ -353,7 +353,7 @@ def main() -> None:
 
     # 8e. as-of enrich: the union+window formulation must contain NO
     # join operator at all — one shuffle on user_id feeds the window
-    ae = C.asof_enrich_query(spark, sf)
+    ae = Q["events_asof_enrich"][0](spark, sf)
     raw8e = plan_of(ae)
     sections.append((
         "as-of enrich (`events_asof_enrich`)",
@@ -372,7 +372,7 @@ def main() -> None:
     # 8e2. segmented as-of: the carry window must be keyed by (user,
     # block) — never user alone (a hot user would serialize into one
     # task); the cross-block carry runs over the tiny block relation
-    aes = C.asof_segmented_query(spark, sf)
+    aes = Q["events_asof_segmented"][0](spark, sf)
     raw8e2 = plan_of(aes)
     sections.append((
         "segmented as-of enrich (`events_asof_segmented`)",
@@ -393,7 +393,7 @@ def main() -> None:
 
     # 8e3. event sessionization: lag + running-sum + rollup must share
     # ONE shuffle (same partition key and ordering throughout)
-    es = C.sessionize_query(spark, sf)
+    es = Q["events_sessionize"][0](spark, sf)
     raw8e3 = plan_of(es)
     n_ex8e3 = len(re.findall(r"Exchange hashpartitioning", raw8e3))
     sections.append((
@@ -408,7 +408,7 @@ def main() -> None:
 
     # 8e4. funnel: one aggregate over per-user event arrays — no joins,
     # no per-step corpus re-scan, exactly one shuffle
-    fu = C.funnel_query(spark, sf)
+    fu = Q["events_funnel"][0](spark, sf)
     raw8e4 = plan_of(fu)
     n_ex8e4 = len(re.findall(r"Exchange hashpartitioning", raw8e4))
     sections.append((
@@ -424,7 +424,7 @@ def main() -> None:
 
     # 8f. bounded-window attribution: bucket equi-join (never an
     # unbounded inequality join / cartesian)
-    wa = C.window_attrib_query(spark, sf)
+    wa = Q["events_window_attrib"][0](spark, sf)
     raw8f = plan_of(wa)
     sections.append((
         "bounded-window attribution (`events_window_attrib`)",
@@ -459,7 +459,7 @@ def main() -> None:
           n_ex8b == 1, f"{n_ex8b} exchanges")
 
     # 9. corpus rollup: one shuffle, map-side partial agg before it
-    cs = C.corpus_stats_query(spark, sf)
+    cs = Q["corpus_stats"][0](spark, sf)
     raw9 = plan_of(cs)
     n_ex9 = len(re.findall(r"Exchange hashpartitioning", raw9))
     check("corpus-stats: exactly one shuffle", n_ex9 == 1, f"{n_ex9} exchanges")
@@ -474,7 +474,7 @@ def main() -> None:
         formatted(cs),
     ))
 
-    qq = C.doc_length_quantiles_query(spark, sf)
+    qq = Q["doc_length_quantiles"][0](spark, sf)
     raw10 = plan_of(qq)
     n_ex10 = len(re.findall(r"Exchange hashpartitioning", raw10))
     check("length-quantiles: exactly one shuffle", n_ex10 == 1,
