@@ -20,7 +20,9 @@ Timed queries mirror `benchmark agent --output null`
 
 Env knobs:
     SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+    SPARK_GRAFT_CPUS     local[] parallelism (default: the cores this
+                         process may run on, so `taskset -c 0-3` alone
+                         selects 4)
     SLOG_BENCH_EXPLODE   turns per event (default 20 → 2M turns at sf0.1:
                          big enough that fixed per-job overhead stays
                          <10% of measured data time at 32 cores, small
@@ -52,8 +54,7 @@ from slog_agent_spark.sources.transcripts import transcripts_df  # noqa: E402
 # cost ~10s and make the reported min a stable steady-state number
 REPEATS = int(os.environ.get("SLOG_BENCH_REPEATS", "5"))
 
-# the timed corpus queries (gate names in plans/corpus.DEFAULT_QUERIES),
-# also bench_extra.py's corpus mode
+# the timed corpus queries (gate names in plans/corpus.DEFAULT_QUERIES)
 CORPUS_QUERIES = (
     "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash_neardup",
     "embedding_neardup_trained", "ann_topk_ivf_trained", "corpus_stats",
@@ -247,6 +248,7 @@ def run_bench(sf_dir: str, cpus: int, explode: int) -> dict:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get(
+        "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     explode = int(os.environ.get("SLOG_BENCH_EXPLODE", "20"))
     print(json.dumps(run_bench(sf_dir, cpus, explode)))

@@ -249,7 +249,7 @@ def minhash_pairs_salted_sql(
     exchange, which AQE refuses to split, and (b) skew detection
     measures COMPRESSED shuffle bytes, and thousands of identical band
     rows compress below any threshold (both verified empirically,
-    tools/skew_bench.py). So the fix must be semantic.
+    BENCH/SKEW.md). So the fix must be semantic.
 
     Block decomposition: each banded row gets a block id ``blk =
     hash(doc_id) % S`` and is replicated once per partner block ``t``.

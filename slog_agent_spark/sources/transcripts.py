@@ -139,7 +139,7 @@ def transcripts_select_sql(
     6 (level ``info``), source ``main.log`` (no task → empty ``pnum``)
     — producing a deliberately Zipf-hot tag/keyset so the salted
     repartition's effect on shuffle skew is measurable
-    (tools/skew_bench.py). The reference's analogue is its per-keyset
+    (BENCH/SKEW.md). The reference's analogue is its per-keyset
     queue fairness under hot keys (reference: DESIGN.md:46-48).
     """
     assert explode >= 1

@@ -3,9 +3,11 @@
 Round-2 judge item: MINHASH_K / LSH_BANDS / SIMHASH_* / IVF_* were
 module constants — "a production run can't resize them without editing
 the package". These tests prove the CorpusParams threading end-to-end:
-MinHash at K=24/6-bands and SimHash at 4×32-bit bands (the documented
+MinHash at K=24/3-bands and SimHash at 4×32-bit bands (the documented
 10^9-doc sizing, operators/dedup.py) run live on BOTH engines and stay
-hash-equal.
+hash-equal. Each liveness test first checks, on DuckDB alone, that its
+params change the oracle's rows on the fixture: otherwise its parity
+assert would pass for a runner left at default sizing.
 """
 
 from __future__ import annotations
@@ -23,6 +25,16 @@ from slog_agent_spark.plans.corpus_config import (
     parse_corpus_config,
 )
 from slog_agent_spark.plans.yaml_config import ConfigError
+
+
+def assert_params_change_oracle(duck, name, params):
+    """The ``name`` oracle's rows at ``params`` differ from its rows at
+    ``DEFAULT_CORPUS_PARAMS``."""
+    def rows(p):
+        sql = build_corpus_queries(p)[name][1]()
+        return sorted(map(repr, duck.execute(sql).fetchall()))
+
+    assert rows(params) != rows(DEFAULT_CORPUS_PARAMS)
 
 
 def test_defaults_match_module_aliases():
@@ -59,15 +71,17 @@ def test_yaml_overrides_and_defaults():
     assert p.simhash_band_bits == DEFAULT_CORPUS_PARAMS.simhash_band_bits
 
 
-def test_minhash_k24_bands6_is_live(spark, duck, sf_dir):
-    """K=24 signatures in 6 bands — the generated SQL must actually
-    carry 24 hashes, and both engines must agree on the pairs."""
+def test_minhash_k24_bands3_is_live(spark, duck, sf_dir):
+    """K=24 signatures in 3 bands — the generated SQL must actually
+    carry 24 hashes, and both engines must agree on the pairs (27 on the
+    fixture, against the default's 28; 6 bands would keep all 28)."""
     params = dataclasses.replace(
-        DEFAULT_CORPUS_PARAMS, minhash_k=24, lsh_bands=6
+        DEFAULT_CORPUS_PARAMS, minhash_k=24, lsh_bands=3
     ).validate()
     sig_sql = dedup.minhash_signatures_sql(SPARK, params=params)
     assert "mh23" in sig_sql and "mh24" not in sig_sql
-    assert len(dedup.band_exprs(SPARK, params)) == 6
+    assert len(dedup.band_exprs(SPARK, params)) == 3
+    assert_params_change_oracle(duck, "dedup_minhash_lsh", params)
 
     run, oracle = build_corpus_queries(params)["dedup_minhash_lsh"]
     assert_df_equals_oracle(run(spark, sf_dir), duck, oracle())
@@ -81,8 +95,8 @@ def test_job_sizing_is_live(spark, duck, sf_dir, name):
     """The corpus job's runner takes the configured sizing: its result
     matches the oracle twin AT those params, whose SQL differs from the
     default's. Each knob changes the fixture's rows (2 bands of 12 rows
-    drop one of the 28 default MinHash pairs; 6 bands keep all 28), so
-    a runner left at default sizing fails."""
+    keep 27 of the 28 default MinHash pairs, 5 of 10 top-k rows, 12 of
+    16 lists), so a runner left at default sizing fails."""
     from jobs.run_corpus import registry
 
     params = dataclasses.replace(
@@ -91,6 +105,7 @@ def test_job_sizing_is_live(spark, duck, sf_dir, name):
     ).validate()
     _, oracle = build_corpus_queries(params)[name]
     assert oracle() != DEFAULT_QUERIES[name][1]()
+    assert_params_change_oracle(duck, name, params)
     assert_df_equals_oracle(registry(params)[name](spark, sf_dir), duck, oracle())
 
 
@@ -105,6 +120,7 @@ def test_simhash_4x32_is_live(spark, duck, sf_dir):
     )
     assert len(items) == 4
     assert str(1 << 31) in items["sb0"]  # the 32nd bit is really produced
+    assert_params_change_oracle(duck, "dedup_simhash_neardup", params)
 
     run, oracle = build_corpus_queries(params)["dedup_simhash_neardup"]
     df = run(spark, sf_dir)
@@ -122,6 +138,7 @@ def test_trained_ivf_params_are_live(spark, duck, sf_dir):
     ).validate()
     cents_sql = similarity.ivf_centroids_sql(SPARK, params=params)
     assert "LIMIT 8" in cents_sql and "% 3 = 0" in cents_sql
+    assert_params_change_oracle(duck, "ann_topk_ivf_trained", params)
 
     run, oracle = build_corpus_queries(params)["ann_topk_ivf_trained"]
     assert_df_equals_oracle(run(spark, sf_dir), duck, oracle())
@@ -140,11 +157,14 @@ def test_retention_floors_are_live(duck):
 
 
 def test_cc_groups_params_are_live(spark, duck, sf_dir):
-    """A lower Jaccard threshold admits more edges — the CC runner and
-    oracle must both honor it and stay hash-equal."""
+    """A higher Jaccard threshold drops edges — the CC runner and
+    oracle must both honor it and stay hash-equal (43 rows on the
+    fixture against the default's 45; any threshold from 0.1 to 0.8
+    gives the default's rows)."""
     params = dataclasses.replace(
-        DEFAULT_CORPUS_PARAMS, jaccard_threshold=0.2
+        DEFAULT_CORPUS_PARAMS, jaccard_threshold=0.9
     ).validate()
+    assert_params_change_oracle(duck, "dedup_groups_cc", params)
     run, oracle = build_corpus_queries(params)["dedup_groups_cc"]
     df = run(spark, sf_dir)
     assert_df_equals_oracle(df, duck, oracle())
@@ -173,6 +193,7 @@ def test_pack_params_are_live(spark, duck, sf_dir):
 
     sql = pack_chunks_sql(SD, params=params)
     assert "% 512" in sql and "16)" in sql
+    assert_params_change_oracle(duck, "corpus_pack_chunks", params)
 
     run, oracle = build_corpus_queries(params)["corpus_pack_chunks"]
     df = run(spark, sf_dir)
@@ -197,6 +218,7 @@ def test_mix_params_are_live(spark, duck, sf_dir):
         "corpus:\n  mixKeepPermille: {en: 0, es: 1000}\n"
     )
     assert dict(params.mix_keep_permille) == {"en": 0, "es": 1000}
+    assert_params_change_oracle(duck, "corpus_mix_sample", params)
     run, oracle = build_corpus_queries(params)["corpus_mix_sample"]
     df = run(spark, sf_dir)
     assert_df_equals_oracle(df, duck, oracle())
@@ -215,16 +237,20 @@ def test_run_corpus_job_with_config_file(spark, duck, sf_dir, tmp_path):
     non-default YAML file → load_corpus_config → run_ops writes parquet
     results that match the oracle twin AT THOSE PARAMS (round-3 judge
     item: the liveness tests covered the SQL generators, never the
-    job-level path)."""
+    job-level path). 26 pairs on the fixture: a runner that ignores the
+    threshold or the bands gives 27, one that ignores both the
+    default's 28."""
     from jobs.run_corpus import run_ops
     from slog_agent_spark.plans.corpus_config import load_corpus_config
 
     yml = tmp_path / "corpus.yml"
     yml.write_text(
-        "corpus:\n  minhashK: 24\n  lshBands: 6\n  jaccardThreshold: 0.5\n"
+        "corpus:\n  minhashK: 24\n  lshBands: 3\n  jaccardThreshold: 0.9\n"
     )
     params = load_corpus_config(str(yml))
-    assert (params.minhash_k, params.lsh_bands) == (24, 6)
+    assert (params.minhash_k, params.lsh_bands, params.jaccard_threshold) == (
+        24, 3, 0.9)
+    assert_params_change_oracle(duck, "dedup_minhash_lsh", params)
 
     out = str(tmp_path / "out")
     counts = run_ops(

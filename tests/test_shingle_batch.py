@@ -164,27 +164,3 @@ def test_bucket_verify_rejects_dims_past_screen_margin(spark):
     with pytest.raises(Exception, match="error bound exceeds its margin"):
         pairs.collect()
 
-
-def test_make_replica_rejects_k_not_below_dims(tmp_path):
-    import importlib.util
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    spec = importlib.util.spec_from_file_location(
-        "make_replica",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "make_replica.py"),
-    )
-    make_replica = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(make_replica)
-    src = tmp_path / "src"
-    src.mkdir()
-    pq.write_table(
-        pa.table({"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.0, 1.0]]}),
-        str(src / "embeddings.parquet"),
-    )
-    dst = tmp_path / "dst"
-    with pytest.raises(ValueError, match="K < dims"):
-        make_replica.replicate(str(src), str(dst), 2)
-    assert not dst.exists()
