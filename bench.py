@@ -23,6 +23,7 @@ Env knobs:
     SPARK_GRAFT_CPUS     local[] parallelism (default: the cores this
                          process may run on, so `taskset -c 0-3` alone
                          selects 4)
+    SLOG_DRIVER_MEM      pre-touched driver heap (default 3g)
     SLOG_BENCH_EXPLODE   turns per event (default 20 → 2M turns at sf0.1:
                          big enough that fixed per-job overhead stays
                          <10% of measured data time at 32 cores, small
@@ -68,6 +69,9 @@ CORPUS_QUERIES = (
 
 def run_bench(sf_dir: str, cpus: int, explode: int) -> dict:
     os.environ.setdefault("SLOG_JVM_TUNED", "1")
+    # the tuned session pre-touches its whole heap: 3g, the size the
+    # BENCH/BASELINE.md scaling pair ran with, not session.py's 8g
+    os.environ.setdefault("SLOG_DRIVER_MEM", "3g")
     spark = build_session(
         app_name="slog-agent-spark-bench",
         master=f"local[{cpus}]",

@@ -113,26 +113,17 @@ def ivf_assign_sql(
 
     Centroids = the first ``params.ivf_centroids`` vectors
     (deterministic, shared with the oracle). The centroid side is tiny →
-    broadcast join at scale. Spark additionally carries the winning
-    cosine through the same min_by struct (field order (nc, cid, cos)
-    keeps the comparison identical to ORDER BY cos DESC, centroid_id).
+    broadcast join at scale. Spark runs the aggregate argmax
+    (:func:`spark_topr_assign_sql`); the oracle keeps the row_number
+    text, which also carries the winning cosine (no consumer reads it).
     """
     if d.name == d.SPARK:
-        cents = (
+        return spark_topr_assign_sql(
+            emb_rel,
             f"(SELECT vec_id AS centroid_id, embedding AS emb "
-            f"FROM {emb_rel} WHERE vec_id < {params.ivf_centroids})"
+            f"FROM {emb_rel} WHERE vec_id < {params.ivf_centroids})",
+            1,
         )
-        e_side, c_side, cos = _spark_prenorm_sides(emb_rel, cents)
-        return f"""
-      SELECT vec_id, picked.cid AS centroid_id, picked.cos AS cos_c FROM (
-        SELECT vec_id,
-               min_by(named_struct('cid', centroid_id, 'cos', cos_c),
-                      named_struct('nc', -cos_c, 'cid', centroid_id))
-                 AS picked
-        FROM (SELECT e.vec_id, c.centroid_id, {cos} AS cos_c
-              FROM {e_side} CROSS JOIN {c_side}) scored
-        GROUP BY vec_id
-      ) agg"""
     cos = cosine_expr(d, "e.embedding", "c.embedding")
     return f"""
     WITH c AS (SELECT vec_id AS centroid_id, embedding
@@ -234,25 +225,9 @@ def kmeans_centroids_ctes(
     # and can collapse the whole sample into one or two natural clusters;
     # hashing makes both the sample and the seed pick pseudo-random while
     # staying engine-portable and deterministic.
-    if d.name == d.SPARK:
-        # prenormalized sample (sn hoisted once per sample vector); the
-        # per-iteration argmax is a min_by aggregate over the broadcast
-        # cross join instead of a row_number window — shuffles |sample|
-        # aggregated rows per round, not |sample| x |centroids| window
-        # rows, and each cosine pays one dot (norms hoisted both sides).
-        # Same selection/tie rule, same 4dp-rounded cosine arithmetic.
-        samp_sql = (
-            f"samp AS (SELECT vec_id, CAST(embedding AS {dbl}) AS emb, "
-            f"{norm_expr(d, 'embedding')} AS sn "
-            f"FROM {emb_rel} WHERE ({vid_hash}) % {sample_mod} = 0)"
-        )
-    else:
-        samp_sql = (
-            f"samp AS (SELECT vec_id, CAST(embedding AS {dbl}) AS emb "
-            f"FROM {emb_rel} WHERE ({vid_hash}) % {sample_mod} = 0)"
-        )
     parts = [
-        samp_sql,
+        f"samp AS (SELECT vec_id, CAST(embedding AS {dbl}) AS emb "
+        f"FROM {emb_rel} WHERE ({vid_hash}) % {sample_mod} = 0)",
         f"c0 AS (SELECT vec_id AS centroid_id, emb FROM ("
         f"SELECT vec_id, emb FROM samp "
         f"ORDER BY {d.md5(d.to_string('vec_id'))}, vec_id "
@@ -260,27 +235,17 @@ def kmeans_centroids_ctes(
     ]
     prev = "c0"
     for t in range(1, iters + 1):
-        cos = cosine_expr(d, "s.emb", "c.emb")
         if d.name == d.SPARK:
-            pcos = (
-                f"round({dot_expr(d, 's.emb', 'c.emb')} / "
-                f"greatest(s.sn * c.cn, 1e-12), 4)"
-            )
             parts.append(
-                f"a{t} AS (SELECT vec_id, "
-                f"min_by(centroid_id, named_struct('nc', -cos_c, "
-                f"'cid', centroid_id)) AS centroid_id FROM ("
-                f"SELECT s.vec_id, c.centroid_id, {pcos} AS cos_c "
-                f"FROM samp s CROSS JOIN (SELECT centroid_id, emb, "
-                f"{norm_expr(d, 'emb')} AS cn FROM {prev}) c) scored "
-                f"GROUP BY vec_id)"
+                f"a{t} AS ({spark_topr_assign_sql('samp', prev, 1, 'emb')})"
             )
         else:
             parts.append(
                 f"a{t} AS (SELECT vec_id, centroid_id FROM ("
                 f"SELECT s.vec_id, c.centroid_id, "
                 f"row_number() OVER (PARTITION BY s.vec_id "
-                f"ORDER BY {cos} DESC, c.centroid_id) AS rn "
+                f"ORDER BY {cosine_expr(d, 's.emb', 'c.emb')} DESC, "
+                f"c.centroid_id) AS rn "
                 f"FROM samp s CROSS JOIN {prev} c) x WHERE rn = 1)"
             )
         if d.name == d.SPARK:
@@ -378,38 +343,14 @@ def ann_ivf_trained_sql(
     """
     k = params.topk if k is None else k
     probes = params.trained_probes if probes is None else probes
-    if n_centroids is None:
-        n_centroids = params.trained_centroids
-    if cents_rel is None:
-        kmeans, cents = kmeans_centroids_ctes(
-            d, emb_rel, n_centroids=n_centroids,
-            sample_mod=params.kmeans_sample_mod, iters=params.kmeans_iters,
-        )
-        prelude = f"WITH {kmeans},"
-    else:
-        cents = cents_rel
-        prelude = "WITH"
-    cos_assign = cosine_expr(d, "e.embedding", "c.emb")
+    prelude, cents = _cents_prelude(d, emb_rel, cents_rel, n_centroids, params)
     cos_q = cosine_prenorm_expr(
         d, "e.embedding", "q.embedding", norm_expr(d, "e.embedding"), "q.qn"
     )
     cos_probe = cosine_expr(d, "c.emb", "q.embedding")
-    if assigned_rel is not None:
-        assigned_body = f"SELECT vec_id, centroid_id FROM {assigned_rel}"
-    elif d.name == d.SPARK:
-        assigned_body = spark_argmax_assign_sql(emb_rel, cents)
-    else:
-        assigned_body = f"""
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_assign} DESC, c.centroid_id) AS rn
-        FROM {emb_rel} e CROSS JOIN {cents} c
-      ) x WHERE rn = 1
-    """
     return f"""
     {prelude}
-    assigned AS ({assigned_body}),
+    assigned AS ({_argmax_body(d, emb_rel, cents, assigned_rel)}),
     q AS (SELECT embedding, {norm_expr(d, "embedding")} AS qn
           FROM {emb_rel} WHERE vec_id = {query_vec_id}),
     probe_set AS (
@@ -522,17 +463,7 @@ def embedding_neardup_trained_sql(
     ~assign_r² × in-bucket pairs, never O(n²); DISTINCT dedups the
     multi-list collisions before the (expensive) cosine verify.
     """
-    if n_centroids is None:
-        n_centroids = params.trained_centroids
-    if cents_rel is None:
-        kmeans, cents = kmeans_centroids_ctes(
-            d, emb_rel, n_centroids=n_centroids,
-            sample_mod=params.kmeans_sample_mod, iters=params.kmeans_iters,
-        )
-        prelude = f"WITH {kmeans},"
-    else:
-        cents = cents_rel
-        prelude = "WITH"
+    prelude, cents = _cents_prelude(d, emb_rel, cents_rel, n_centroids, params)
     assign = ivf_multi_assign_sql(d, emb_rel, cents, assign_r)
     pairs = neardup_pairs_from_assigned_sql(d, "norms", "assigned", threshold)
     return (
@@ -569,44 +500,88 @@ def spark_topr_assign_sql(
     emb_rel: str, cents_rel: str, assign_r: int,
     vec_col: str = "embedding",
 ) -> str:
-    """Spark-only top-r assignment WITHOUT the window-over-cross-join:
-    the r closest centroids per vector via one aggregation over the
-    broadcast nested-loop join — collect the (−cos, centroid) structs
-    per vector (map-side partial, the C rows of a vector never leave
-    their scan partition before reduction), array_sort, slice r,
-    explode. Same selection and tie rule as the row_number form
+    """The Spark top-r assignment over any centroid relation:
+    (vec_id, centroid_id, arank) for each vector's ``assign_r`` closest
+    centroids, arank = 1..assign_r, computed as ONE aggregation over the
+    broadcast nested-loop join (map-side partial: the C rows of a vector
+    never leave their scan partition before reduction) — ``min_by`` of
+    the (−cos, centroid_id) struct for r = 1 (no buffer), else
+    collect_list → array_sort → slice r → posexplode.
+
+    Same selection and tie rule as the oracle's row_number window
     (ORDER BY cos DESC, centroid_id ≡ ascending (−cos, centroid_id);
-    IEEE negation is order-reversing, signed zeros included), but the
-    shuffle carries |vectors| aggregated rows instead of
-    |vectors|×|centroids| window rows, and each cosine costs one dot
-    (norms hoisted per side) instead of three array aggregates."""
+    IEEE negation is order-reversing, signed zeros included); each
+    cosine costs one dot (norms hoisted per side) instead of three
+    array aggregates, and the shuffle carries one partial row per
+    vector and partition (Spark 4.1 gives the ``rn <= r`` window the
+    same cut with a partial WindowGroupLimit — see
+    streaming/ann_stream._assign_batch). Over a materialized centroid
+    table within ``UNROLL_MAX_TERMS``, :func:`assign_df` runs the
+    literal-inlined twin instead."""
     e_side, c_side, cos = _spark_prenorm_sides(emb_rel, cents_rel, vec_col)
+    key = "named_struct('nc', -cos_c, 'cid', centroid_id)"
+    scored = (
+        f"(SELECT e.vec_id, c.centroid_id, {cos} AS cos_c "
+        f"FROM {e_side} CROSS JOIN {c_side}) scored"
+    )
+    if assign_r == 1:
+        return (
+            f"SELECT vec_id, min_by(centroid_id, {key}) AS centroid_id, "
+            f"1 AS arank FROM {scored} GROUP BY vec_id"
+        )
     return f"""
-      SELECT vec_id, s.cid AS centroid_id FROM (
+      SELECT vec_id, s.cid AS centroid_id, pos + 1 AS arank FROM (
         SELECT vec_id,
-               slice(array_sort(collect_list(
-                 named_struct('nc', -cos_c, 'cid', centroid_id))),
-                 1, {assign_r}) AS top
-        FROM (SELECT e.vec_id, c.centroid_id, {cos} AS cos_c
-              FROM {e_side} CROSS JOIN {c_side}) scored
-        GROUP BY vec_id
-      ) t LATERAL VIEW explode(t.top) x AS s"""
+               slice(array_sort(collect_list({key})), 1, {assign_r}) AS top
+        FROM {scored} GROUP BY vec_id
+      ) t LATERAL VIEW posexplode(t.top) x AS pos, s"""
 
 
-def spark_argmax_assign_sql(
-    emb_rel: str, cents_rel: str, vec_col: str = "embedding",
+def _window_assign_sql(
+    d: SqlDialect, emb_rel: str, cents_rel: str, cut: str
 ) -> str:
-    """Spark-only argmax assignment (top-1): min_by over the same
-    (−cos, centroid_id) struct — no collect_list buffer at all."""
-    e_side, c_side, cos = _spark_prenorm_sides(emb_rel, cents_rel, vec_col)
+    """The oracle's assignment: row_number over the (vector, centroid)
+    cross join, kept where ``rn {cut}`` (the callers' texts are pinned
+    byte-for-byte, trailing whitespace included)."""
+    cos_assign = cosine_expr(d, "e.embedding", "c.emb")
     return f"""
-      SELECT vec_id,
-             min_by(centroid_id,
-                    named_struct('nc', -cos_c, 'cid', centroid_id))
-               AS centroid_id
-      FROM (SELECT e.vec_id, c.centroid_id, {cos} AS cos_c
-            FROM {e_side} CROSS JOIN {c_side}) scored
-      GROUP BY vec_id"""
+      SELECT vec_id, centroid_id FROM (
+        SELECT e.vec_id, c.centroid_id,
+               row_number() OVER (PARTITION BY e.vec_id
+                                  ORDER BY {cos_assign} DESC, c.centroid_id) AS rn
+        FROM {emb_rel} e CROSS JOIN {cents_rel} c
+      ) x WHERE rn {cut}"""
+
+
+def _argmax_body(
+    d: SqlDialect, emb_rel: str, cents: str, assigned_rel: str | None,
+    cut: str = "= 1\n    ",
+) -> str:
+    """The ``assigned`` CTE of the single-assignment trained builders:
+    the runner's materialized ``assigned_rel`` when given, else the
+    argmax in the dialect's form."""
+    if assigned_rel is not None:
+        return f"SELECT vec_id, centroid_id FROM {assigned_rel}"
+    if d.name == d.SPARK:
+        return spark_topr_assign_sql(emb_rel, cents, 1)
+    return _window_assign_sql(d, emb_rel, cents, cut)
+
+
+def _cents_prelude(
+    d: SqlDialect, emb_rel: str, cents_rel: str | None,
+    n_centroids: int | None, params: CorpusParams,
+) -> tuple[str, str]:
+    """(WITH prelude, centroid relation) of the trained builders: the
+    runner's materialized ``cents_rel`` when given, else the k-means
+    CTEs inlined (the single-SQL oracle form)."""
+    if cents_rel is not None:
+        return "WITH", cents_rel
+    kmeans, cents = kmeans_centroids_ctes(
+        d, emb_rel,
+        n_centroids=params.trained_centroids if n_centroids is None else n_centroids,
+        sample_mod=params.kmeans_sample_mod, iters=params.kmeans_iters,
+    )
+    return f"WITH {kmeans},", cents
 
 
 def _lit_double(v: float) -> str:
@@ -621,8 +596,8 @@ def unrolled_sorted_structs(
     cent_rows: list[tuple[int, list[float]]],
 ) -> str:
     """The guarded, SORTED (−cos, centroid_id) struct array over
-    literal-inlined centroid coefficients — the shared core of the
-    unrolled assignment forms. Expects the consumer to project
+    literal-inlined centroid coefficients — the core of
+    :func:`unrolled_assign_sql`. Expects the consumer to project
     ``emb`` (the vector as ARRAY<DOUBLE>) and ``en`` (its norm);
     element k of the result is the k-th-closest centroid under the
     exact assignment rule (see :func:`unrolled_assign_sql`)."""
@@ -705,15 +680,15 @@ def unrolled_assign_sql(
     )
     if assign_r == 1:
         return (
-            f"SELECT vec_id, element_at({guarded}, 1).cid AS centroid_id "
-            f"FROM {e_side}"
+            f"SELECT vec_id, element_at({guarded}, 1).cid AS centroid_id, "
+            f"1 AS arank FROM {e_side}"
         )
     return f"""
-      SELECT vec_id, s.cid AS centroid_id FROM (
+      SELECT vec_id, s.cid AS centroid_id, pos + 1 AS arank FROM (
         SELECT vec_id, slice({guarded}, 1, {assign_r}) AS top,
                spark_partition_id() AS __fence
         FROM {e_side}
-      ) t LATERAL VIEW explode(t.top) x AS s
+      ) t LATERAL VIEW posexplode(t.top) x AS pos, s
       WHERE __fence >= 0"""
 
 
@@ -731,18 +706,23 @@ def assign_df(
     assign_r: int = 2,
     vec_col: str = "embedding",
 ):
-    """DataFrame twin of :func:`ivf_multi_assign_sql` (Spark side) over a
-    MATERIALIZED centroid view: reads the centroid values once on the
-    driver and runs :func:`unrolled_assign_sql`. Same rows as the
-    aggregate/window forms (pinned by tests/test_shingle_batch.py).
-    Falls back to the aggregate form when the config's |C| x dims
-    exceeds the inlining budget (UNROLL_MAX_TERMS)."""
-    rows = spark.table(cents_rel).collect()
-    cent_rows = [(r["centroid_id"], list(r["emb"])) for r in rows]
-    if not cent_rows or len(cent_rows) * len(cent_rows[0][1]) > UNROLL_MAX_TERMS:
+    """The Spark assignment over a MATERIALIZED centroid view:
+    :func:`unrolled_assign_sql` over the centroid values read once on
+    the driver, or :func:`spark_topr_assign_sql` when |C| x dims exceeds
+    the inlining budget (``UNROLL_MAX_TERMS``). The budget is checked
+    before the values are fetched: dims comes from one row, and at most
+    ``UNROLL_MAX_TERMS // dims + 1`` rows are collected. Both forms
+    return the same (vec_id, centroid_id, arank) rows (pinned by
+    tests/test_shingle_batch.py)."""
+    cents = spark.table(cents_rel)
+    first = cents.selectExpr("size(emb) AS dims").first()
+    dims = max(first["dims"], 1) if first else 1
+    rows = cents.limit(UNROLL_MAX_TERMS // dims + 1).collect()
+    if not rows or len(rows) * dims > UNROLL_MAX_TERMS:
         return spark.sql(
             spark_topr_assign_sql(emb_rel, cents_rel, assign_r, vec_col)
         )
+    cent_rows = [(r["centroid_id"], list(r["emb"])) for r in rows]
     return spark.sql(
         unrolled_assign_sql(cent_rows, emb_rel, assign_r, vec_col=vec_col)
     )
@@ -751,22 +731,15 @@ def assign_df(
 def ivf_multi_assign_sql(
     d: SqlDialect, emb_rel: str, cents_rel: str, assign_r: int = 2
 ) -> str:
-    """Multi-assignment stage: (vec_id, centroid_id) for each vector's
-    ``assign_r`` closest centroids. Staged separately so the Spark
-    runner can materialize it: the pair join reads it from BOTH sides.
-    Spark uses the aggregate top-r form (see spark_topr_assign_sql);
-    the oracle keeps the row_number-over-cross-join text."""
+    """Multi-assignment stage: each vector's ``assign_r`` closest
+    centroids. Staged separately so the Spark runner can materialize it:
+    the pair join reads it from BOTH sides. Spark runs the aggregate
+    top-r (:func:`spark_topr_assign_sql`, which adds the rank as
+    ``arank``); the oracle keeps the row_number-over-cross-join text,
+    (vec_id, centroid_id)."""
     if d.name == d.SPARK:
-        return spark_topr_assign_sql(emb_rel, cents_rel, assign_r,
-                                     vec_col="embedding")
-    cos_assign = cosine_expr(d, "e.embedding", "c.emb")
-    return f"""
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_assign} DESC, c.centroid_id) AS rn
-        FROM {emb_rel} e CROSS JOIN {cents_rel} c
-      ) x WHERE rn <= {assign_r}"""
+        return spark_topr_assign_sql(emb_rel, cents_rel, assign_r)
+    return _window_assign_sql(d, emb_rel, cents_rel, f"<= {assign_r}")
 
 
 def neardup_pairs_from_assigned_sql(
@@ -967,28 +940,16 @@ def ivf_occupancy_sql(
     histogram, the same way choose_salt_buckets reads the keyset
     histogram.
 
-    Scale shape: one broadcast argmax assignment (the corpus never
-    shuffles for the window — row_number partitions by vec_id within
-    the scan) + one groupBy over |centroids| keys with map-side
+    Scale shape: one argmax assignment (the Spark runner's
+    literal-inlined projection over the materialized centroids: no join,
+    no shuffle) + one groupBy over |centroids| keys with map-side
     partials. Permille is integer fixed-point so the report stays
     hash-stable cross-engine.
     """
-    if cents_rel is None:
-        kmeans, cents = kmeans_centroids_ctes(
-            d, emb_rel, n_centroids=params.trained_centroids,
-            sample_mod=params.kmeans_sample_mod, iters=params.kmeans_iters,
-        )
-        prelude = f"WITH {kmeans},"
-    else:
-        cents = cents_rel
-        prelude = "WITH"
-    if assigned_rel is not None:
-        assign = f"SELECT vec_id, centroid_id FROM {assigned_rel}"
-    else:
-        assign = ivf_multi_assign_sql(d, emb_rel, cents, assign_r=1)
+    prelude, cents = _cents_prelude(d, emb_rel, cents_rel, None, params)
     return f"""
     {prelude}
-    assigned AS ({assign}),
+    assigned AS ({_argmax_body(d, emb_rel, cents, assigned_rel, "<= 1")}),
     tot AS (SELECT count(*) AS n FROM assigned)
     SELECT centroid_id,
            CAST(count(*) AS BIGINT) AS n_vectors,
@@ -1025,36 +986,14 @@ def ann_topk_batch_sql(
     """
     k = params.topk if k is None else k
     probes = params.trained_probes if probes is None else probes
-    if cents_rel is None:
-        kmeans, cents = kmeans_centroids_ctes(
-            d, emb_rel, n_centroids=params.trained_centroids,
-            sample_mod=params.kmeans_sample_mod, iters=params.kmeans_iters,
-        )
-        prelude = f"WITH {kmeans},"
-    else:
-        cents = cents_rel
-        prelude = "WITH"
-    cos_assign = cosine_expr(d, "e.embedding", "c.emb")
+    prelude, cents = _cents_prelude(d, emb_rel, cents_rel, None, params)
     cos_probe = cosine_expr(d, "c.emb", "q.embedding")
     cos_q = cosine_prenorm_expr(
         d, "n.embedding", "q.embedding", "n.nrm", "q.qn"
     )
-    if assigned_rel is not None:
-        assigned_body = f"SELECT vec_id, centroid_id FROM {assigned_rel}"
-    elif d.name == d.SPARK:
-        assigned_body = spark_argmax_assign_sql(emb_rel, cents)
-    else:
-        assigned_body = f"""
-      SELECT vec_id, centroid_id FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_assign} DESC, c.centroid_id) AS rn
-        FROM {emb_rel} e CROSS JOIN {cents} c
-      ) x WHERE rn = 1
-    """
     return f"""
     {prelude}
-    assigned AS ({assigned_body}),
+    assigned AS ({_argmax_body(d, emb_rel, cents, assigned_rel)}),
     q AS (SELECT vec_id AS q_id, embedding, {norm_expr(d, "embedding")} AS qn
           FROM {emb_rel} WHERE vec_id < {n_queries}),
     probe_set AS (

@@ -133,8 +133,9 @@ def emb_neardup_trained_query(
     _run_stages(spark, [
         ("ivf_centroids", partial(similarity.ivf_centroids_sql, params=params)),
         # literal-inlined top-r assignment over the materialized
-        # centroids (pure codegen projection; same rows as the
-        # aggregate form — see similarity.unrolled_assign_sql)
+        # centroids (pure codegen projection; same rows as the Spark
+        # aggregate form and the oracle's row_number text — see
+        # similarity.assign_df)
         ("ivf_assigned", _df_stage(partial(similarity.assign_df, assign_r=2))),
         ("emb_norms", similarity.emb_norms_sql),
     ])
@@ -286,9 +287,9 @@ def build_corpus_queries(params):
     def ivf_staged(builder):
         # the trained-ANN runners stage the argmax ASSIGNMENT as well as
         # the centroids: the materialized centroid values are inlined as
-        # literal coefficients (similarity.unrolled_assign_sql — pure
-        # codegen projection, no interpreted lambda fold, no join), same
-        # rows as the aggregate form the single-SQL oracle text keeps. (A
+        # literal coefficients (similarity.assign_df — pure codegen
+        # projection, no interpreted lambda fold, no join), same rows as
+        # the row_number text the single-SQL oracle keeps. (A
         # per-iteration materialized k-means with the same inlining was
         # measured SLOWER — the extra round-trips exceed the
         # interpreted-fold savings at the documented training-sample

@@ -10,18 +10,21 @@ at a time —
   same deterministic k-means the batch queries use; at cluster scale
   the centroid table broadcasts to every assignment job).
 - INGEST per micro-batch (:func:`ann_ingest_batch_handler`): assign the
-  batch's vectors to their argmax list — exactly the batch ``assigned``
-  CTE's rule (same 4-dp rounded cosine, same centroid_id tie-break), on
-  the BATCH only; an assignment depends on nothing but the vector and
-  the frozen centroids, so stream order cannot change it — hoist each
-  vector's norm, and append to ``<store>/vectors`` partitioned by
-  (batch_id, centroid_id). Exactly-once: dynamic partition overwrite
-  by batch_id, the same replay discipline as every store in
-  streaming/stream.py.
-- QUERY any time (:func:`ann_query_store`): rank lists per query from
-  the tiny centroid table, read the store PARTITION-PRUNED to the
-  probed centroid_ids — the scan is the probed lists, never the corpus
-  — and rank with the stored norms. Value-identical to the batch
+  batch's vectors to their nearest list(s) — the batch engine's rule
+  (same 4-dp rounded cosine, same centroid_id tie-break) as a
+  row_number window (measured against the aggregate form in
+  :func:`_assign_batch`), on the BATCH only; an assignment depends on
+  nothing but the vector and the frozen centroids, so stream order
+  cannot change it — hoist each vector's norm, and append to
+  ``<store>/vectors`` partitioned by (batch_id, centroid_id).
+  Exactly-once: dynamic partition overwrite by batch_id, the same
+  replay discipline as every store in streaming/store.py.
+- QUERY any time (:func:`ann_query_store`): pick each query's probed
+  lists with the batch engine's aggregate top-r
+  (similarity.spark_topr_assign_sql, r = probes) over the tiny
+  centroid table, read the store PARTITION-PRUNED to the probed
+  centroid_ids — the scan is the probed lists, never the corpus — and
+  rank with the stored norms. Value-identical to the batch
   ``ann_topk_batch`` query over the same corpus and centroids (pinned
   by tests/test_ann_stream.py).
 - COMPACT between drains (:func:`compact_ann_store`): the shared
@@ -76,10 +79,6 @@ def train_ann_centroids(
     cents.coalesce(1).write.mode("overwrite").parquet(cents_path)
 
 
-def _read_cents(spark: SparkSession, cents_path: str) -> DataFrame:
-    return spark.read.parquet(cents_path)
-
-
 def _assign_batch(batch_df: DataFrame, cents_path: str, assign_r: int):
     """Multi-assignment of a micro-batch against the frozen centroids:
     (vec_id, label, embedding, nrm, centroid_id, arank) with
@@ -87,9 +86,20 @@ def _assign_batch(batch_df: DataFrame, cents_path: str, assign_r: int):
     rounded cosine, same centroid_id tie-break) applied to the batch's
     vectors only.
 
-    Deliberately the window form, NOT the batch side's
-    literal-inlined projection (similarity.unrolled_assign_sql): a
-    micro-batch re-PLANS its assignment every batch, and the inlined
+    Deliberately the row_number window, not the batch engine's
+    aggregate top-r (similarity.spark_topr_assign_sql) joined back to
+    the batch: on Spark 4.1 the ``rn <= r`` window is planned with a
+    partial WindowGroupLimit below its exchange, so it already shuffles
+    at most r rows per vector, and the aggregate form's join-back adds
+    a second scan of the batch and a broadcast. Interleaved sf0.01
+    drains of 3 micro-batches (4 cores, window vs aggregate, medians):
+    ingest 2.48 vs 2.49 s and 3.04 vs 3.04 s (10 pairs each); near-dup
+    (assign_r = 2) 4.73 vs 5.07 s (10 pairs), and with sort_array in
+    place of array_sort 5.14 vs 5.67 s (10 pairs) and 4.61 vs 4.76 s
+    (12 rounds).
+
+    Nor the literal-inlined projection (similarity.unrolled_assign_sql):
+    a micro-batch re-PLANS its assignment every batch, and the inlined
     form's |C| x dims-term expression costs more to plan per batch
     than the interpreted folds it saves on a few hundred vectors —
     measured 9.5s vs 8.3s for an interleaved 4-batch drain. The
@@ -97,7 +107,7 @@ def _assign_batch(batch_df: DataFrame, cents_path: str, assign_r: int):
     (the batch staged queries)."""
     spark = batch_df.sparkSession
     batch_df.createOrReplaceTempView("ann_batch_embs")
-    _read_cents(spark, cents_path).createOrReplaceTempView("ann_cents")
+    spark.read.parquet(cents_path).createOrReplaceTempView("ann_cents")
     cos_assign = similarity.cosine_expr(SPARK_D, "e.embedding", "c.emb")
     nrm = similarity.norm_expr(SPARK_D, "embedding")
     return spark.sql(f"""
@@ -265,29 +275,19 @@ def ann_query_store(
     """
     k = params.topk if k is None else k
     probes = params.trained_probes if probes is None else probes
-    path = f"{store_dir}/vectors"
-    _store.heal_swapped_dir(path)
     # arank=1 rows are each vector's canonical (argmax-list) placement —
     # the batch query's rn=1 assignment; higher ranks exist only for the
     # near-dup handler's bucket overlap
-    store = spark.read.parquet(path).where(F.col("arank") == 1)
-    _read_cents(spark, cents_path).createOrReplaceTempView("ann_cents")
-
-    # query relation: tiny (vec_id pushdown on the parquet scan)
-    q = store.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), "embedding",
-        F.col("nrm").alias("qn"),
+    store = _store.read_table(spark, f"{store_dir}/vectors").where(
+        F.col("arank") == 1
     )
-    q.createOrReplaceTempView("ann_q")
-    cos_probe = similarity.cosine_expr(SPARK_D, "c.emb", "q.embedding")
-    probe_set = spark.sql(f"""
-    SELECT q_id, centroid_id FROM (
-      SELECT q.q_id, c.centroid_id,
-             row_number() OVER (PARTITION BY q.q_id
-                                ORDER BY {cos_probe} DESC, c.centroid_id) AS rn
-      FROM ann_cents c CROSS JOIN ann_q q
-    ) rp WHERE rn <= {probes}
-    """).localCheckpoint()
+    spark.read.parquet(cents_path).createOrReplaceTempView("ann_cents")
+    # query relation: tiny (vec_id pushdown on the parquet scan)
+    store.where(F.col("vec_id") < n_queries).createOrReplaceTempView("ann_q")
+    # each query's ``probes`` nearest lists: the aggregate top-r
+    probe_set = spark.sql(
+        similarity.spark_topr_assign_sql("ann_q", "ann_cents", probes)
+    ).localCheckpoint()
     probe_set.createOrReplaceTempView("ann_probe_set")
 
     # partition-pruned store read: only the probed lists are scanned
@@ -303,17 +303,17 @@ def ann_query_store(
     pruned.createOrReplaceTempView("ann_pruned")
 
     cos_q = similarity.cosine_prenorm_expr(
-        SPARK_D, "n.embedding", "q.embedding", "n.nrm", "q.qn"
+        SPARK_D, "n.embedding", "q.embedding", "n.nrm", "q.nrm"
     )
     return spark.sql(f"""
     SELECT q_id, vec_id, label, cosine FROM (
-      SELECT p.q_id, n.vec_id, n.label, {cos_q} AS cosine,
-             row_number() OVER (PARTITION BY p.q_id
+      SELECT p.vec_id AS q_id, n.vec_id, n.label, {cos_q} AS cosine,
+             row_number() OVER (PARTITION BY p.vec_id
                                 ORDER BY {cos_q} DESC, n.vec_id) AS rnk
       FROM ann_probe_set p
       JOIN ann_pruned n ON n.centroid_id = p.centroid_id
-                       AND n.vec_id != p.q_id
-      JOIN ann_q q ON q.q_id = p.q_id
+                       AND n.vec_id != p.vec_id
+      JOIN ann_q q ON q.vec_id = p.vec_id
     ) ranked WHERE rnk <= {k}
     """)
 

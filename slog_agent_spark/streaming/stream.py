@@ -109,8 +109,7 @@ def stream_metrics_total(
     from ..plans.config import DEFAULT_CONFIG
 
     cfg = cfg or DEFAULT_CONFIG
-    _store.heal_swapped_dir(f"{sink_dir}/metrics")
-    df = spark.read.parquet(f"{sink_dir}/metrics")
+    df = _store.read_table(spark, f"{sink_dir}/metrics")
     keys = list(cfg.orchestration_keys) + list(cfg.metric_keys)
     counters = [c for c in df.columns if c not in keys + ["batch_id"]]
     return df.groupBy(*keys).agg(
@@ -590,10 +589,8 @@ def docdedup_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     value-identical to the batch ``dedup_exact`` query over the union
     of every drained input, regardless of micro-batch arrival order
     (each batch's (min, count) partial commutes through min/sum)."""
-    path = f"{store_dir}/hashes"
-    _store.heal_swapped_dir(path)
     return (
-        spark.read.parquet(path)
+        _store.read_table(spark, f"{store_dir}/hashes")
         .groupBy("content_hash")
         .agg(
             F.min("keep_doc_id").alias("keep_doc_id"),
@@ -905,9 +902,7 @@ def training_cut_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     chunk_offset — column-identical to the batch
     ``corpus_training_cut`` result, and value-identical when the
     stream drained in ascending doc_id ranges (see handler docstring)."""
-    path = f"{store_dir}/cut"
-    _store.heal_swapped_dir(path)
-    return spark.read.parquet(path).select(
+    return _store.read_table(spark, f"{store_dir}/cut").select(
         "doc_id", "retained", "mix_kept", "selected",
         "n_tokens", "chunk_id", "chunk_offset",
     )
@@ -1147,10 +1142,8 @@ def boilerplate_freq_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     """Canonical shingle document frequencies from the streamed partials
     (sum per shingle) — value-identical to the batch operator's
     frequency relation under any arrival order."""
-    path = f"{store_dir}/freq"
-    _store.heal_swapped_dir(path)
     return (
-        spark.read.parquet(path)
+        _store.read_table(spark, f"{store_dir}/freq")
         .groupBy("shingle")
         .agg(F.sum("n_docs").alias("n_docs"))
     )

@@ -151,3 +151,36 @@ def test_streaming_emb_neardup_equals_batch(spark, sf_dir):
             (r["q_id"], r["vec_id"], r["label"], r["cosine"])
             for r in ann_query_store(spark, store, cents).collect()
         ) == want_topk
+
+
+
+def test_query_probe_set_runs_no_window(spark, sf_dir, monkeypatch):
+    """ann_query_store picks each query's probed lists with the batch
+    engine's aggregate top-r (similarity.spark_topr_assign_sql, r =
+    probes): its plan holds an Aggregate and no Window node."""
+    from slog_agent_spark.operators import similarity
+    from slog_agent_spark.plans.corpus_config import DEFAULT_CORPUS_PARAMS
+
+    texts = []
+    topr = similarity.spark_topr_assign_sql
+
+    def recording_topr(emb_rel, cents_rel, assign_r, *args):
+        texts.append((emb_rel, assign_r, topr(emb_rel, cents_rel, assign_r,
+                                              *args)))
+        return texts[-1][2]
+
+    monkeypatch.setattr(similarity, "spark_topr_assign_sql", recording_topr)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    with tempfile.TemporaryDirectory() as work:
+        cents, store = f"{work}/cents", f"{work}/store"
+        train_ann_centroids(spark, emb, cents)
+        ann_ingest_batch_handler(store, cents)(emb, 0)
+        texts.clear()
+        assert ann_query_store(spark, store, cents).count() > 0
+        assert [(rel, r) for rel, r, _ in texts] == [
+            ("ann_q", DEFAULT_CORPUS_PARAMS.trained_probes)]
+        plan = spark.sql(texts[0][2])._jdf.queryExecution().optimizedPlan()
+    nodes = [ln.lstrip(" :+-").split(" ")[0]
+             for ln in plan.toString().splitlines()]
+    assert "Window" not in nodes
+    assert any(n.endswith("Aggregate") for n in nodes)

@@ -98,6 +98,89 @@ def test_unrolled_assign_matches_aggregate_form(embs):
         assert len(a) > 0
 
 
+def test_assign_df_checks_budget_before_fetching(embs, monkeypatch):
+    """Over the inlining budget, assign_df runs the aggregate helper, and
+    it never fetches more centroid rows than the budget admits plus one
+    (dims read from one row first)."""
+    cents = embs.sql(similarity.ivf_centroids_sql(SPARK)).localCheckpoint()
+    cents.createOrReplaceTempView("ivf_centroids_b")
+    n, dims = cents.count(), len(cents.first()["emb"])
+    budget = n * dims // 3
+    monkeypatch.setattr(similarity, "UNROLL_MAX_TERMS", budget)
+    frame = type(cents)
+    collect, fetched = frame.collect, []
+
+    def counting_collect(self):
+        rows = collect(self)
+        fetched.append(len(rows))
+        return rows
+
+    for r in (1, 2):
+        monkeypatch.setattr(frame, "collect", counting_collect)
+        got = similarity.assign_df(
+            embs, cents_rel="ivf_centroids_b", assign_r=r)
+        monkeypatch.setattr(frame, "collect", collect)
+        assert fetched and max(fetched) <= budget // dims + 1 < n
+        want = embs.sql(similarity.spark_topr_assign_sql(
+            "embeddings", "ivf_centroids_b", r))
+        assert _rows(got, "vec_id", "arank") == _rows(want, "vec_id", "arank")
+        assert got.count() > 0
+        fetched.clear()
+
+
+def test_assignment_forms_agree_on_exact_ties(spark):
+    """Exact cosine ties (two identical centroids, a vector orthogonal to
+    every centroid, one whose cosines round to a signed zero) resolve to
+    the lower centroid_id in every form: the aggregate helper (r = 1, 2),
+    the literal-inlined projection and the oracle's row_number text."""
+    import duckdb
+
+    from slog_agent_spark.functions.dialect import DUCKDB
+
+    cent_rows = [(0, [0.0, 1.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0, 0.0]),
+                 (2, [1.0, 0.0, 0.0, 0.0]), (3, [0.0, 0.0, 1.0, 0.0])]
+    vecs = {10: [1.0, 0.0, 0.0, 0.0], 11: [0.0, 0.0, 0.0, 1.0],
+            12: [1.0, 1.0, 0.0, 0.0], 13: [-1e-5, 0.0, 0.0, 1.0],
+            14: [0.0, 0.0, 1.0, 0.0], 15: [0.0, -1.0, 0.0, 0.0]}
+    want = {10: [1, 2], 11: [0, 1], 12: [0, 1], 13: [0, 1], 14: [3, 0],
+            15: [1, 2]}
+    spark.createDataFrame(
+        cent_rows, "centroid_id long, emb array<double>"
+    ).createOrReplaceTempView("tie_cents")
+    spark.createDataFrame(
+        list(vecs.items()), "vec_id long, embedding array<float>"
+    ).createOrReplaceTempView("tie_embs")
+
+    def ranked(rows):
+        out: dict[int, list[int]] = {}
+        for vec_id, centroid_id, arank in sorted(rows, key=lambda t: (t[0], t[2])):
+            out.setdefault(vec_id, []).append(centroid_id)
+            assert len(out[vec_id]) == arank
+        return out
+
+    for r in (1, 2):
+        top = {v: c[:r] for v, c in want.items()}
+        helper = spark.sql(similarity.spark_topr_assign_sql(
+            "tie_embs", "tie_cents", r))
+        unrolled = spark.sql(similarity.unrolled_assign_sql(
+            cent_rows, "tie_embs", r))
+        assert ranked(_rows(helper, "vec_id")) == top
+        assert ranked(_rows(unrolled, "vec_id")) == top
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE tie_cents (centroid_id BIGINT, emb DOUBLE[])")
+    con.execute("CREATE TABLE tie_embs (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO tie_cents VALUES (?, ?)", cent_rows)
+    con.executemany("INSERT INTO tie_embs VALUES (?, ?)", list(vecs.items()))
+    oracle = {}
+    for r in (1, 2):
+        for vec_id, centroid_id in con.execute(similarity.ivf_multi_assign_sql(
+                DUCKDB, "tie_embs", "tie_cents", r)).fetchall():
+            if centroid_id not in oracle.setdefault(vec_id, []):
+                oracle[vec_id].append(centroid_id)
+    assert oracle == want
+
+
 def test_codegen_span_barrier_is_row_invisible(spark, monkeypatch):
     """apply_chain_spark's observe barrier must never change rows; the
     flagship chain gets exactly one, a chain of at most
