@@ -85,9 +85,11 @@ watermarked, pipeline/wire/neardup are foreachBatch exactly-once):
                Spark's native stream-stream interval join (watermarked
                self-join, state bounded by the horizon); pair set equal
                to the batch events_window_attrib over inputs ordered
-               within the lateness bound (600s default — size it to
-               the input's disorder; later arrivals are dropped by
-               the watermark)
+               within the lateness bound; this mode runs
+               attrib_stream's 600 s default and has no flag for it
+               (library callers pass late_sec to
+               streaming/stream.attrib_stream); later arrivals are
+               dropped by the watermark
     dedup      at-least-once redelivery guard
                (dropDuplicatesWithinWatermark on conv_id/turn_idx)
     counters   event-time windowed per-role counters
@@ -117,8 +119,8 @@ def main(argv: list[str]) -> int:
     # mode -> (source, sink): the sink is a foreachBatch handler built
     # from the parsed args, or None for append-mode parquet at --output
     drains = {
-        "pipeline": (transcripts, lambda a: S.pipeline_batch_handler(
-            a.output, with_metrics=True)),
+        "pipeline": (transcripts,
+                     lambda a: S.pipeline_batch_handler(a.output)),
         "wire": (transcripts, lambda a: S.wire_batch_handler(
             a.output, salts=a.salts, wire_format=a.wire_format)),
         "neardup": (docs, lambda a: S.neardup_batch_handler(a.output)),

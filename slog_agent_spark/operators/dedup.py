@@ -679,17 +679,6 @@ def corpus_retention_final(
     """
 
 
-def corpus_retention_from_pairs_sql(
-    d: SqlDialect, docs_rel: str, pairs_rel: str,
-    params: CorpusParams = DEFAULT_CORPUS_PARAMS,
-) -> str:
-    """Retention decision over a (materialized) near-dup pair relation."""
-    return (
-        f"WITH {corpus_retention_ctes(d, docs_rel, pairs_rel)} "
-        + corpus_retention_final(d, params)
-    )
-
-
 def corpus_retention_from_sigs_sql(
     d: SqlDialect, docs_rel: str, sigs_rel: str,
     params: CorpusParams = DEFAULT_CORPUS_PARAMS,

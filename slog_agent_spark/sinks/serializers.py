@@ -158,13 +158,3 @@ def datadog_event(
     return d.concat(
         d.lit("{"), _concat_ws(d, ",", parts + [ts_ms]), d.lit("}")
     )
-
-
-def output_counters_sql_parts(d: SqlDialect, json_col: str) -> dict[str, str]:
-    """Aggregate exprs for per-output counters (reference:
-    base/logprocesscounterset.go:146-154): serialized bytes + record count.
-    """
-    return {
-        "serialized_records": "count(*)",
-        "serialized_bytes": f"sum({d.length(json_col)})",
-    }

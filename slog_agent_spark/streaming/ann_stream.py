@@ -17,8 +17,6 @@ at a time —
   nothing but the vector and the frozen centroids, so stream order
   cannot change it — hoist each vector's norm, and append to
   ``<store>/vectors`` partitioned by (batch_id, centroid_id).
-  Exactly-once: dynamic partition overwrite by batch_id, the same
-  replay discipline as every store in streaming/store.py.
 - QUERY any time (:func:`ann_query_store`): pick each query's probed
   lists with the batch engine's aggregate top-r
   (similarity.spark_topr_assign_sql, r = probes) over the tiny
@@ -27,9 +25,9 @@ at a time —
   rank with the stored norms. Value-identical to the batch
   ``ann_topk_batch`` query over the same corpus and centroids (pinned
   by tests/test_ann_stream.py).
-- COMPACT between drains (:func:`compact_ann_store`): the shared
-  bounded-generation fold (streaming/store.py) keeps one base
-  generation per list, sorted by vec_id for row-group skipping.
+- COMPACT: ``store.compact(spark, store_dir, STORES["ann"])`` folds
+  the vectors (and the near-dup pairs) into one base generation per
+  list, sorted by vec_id for row-group skipping.
 
 Reference analogy: the agent's persistent keyed buffer dirs (ref:
 buffer/hybridbuffer/bufferer.go:104-132) — state partitioned by the
@@ -122,33 +120,22 @@ def _assign_batch(batch_df: DataFrame, cents_path: str, assign_r: int):
     """)
 
 
-def ann_ingest_batch_handler(
-    store_dir: str,
-    cents_path: str,
-    params: CorpusParams = DEFAULT_CORPUS_PARAMS,
-    assign_r: int = 1,
-    stats: list | None = None,
-):
-    """foreachBatch handler: assign the batch's vectors to their
-    ``assign_r`` nearest IVF lists and append them to the bucketed
-    vector store (arank column records the assignment rank; top-k
-    queries use the arank=1 rows, the near-dup handler compares within
-    any shared list).
+def ann_ingest_batch_handler(store_dir: str, cents_path: str):
+    """foreachBatch handler: assign each of the batch's vectors to its
+    nearest IVF list and append them to the bucketed vector store
+    (arank = 1, the rank the top-k queries read; the near-dup handler
+    also writes higher ranks, to compare within any shared list).
 
     Per-batch cost is |batch| x |centroids| cosines (the centroid side
-    is tiny and broadcast) + one write of |batch| x assign_r rows —
-    independent of accumulated store size; the store is never read on
-    ingest.
+    is tiny and broadcast) + one write of |batch| rows — independent of
+    accumulated store size; the store is never read on ingest.
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = _assign_batch(batch_df, cents_path, assign_r)
-        _store.commit_batch(assigned, store_dir, _VECTORS, batch_id)
-        if stats is not None:
-            stats.append({
-                "batch_id": batch_id,
-                "n_ingested": assigned.where("arank = 1").count(),
-            })
+        _store.commit_batch(
+            _assign_batch(batch_df, cents_path, 1), store_dir, _VECTORS,
+            batch_id,
+        )
 
     return handle
 
@@ -158,7 +145,6 @@ def ann_neardup_batch_handler(
     cents_path: str,
     threshold: float = 0.3,
     assign_r: int = 2,
-    params: CorpusParams = DEFAULT_CORPUS_PARAMS,
     stats: list | None = None,
 ):
     """foreachBatch handler for INCREMENTAL embedding-cosine near-dup —
@@ -178,9 +164,8 @@ def ann_neardup_batch_handler(
     batch's assignments touch — the same probed-list shape as an IVF
     query, bounded by |batch| x assign_r lists, never the corpus; the
     verify needs no second fetch because every pruned row carries its
-    embedding and norm. Exactly-once: both tables partition by batch_id
-    (dynamic overwrite), store reads exclude the current batch_id.
-    ``stats`` receives per-batch candidate/scan counts.
+    embedding and norm. ``stats`` receives per-batch candidate/scan
+    counts.
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -278,7 +263,7 @@ def ann_query_store(
     # arank=1 rows are each vector's canonical (argmax-list) placement —
     # the batch query's rn=1 assignment; higher ranks exist only for the
     # near-dup handler's bucket overlap
-    store = _store.read_table(spark, f"{store_dir}/vectors").where(
+    store = _store.drained_table(spark, f"{store_dir}/vectors").where(
         F.col("arank") == 1
     )
     spark.read.parquet(cents_path).createOrReplaceTempView("ann_cents")
@@ -316,34 +301,3 @@ def ann_query_store(
       JOIN ann_q q ON q.vec_id = p.vec_id
     ) ranked WHERE rnk <= {k}
     """)
-
-
-def compact_ann_store(
-    spark: SparkSession, store_dir: str, mode: str = "incremental"
-) -> dict:
-    """Fold the vector store's (and, when the near-dup handler runs,
-    the pair store's) committed per-batch partitions into the bounded
-    base generation (shared primitive, streaming/store.py); each list's
-    base files are sorted by vec_id for parquet row-group skipping.
-    Run between drains."""
-    return _store.compact(spark, store_dir, _store.ANN, mode)
-
-
-def run_stream_ann_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    cents_path: str,
-    params: CorpusParams = DEFAULT_CORPUS_PARAMS,
-    neardup: bool = False,
-) -> None:
-    """Drain an embedding stream (vec_id, label, embedding) into the IVF
-    vector store (availableNow trigger); with ``neardup`` the near-dup
-    handler also emits cosine pairs per micro-batch."""
-    _store.drain(
-        stream_embeddings(spark, input_dir), checkpoint_dir,
-        ann_neardup_batch_handler(store_dir, cents_path, params=params)
-        if neardup
-        else ann_ingest_batch_handler(store_dir, cents_path, params),
-    )

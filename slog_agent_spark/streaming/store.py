@@ -83,8 +83,15 @@ def _under(prefix: str, spec: dict[str, Table]) -> list[Table]:
 # per micro-batch, more directories; compaction bounds file counts
 # regardless.
 _CUT = Table("cut", "doc_bkt", 64, ("doc_id",), ("doc_id",))
+# events keep their per-``tag`` partitions through the fold (per-sink
+# consumers prune on them), sorted within each tag by (conv_id,
+# turn_idx) for turn-ordered row-group skipping; metric partials fold to
+# one file, and since stream_metrics_total is a pure sum over them the
+# fold cannot change the rollup
 EVENTS = _spec(Table("events", "tag", sort=("conv_id", "turn_idx")),
                Table("metrics"))
+# bands sort by band_key within each bucket, so post-fold lookups skip
+# row groups via parquet min/max stats on top of partition pruning
 NEARDUP = _spec(Table("sigs", "doc_bkt", 64, ("doc_id",)),
                 Table("bands", "band_bkt", 64, ("band_key",), ("band_key",)),
                 Table("pairs"))
@@ -158,6 +165,15 @@ def read_table(spark: SparkSession, path: str) -> DataFrame | None:
         return spark.read.parquet(path)
     except AnalysisException:
         return None
+
+
+def drained_table(spark: SparkSession, path: str) -> DataFrame:
+    """:func:`read_table` for a rollup: a table no drain has written
+    yet is an error naming its path."""
+    df = read_table(spark, path)
+    if df is None:
+        raise FileNotFoundError(f"no drained store table at {path}")
+    return df
 
 
 def read_prior(

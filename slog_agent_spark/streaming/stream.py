@@ -4,12 +4,16 @@ The reference is a continuous agent (TCP in, fluentd out); our batch
 engine becomes streaming by pointing ``readStream`` at the transcript
 table directory and running the identical transform compiler inside
 ``foreachBatch`` (SURVEY.md §2.10: same compiler, streaming shell).
-Exactly-once per sink follows from foreachBatch idempotent overwrites
-keyed by (batch_id, tag) + the streaming checkpoint.
 
 Also provides an event-time windowed counter stream with a watermark —
 the Spark-native upgrade of the reference's 1/s-flushed counters
 (reference: base/logprocesscounterset.go) for genuinely late data.
+
+Each store exposes its foreachBatch handler factory; a store runs
+through streaming/store.py's one driver —
+``drain(<source>(spark, dir), checkpoint, <handler>(store_dir, ...))``
+— and folds through ``compact(spark, store_dir, STORES[name], mode)``,
+as jobs/run_stream.py does.
 """
 
 from __future__ import annotations
@@ -17,54 +21,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
+    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
     TimestampType,
 )
 
 from ..plans.pipeline import transform_transcripts
 from . import store as _store
 
-TRANSCRIPT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("tool", StringType()),
-        StructField("ts", TimestampType()),
-    ]
-)
+TRANSCRIPT_SCHEMA = StructType([
+    StructField("conv_id", StringType()),
+    StructField("turn_idx", IntegerType()),
+    StructField("role", StringType()),
+    StructField("text", StringType()),
+    StructField("tool", StringType()),
+    StructField("ts", TimestampType()),
+])
 
 
 def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
     return _store.source(spark, TRANSCRIPT_SCHEMA, input_dir, 8)
 
 
-def pipeline_batch_handler(sink_dir: str, with_metrics: bool = False):
-    """foreachBatch handler for the parquet events sink — exposed so
-    tests can replay a batch directly.
-
-    Exactly-once: partitioned by (batch_id, tag) with DYNAMIC overwrite
-    — a replayed micro-batch (failure after write, before checkpoint
-    commit) rewrites exactly its own batch_id partitions instead of
-    appending a duplicate row set (the round-3 judge finding; primitive
-    shared with the resumable batch sink, sinks/writers.write_table).
-
-    ``with_metrics`` additionally writes the batch's per-keyset process
-    counters (operators/metrics.process_metrics — the reference emits
-    these continuously, reference: base/logprocesscounterset.go:20-33)
-    to ``<sink>/metrics`` partitioned by batch_id under the same
-    dynamic-overwrite discipline, so a replayed batch rewrites its own
-    counter partials instead of double-counting. The counters are pure
+def pipeline_batch_handler(sink_dir: str):
+    """foreachBatch handler for the parquet events sink: the batch's
+    surviving events to ``<sink>/events`` partitioned by (batch_id,
+    tag), and its per-keyset process counters
+    (operators/metrics.process_metrics — the reference emits these
+    continuously, reference: base/logprocesscounterset.go:20-33) to
+    ``<sink>/metrics`` partitioned by batch_id. The counters are pure
     sums, so :func:`stream_metrics_total` rolls the partials up into
-    exactly the batch-job metrics table. With both writes the batch's
-    chain output is cached once and read by each, and released before
-    the handler returns, so a long-running stream holds no cache.
+    exactly the batch-job metrics table. The batch's chain output is
+    cached once, read by both writes, and released before the handler
+    returns, so a long-running stream holds no cache.
     """
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -72,9 +60,7 @@ def pipeline_batch_handler(sink_dir: str, with_metrics: bool = False):
         from ..plans.pipeline import fence_filter
         from ..sinks.writers import write_table
 
-        tf = transform_transcripts(batch_df)
-        if with_metrics:
-            tf = tf.persist()
+        tf = transform_transcripts(batch_df).persist()
         try:
             write_table(
                 fence_filter(tf, "NOT dropped").withColumn("batch_id", F.lit(batch_id)),
@@ -82,16 +68,14 @@ def pipeline_batch_handler(sink_dir: str, with_metrics: bool = False):
                 partition_by=["batch_id", "tag"],
                 mode="overwrite_partitions",
             )
-            if with_metrics:
-                write_table(
-                    process_metrics(tf).withColumn("batch_id", F.lit(batch_id)),
-                    f"{sink_dir}/metrics",
-                    partition_by=["batch_id"],
-                    mode="overwrite_partitions",
-                )
+            write_table(
+                process_metrics(tf).withColumn("batch_id", F.lit(batch_id)),
+                f"{sink_dir}/metrics",
+                partition_by=["batch_id"],
+                mode="overwrite_partitions",
+            )
         finally:
-            if with_metrics:
-                tf.unpersist()
+            tf.unpersist()
 
     return handle_batch
 
@@ -109,7 +93,7 @@ def stream_metrics_total(
     from ..plans.config import DEFAULT_CONFIG
 
     cfg = cfg or DEFAULT_CONFIG
-    df = _store.read_table(spark, f"{sink_dir}/metrics")
+    df = _store.drained_table(spark, f"{sink_dir}/metrics")
     keys = list(cfg.orchestration_keys) + list(cfg.metric_keys)
     counters = [c for c in df.columns if c not in keys + ["batch_id"]]
     return df.groupBy(*keys).agg(
@@ -117,27 +101,11 @@ def stream_metrics_total(
     )
 
 
-def run_stream_pipeline(
-    spark: SparkSession,
-    input_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    with_metrics: bool = True,
-) -> None:
-    """Drain all available input through the full pipeline (availableNow)."""
-    _store.drain(
-        stream_transcripts(spark, input_dir), checkpoint_dir,
-        pipeline_batch_handler(sink_dir, with_metrics=with_metrics),
-    )
-
-
-CONV_PROGRESS_OUT = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turns", LongType()),
-        StructField("bytes", LongType()),
-    ]
-)
+CONV_PROGRESS_OUT = StructType([
+    StructField("conv_id", StringType()),
+    StructField("turns", LongType()),
+    StructField("bytes", LongType()),
+])
 CONV_PROGRESS_STATE = StructType(
     [StructField("turns", LongType()), StructField("bytes", LongType())]
 )
@@ -267,12 +235,10 @@ def dedup_stream(
     ).dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
 
 
-DOCUMENT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ]
-)
+DOCUMENT_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("text", StringType()),
+])
 
 
 def stream_documents(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -298,12 +264,9 @@ def _banded_lsh(
     ``counting``, else 0}.
 
     - BAND LOOKUP: the band store is partition-pruned to the buckets the
-      batch's band keys touch, excluding the current batch_id — it
-      consumes ``touched/buckets`` of the store, and after compaction
-      each bucket is few files SORTED by band key, so parquet min/max
-      stats skip row groups within the bucket too (an index lookup, not
-      a scan). New-vs-store catches pairs across batches, new-vs-new
-      pairs within one.
+      batch's band keys touch — it consumes ``touched/buckets`` of the
+      store (an index lookup, not a scan). New-vs-store catches pairs
+      across batches, new-vs-new pairs within one.
     - PAYLOAD FETCH: pruned to the CANDIDATE doc_ids — partition-pruned
       to their doc buckets, then inner-joined to the id set, so the
       verify join sees |candidates| stored rows, never the corpus (zero
@@ -368,38 +331,23 @@ def _banded_lsh(
 
 
 def neardup_batch_handler(
-    store_dir: str,
-    params=None,
-    stats: list | None = None,
+    store_dir: str, params=None, stats: list | None = None,
 ):
     """foreachBatch handler for INCREMENTAL MinHash-LSH near-dup — the
     streaming twin of the batch ``dedup_minhash_lsh`` query: each
     micro-batch signs its documents once, joins the new band keys
-    against the band store (new-vs-store catches pairs across batches,
-    new-vs-new catches pairs within one), verifies candidates by true
-    Jaccard over the stored shingle sets, and appends (signatures,
-    bands, pairs) to the store.
+    against the band store, verifies candidates by true Jaccard over the
+    stored shingle sets, and appends (signatures, bands, pairs) to the
+    store.
 
     Invariant (tested): after draining any input split, the union of
     per-batch pair outputs equals the batch LSH pair set over the same
     corpus — each unordered pair is emitted exactly once, in the batch
     of its LATER document.
 
-    Exactly-once: all three store tables are partitioned by batch_id
-    (leading) and written with dynamic partition overwrite; store reads
-    exclude the current batch_id, so a replayed batch sees the same
-    store state and rewrites exactly its own partitions.
-
-    Scale shape (round-4 judge item — per-batch read volume is bounded
-    by the BATCH, not the accumulated corpus, and ``stats`` makes that
-    measurable): the band store is laid out by ``band_bkt =
-    hash(band_key) % 64`` and the signature store by ``doc_bkt =
-    hash(doc_id) % 64`` (``store.NEARDUP``); the lookup and the fetch are
-    the pruned reads of :func:`_banded_lsh`. Per-batch partitions sprawl
-    one directory per batch; ``compact_neardup_store`` folds committed
-    batches into a single base partition with bounded file counts (the
-    streaming twin of the reference's bounded queue dirs, ref:
-    buffer/hybridbuffer/bufferer.go:104-132).
+    Scale shape: per-batch read volume is bounded by the BATCH, not the
+    accumulated corpus — the lookup and the fetch are the pruned reads
+    of :func:`_banded_lsh` over ``store.NEARDUP``'s hash buckets.
 
     ``stats``, when provided, receives one dict per batch with the
     pruned read/fetch row counts the bounded-read test asserts on.
@@ -446,77 +394,8 @@ def neardup_batch_handler(
     return handle
 
 
-def compact_neardup_store(
-    spark: SparkSession, store_dir: str, mode: str = "incremental"
-) -> dict:
-    """Fold the near-dup store's committed per-batch partitions into one
-    base partition (``batch_id=-1``) with bounded file counts — the
-    streaming twin of the reference's bounded queue directories (ref:
-    buffer/hybridbuffer/bufferer.go:104-132). Without it, one partition
-    per micro-batch sprawls directories and small files without bound.
-
-    - The MAX batch_id present is left as-is: it is the only batch the
-      streaming checkpoint could still replay, and a replay must keep
-      seeing its own partitions excluded by batch_id. Everything older
-      is checkpoint-committed and safe to fold (repeated compactions
-      fold the previous base too).
-    - Bands are repartitioned one-task-per-bucket and SORTED by
-      band_key inside each bucket, so post-compaction lookups skip row
-      groups via parquet min/max stats on top of partition pruning.
-    - Crash-safe: streaming/store.fold_batch_partitions. Run between
-      drains — never concurrently with the stream.
-
-    Returns per-table (rows, files_before, files_after).
-    """
-    return _store.compact(spark, store_dir, _store.NEARDUP, mode)
-
-
-def compact_events_sink(
-    spark: SparkSession, sink_dir: str, mode: str = "incremental"
-) -> dict:
-    """Fold the streaming pipeline sink's committed (batch_id, tag)
-    partitions into the bounded base generation — the events/metrics
-    twin of :func:`compact_neardup_store` (same sprawl: one directory
-    per micro-batch forever on a long-running stream; same primitive:
-    streaming/store.fold_batch_partitions; same replay rule: the max
-    live batch is kept untouched so the checkpoint's one possibly
-    uncommitted batch still overwrites exactly its own partitions).
-
-    Events keep their per-``tag`` partitioning through the fold (that is
-    what downstream per-sink consumers prune on) and are sorted within
-    each tag by (conv_id, turn_idx) so turn-ordered readers get parquet
-    min/max row-group skipping. Metric partials fold to a single file;
-    ``stream_metrics_total`` is a pure sum over them, so folding batch
-    partials into one partition cannot change the rollup (pinned by
-    tests/test_streaming.py).
-
-    Run between drains — never concurrently with the stream.
-    """
-    return _store.compact(spark, sink_dir, _store.EVENTS, mode)
-
-
-def run_stream_neardup(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    params=None,
-) -> None:
-    """Drain a document stream through incremental MinHash-LSH near-dup
-    (``neardup_batch_handler``); the pair store at
-    ``<store>/pairs`` accumulates every near-duplicate pair exactly
-    once."""
-    _store.drain(
-        stream_documents(spark, input_dir), checkpoint_dir,
-        neardup_batch_handler(store_dir, params),
-    )
-
-
 # -- streaming exact document dedup -------------------------------------------
-def docdedup_batch_handler(
-    store_dir: str,
-    stats: list | None = None,
-):
+def docdedup_batch_handler(store_dir: str, stats: list | None = None):
     """foreachBatch handler for INCREMENTAL exact dedup over a document
     stream — the streaming twin of the batch ``dedup_exact`` query
     (operators/dedup.exact_dedup_sql: md5(text) groupBy, min doc_id
@@ -539,10 +418,6 @@ def docdedup_batch_handler(
       or not the hash was already seen. First-arrival and batch-min
       answers can name different representatives only when doc_ids
       arrive out of order; the rollup is the canonical one.
-
-    Exactly-once: dynamic partition overwrite by batch_id; the
-    seen-check excludes the current batch_id, so a replay recomputes
-    the identical partition content.
     """
 
     table = _store.DOCDEDUP["hashes"]
@@ -590,7 +465,7 @@ def docdedup_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     of every drained input, regardless of micro-batch arrival order
     (each batch's (min, count) partial commutes through min/sum)."""
     return (
-        _store.read_table(spark, f"{store_dir}/hashes")
+        _store.drained_table(spark, f"{store_dir}/hashes")
         .groupBy("content_hash")
         .agg(
             F.min("keep_doc_id").alias("keep_doc_id"),
@@ -599,87 +474,37 @@ def docdedup_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def compact_docdedup_store(
-    spark: SparkSession, store_dir: str, mode: str = "incremental"
-) -> dict:
-    """Bounded-generation fold for the dedup hash store (shared
-    primitive, streaming/store.py); base buckets sort by content_hash
-    for row-group skipping on the seen-check. Run between drains."""
-    return _store.compact(spark, store_dir, _store.DOCDEDUP, mode)
-
-
-def run_stream_docdedup(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain a document stream (doc_id, text) through incremental exact
-    dedup (availableNow trigger)."""
-    _store.drain(
-        stream_documents(spark, input_dir), checkpoint_dir,
-        docdedup_batch_handler(store_dir),
-    )
-
-
-def run_stream_wire_sink(
-    spark: SparkSession,
-    input_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    max_records: int = 0,
-    salts: int = 1,
-    wire_format: str = "fluentd",
-) -> None:
-    """Continuous pipeline with REAL protocol wire output: each
-    micro-batch runs the full transform chain, serializes events, and
-    writes chunks per tag under ``<sink>/batch=<id>/<tag>/<chunk_id>.*``
-    — the streaming twin of the reference agent's actual output path
-    (TCP in → transform → wire chunks out). ``wire_format`` selects
-    fluentd CompressedPackedForward (msgpack/gzip ``.chunk``) or the
-    Datadog gzip JSON-array intake body (``.json.gz``); both routes run
-    the same transactional writer machinery.
-
-    Exactly-once per chunk directory: chunk IDs are deterministic with
-    the batch_id as the generator's time base — a replayed micro-batch
-    (same offsets, same rows, per the file-source checkpoint contract)
-    regenerates the identical chunk-file set and atomically overwrites
-    it; a task retry within a batch overwrites its own (tag, salt)
-    files; stale chunks from a differently-configured prior attempt are
-    cleaned by the writer. (Round-3 judge finding: time-based IDs +
-    makedirs(exist_ok) accumulated a second uniquely-named chunk set on
-    replay.)"""
-    _store.drain(
-        stream_transcripts(spark, input_dir), checkpoint_dir,
-        wire_batch_handler(sink_dir, max_records, salts, wire_format),
-    )
-
-
 def wire_batch_handler(
     sink_dir: str, max_records: int = 0, salts: int = 1,
     wire_format: str = "fluentd",
 ):
-    """foreachBatch handler for the wire sinks (fluentd default, datadog
-    via ``wire_format``) — exposed so tests can replay a batch directly
-    and assert the chunk set is unchanged.
+    """foreachBatch handler for the pipeline with REAL protocol wire
+    output: each micro-batch runs the full transform chain, serializes
+    events, and writes chunks per tag under
+    ``<sink>/batch=<id>/<tag>/<chunk_id>.*`` — the streaming twin of the
+    reference agent's output path (TCP in → transform → wire chunks
+    out). ``wire_format`` selects fluentd CompressedPackedForward
+    (msgpack/gzip ``.chunk``) or the Datadog gzip JSON-array intake body
+    (``.json.gz``); both routes run the same transactional writer.
 
-    A prior failed attempt of THIS batch (possibly under a different
+    Exactly-once per chunk directory: chunk IDs are deterministic with
+    the batch_id as the generator's time base, so a replayed micro-batch
+    regenerates the identical chunk-file set and overwrites it; a task
+    retry within a batch overwrites its own (tag, salt) files. A prior
+    failed attempt of THIS batch (possibly under a different
     ``--salts``) is healed by the writer's own stale-chunk/stale-tag
     cleanup (``fluentd_wire.run_wire_job``), which runs through the same
-    file API as the writes — the previous driver-side ``shutil.rmtree``
-    was a silent no-op wherever the driver does not mount the shared
-    sink storage (round-4 ADVICE)."""
+    file API as the writes, so it reaches sink storage the driver does
+    not mount."""
     from ..plans.pipeline import events_for_outputs, transform_transcripts
     from ..sinks import datadog_wire, fluentd_wire
 
-    if wire_format not in ("fluentd", "datadog"):
+    # route -> (writer, serializer output column: plans/config.OUTPUTS)
+    routes = {"fluentd": (fluentd_wire, "customFluentd_event"),
+              "datadog": (datadog_wire, "datadogAPI_event")}
+    if wire_format not in routes:
         raise ValueError(f"unknown wire_format: {wire_format!r}")
-    # serializer output column per route (plans/config.OUTPUTS names)
-    src_col = (
-        "customFluentd_event" if wire_format == "fluentd"
-        else "datadogAPI_event"
-    )
-    writer = fluentd_wire if wire_format == "fluentd" else datadog_wire
+    writer, src_col = routes[wire_format]
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_dir = f"{sink_dir}/batch={batch_id}"
@@ -695,12 +520,7 @@ def wire_batch_handler(
 
 # -- streaming training cut: dedup + near-dup + quality + mix + pack ----------
 DOCUMENT_MIX_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ]
-)
+    [*DOCUMENT_SCHEMA.fields, StructField("lang", StringType())])
 
 
 def stream_documents_mix(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -708,9 +528,7 @@ def stream_documents_mix(spark: SparkSession, input_dir: str) -> DataFrame:
     return _store.source(spark, DOCUMENT_MIX_SCHEMA, input_dir, 4)
 
 
-def training_cut_batch_handler(
-    store_dir: str, params=None, stats: list | None = None,
-):
+def training_cut_batch_handler(store_dir: str, params=None):
     """foreachBatch handler for the INCREMENTAL training cut — the
     streaming twin of the batch ``corpus_training_cut`` composite
     (dedup.training_cut_sql): per micro-batch, decide for every arriving
@@ -719,17 +537,15 @@ def training_cut_batch_handler(
     their position in the packed token stream.
 
     Composition, not reimplementation: the batch delegates to the
-    existing incremental stores — ``docdedup_batch_handler`` (exact,
-    first-arrival-wins) and ``neardup_batch_handler`` (MinHash-LSH
-    vs store + within batch) — then reads back ONLY its own batch_id
-    partitions of their outputs (partition-pruned, bounded by the
-    batch). Quality and mix are the SAME per-row SQL the batch operator
-    runs (textops.quality_items / mix_sample_sql). Packing uses the
-    same bucketed prefix sum (textops.pack_ctes) over the batch's
-    selected docs, offset by the running selected-token total carried
-    in a tiny ``totals`` table (one row per batch — the only
-    cross-batch pack state; its read is O(#batches), folded by
-    compaction).
+    incremental stores — ``docdedup_batch_handler`` (exact,
+    first-arrival-wins) and ``neardup_batch_handler`` — then reads back
+    ONLY its own batch_id partitions of their outputs. Quality and mix
+    are the SAME per-row SQL the batch operator runs
+    (textops.quality_items / mix_sample_sql). Packing uses the same
+    bucketed prefix sum (textops.pack_ctes) over the batch's selected
+    docs, offset by the running selected-token total carried in a tiny
+    ``totals`` table (one row per batch — the only cross-batch pack
+    state; its read is O(#batches), folded by compaction).
 
     Streaming policy vs the batch operator (tested equivalence): when
     micro-batches arrive in ascending doc_id ranges, the drained cut
@@ -741,10 +557,6 @@ def training_cut_batch_handler(
     later-arriving smaller doc_id loses to an already-kept duplicate),
     which is the only policy a stream can implement without
     retracting output.
-
-    Exactly-once: ``cut`` and ``totals`` are batch_id-partitioned with
-    dynamic overwrite; the totals read excludes the current batch_id;
-    the delegated stores are replay-safe by construction.
     """
     from ..functions.dialect import SPARK as SPARK_D
     from ..operators import textops
@@ -884,14 +696,6 @@ def training_cut_batch_handler(
             ),
             store_dir, spec["totals"], batch_id,
         )
-        if stats is not None:
-            stats.append({
-                "batch_id": batch_id,
-                "n_docs": docs.count(),
-                "n_selected": int(cut.where("selected").count()),
-                "prior_tokens": int(prior),
-                "batch_tokens": int(batch_tokens),
-            })
 
     return handle
 
@@ -902,45 +706,20 @@ def training_cut_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     chunk_offset — column-identical to the batch
     ``corpus_training_cut`` result, and value-identical when the
     stream drained in ascending doc_id ranges (see handler docstring)."""
-    return _store.read_table(spark, f"{store_dir}/cut").select(
+    return _store.drained_table(spark, f"{store_dir}/cut").select(
         "doc_id", "retained", "mix_kept", "selected",
         "n_tokens", "chunk_id", "chunk_offset",
     )
 
 
-def compact_training_cut_store(
-    spark: SparkSession, store_dir: str, mode: str = "incremental",
-) -> dict:
-    """Fold the cut/totals tables plus the delegated dedup and near-dup
-    stores — one call bounds every table this handler grows."""
-    return _store.compact(spark, store_dir, _store.TRAINING_CUT, mode)
-
-
-def run_stream_training_cut(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    params=None,
-) -> None:
-    """Drain a document stream (doc_id, text, lang) through the
-    incremental training cut (availableNow trigger)."""
-    _store.drain(
-        stream_documents_mix(spark, input_dir), checkpoint_dir,
-        training_cut_batch_handler(store_dir, params=params),
-    )
-
-
 # -- streaming window attribution: native stream-stream interval join ---------
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-    ]
-)
+EVENT_SCHEMA = StructType([
+    StructField("event_id", LongType()),
+    StructField("ts", TimestampType()),
+    StructField("user_id", LongType()),
+    StructField("event_type", StringType()),
+    StructField("value", DoubleType()),
+])
 
 
 def stream_events(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -973,12 +752,12 @@ def attrib_stream(
     Inner join + append mode: each pair is emitted exactly once, when
     both sides have arrived.
 
-    Lateness caveat (r5 ADVICE): equality with the batch operator holds
-    for inputs whose arrival order tracks event time within
-    ``late_sec`` — a mark or probe arriving later than the watermark
-    bound is silently dropped by the stateful join. Size ``late_sec``
-    to the input's actual disorder (exposed through
-    ``run_stream_attrib``).
+    Lateness caveat: equality with the batch operator holds for inputs
+    whose arrival order tracks event time within ``late_sec`` — a mark
+    or probe arriving later than the watermark bound is silently dropped
+    by the stateful join. Size ``late_sec`` to the input's actual
+    disorder: library callers pass it here; jobs/run_stream.py's
+    ``attrib`` mode runs the 600 s default and has no flag for it.
     """
     marks = (
         events.where(F.col("event_type") == mark_type)
@@ -1020,32 +799,9 @@ def attrib_stream(
     )
 
 
-def run_stream_attrib(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    horizon_sec: int = 6 * 3600,
-    late_sec: int = 600,
-) -> None:
-    """Drain an event stream through the native interval join
-    (availableNow trigger), appending attribution pairs as parquet.
-    Pair-set equality with the batch events_window_attrib holds for
-    inputs ordered within ``late_sec`` of event time (see
-    attrib_stream's lateness caveat); size it to the input's actual
-    disorder."""
-    _store.drain(
-        attrib_stream(stream_events(spark, input_dir),
-                      horizon_sec=horizon_sec, late_sec=late_sec),
-        checkpoint_dir, output_dir,
-    )
-
-
 # -- streaming boilerplate: incremental shingle document-frequency store ------
 def boilerplate_batch_handler(
-    store_dir: str,
-    min_docs: int | None = None,
-    stats: list | None = None,
+    store_dir: str, min_docs: int | None = None, stats: list | None = None,
 ):
     """foreachBatch handler for INCREMENTAL cross-document boilerplate
     detection — the streaming twin of the batch ``corpus_boilerplate``
@@ -1067,9 +823,7 @@ def boilerplate_batch_handler(
     Bounded reads: the freq-store read is partition-pruned to the
     shingle buckets this batch touches and semi-joined to the batch's
     shingle set — bounded by the batch vocabulary, never the corpus
-    (``stats`` receives the scanned row count). Exactly-once: both
-    tables partition by batch_id with dynamic overwrite; the prior-count
-    read excludes the current batch_id.
+    (``stats`` receives the scanned row count).
     """
     from ..functions.dialect import SPARK as SPARK_D
     from ..operators import textops
@@ -1143,29 +897,9 @@ def boilerplate_freq_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
     (sum per shingle) — value-identical to the batch operator's
     frequency relation under any arrival order."""
     return (
-        _store.read_table(spark, f"{store_dir}/freq")
+        _store.drained_table(spark, f"{store_dir}/freq")
         .groupBy("shingle")
         .agg(F.sum("n_docs").alias("n_docs"))
-    )
-
-
-def compact_boilerplate_store(
-    spark: SparkSession, store_dir: str, mode: str = "incremental",
-) -> dict:
-    return _store.compact(spark, store_dir, _store.BOILERPLATE, mode)
-
-
-def run_stream_boilerplate(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain a document stream through incremental boilerplate detection
-    (availableNow trigger)."""
-    _store.drain(
-        stream_documents(spark, input_dir), checkpoint_dir,
-        boilerplate_batch_handler(store_dir),
     )
 
 
@@ -1173,19 +907,17 @@ def run_stream_boilerplate(
 def simhash_batch_handler(store_dir: str, stats: list | None = None):
     """foreachBatch handler for INCREMENTAL banded-Hamming SimHash
     near-dup — the streaming twin of the batch ``dedup_simhash_neardup``
-    query, completing the dedup family's incremental matrix (exact,
-    MinHash-LSH, embedding-cosine, SimHash).
+    query.
 
     Same store discipline as the MinHash handler (:func:`_banded_lsh`):
     each batch sketches its documents once, joins its band rows against
-    the band store (partition-pruned to the buckets the batch touches,
-    excluding the current batch_id), verifies candidates by Hamming
-    distance over the stored SKETCHES (pruned to the candidates' doc
-    buckets — SimHash needs no shingle sets at verify time, so the
-    fetch is a few ints per candidate), and appends (sketches, bands,
-    pairs) partitioned by batch_id with dynamic overwrite. Invariant
-    (tested): the drained pair union equals the batch pair set — each
-    unordered pair exactly once, in its later document's batch.
+    the band store (partition-pruned to the buckets the batch touches),
+    verifies candidates by Hamming distance over the stored SKETCHES
+    (pruned to the candidates' doc buckets — SimHash needs no shingle
+    sets at verify time, so the fetch is a few ints per candidate), and
+    appends (sketches, bands, pairs). Invariant (tested): the drained
+    pair union equals the batch pair set — each unordered pair exactly
+    once, in its later document's batch.
     """
     from ..functions.dialect import SPARK as SPARK_D
     from ..operators import dedup, shingle_batch
@@ -1234,21 +966,33 @@ def simhash_batch_handler(store_dir: str, stats: list | None = None):
     return handle
 
 
-def compact_simhash_store(
-    spark: SparkSession, store_dir: str, mode: str = "incremental",
-) -> dict:
-    return _store.compact(spark, store_dir, _store.SIMHASH, mode)
-
-
-def run_stream_simhash(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
+# The drains and compactions perfbench/streams.py calls by name (the
+# benchmark's files stay as they are); every other store is driven
+# through store.drain / store.compact directly, as jobs/run_stream.py
+# does. The drains look their handler factory up when they run, so a
+# factory swapped onto this module (a traced run's) is the one called.
+def run_stream_pipeline(
+    spark: SparkSession, input_dir: str, sink_dir: str, checkpoint_dir: str,
 ) -> None:
-    """Drain a document stream through incremental SimHash near-dup
-    (availableNow trigger)."""
-    _store.drain(
-        stream_documents(spark, input_dir), checkpoint_dir,
-        simhash_batch_handler(store_dir),
-    )
+    _store.drain(stream_transcripts(spark, input_dir), checkpoint_dir,
+                 pipeline_batch_handler(sink_dir))
+
+
+def run_stream_neardup(
+    spark: SparkSession, input_dir: str, store_dir: str, checkpoint_dir: str,
+    params=None,
+) -> None:
+    _store.drain(stream_documents(spark, input_dir), checkpoint_dir,
+                 neardup_batch_handler(store_dir, params))
+
+
+def compact_events_sink(
+    spark: SparkSession, sink_dir: str, mode: str = "incremental"
+) -> dict:
+    return _store.compact(spark, sink_dir, _store.EVENTS, mode)
+
+
+def compact_neardup_store(
+    spark: SparkSession, store_dir: str, mode: str = "incremental"
+) -> dict:
+    return _store.compact(spark, store_dir, _store.NEARDUP, mode)

@@ -15,9 +15,9 @@ from slog_agent_spark.plans.corpus import emb_neardup_trained_query
 from slog_agent_spark.streaming.ann_stream import (
     ann_ingest_batch_handler,
     ann_query_store,
-    compact_ann_store,
     train_ann_centroids,
 )
+from slog_agent_spark.streaming.store import STORES, compact
 
 
 def _rows(df):
@@ -52,7 +52,7 @@ def test_streamed_store_equals_batch_ann(spark, sf_dir):
 
         # compaction folds committed batches, keeps the max live batch,
         # and queries still answer identically
-        report = compact_ann_store(spark, store)
+        report = compact(spark, store, STORES["ann"])
         assert report["vectors"]["files_after"] <= (
             report["vectors"]["files_before"]
         )
@@ -140,7 +140,7 @@ def test_streaming_emb_neardup_equals_batch(spark, sf_dir):
         assert got_topk == want_topk
 
         # compaction folds vectors AND pairs, preserving both answers
-        report = compact_ann_store(spark, store)
+        report = compact(spark, store, STORES["ann"])
         assert set(report) == {"vectors", "pairs"}
         assert set(report) == store_tables(store)
         assert pair_rows(

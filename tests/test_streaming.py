@@ -185,11 +185,20 @@ def test_pipeline_batch_replay_no_duplicates(spark, sf_dir):
         handler(half_a, 0)
         handler(half_b, 1)
         n_after_both = spark.read.parquet(f"{work}/sink/events").count()
+        metrics = spark.read.parquet(f"{work}/sink/metrics")
+        n_metrics_0 = metrics.where("batch_id = 0").count()
+        n_metrics = metrics.count()
         handler(half_a, 0)  # the replay
         replayed = spark.read.parquet(f"{work}/sink/events")
         assert replayed.count() == n_after_both
         # batch 1's partitions were untouched by batch 0's replay
         assert replayed.where("batch_id = 1").count() > 0
+        # the replayed batch's counter partials were rewritten, not
+        # appended to
+        metrics = spark.read.parquet(f"{work}/sink/metrics")
+        assert n_metrics_0 > 0
+        assert metrics.where("batch_id = 0").count() == n_metrics_0
+        assert metrics.count() == n_metrics
 
 
 def test_wire_batch_replay_no_duplicates(spark, sf_dir):
@@ -474,13 +483,14 @@ def test_streaming_wire_sink_chunks_decode(spark, sf_dir):
     import glob as globmod
 
     from slog_agent_spark.sinks.fluentd_wire import decode_chunk
-    from slog_agent_spark.streaming.stream import run_stream_wire_sink
+    from slog_agent_spark.streaming.store import drain
+    from slog_agent_spark.streaming.stream import wire_batch_handler
 
     with tempfile.TemporaryDirectory() as work:
         tdir = f"{work}/transcripts"
         transcripts_df(spark, sf_dir).write.parquet(tdir)
-        run_stream_wire_sink(spark, tdir, f"{work}/sink", f"{work}/ckpt",
-                             max_records=100)
+        drain(stream_transcripts(spark, tdir), f"{work}/ckpt",
+              wire_batch_handler(f"{work}/sink", max_records=100))
         files = globmod.glob(f"{work}/sink/batch=*/*/*.chunk")
         assert files
         total = 0
@@ -516,7 +526,7 @@ def test_stream_metrics_equal_batch_and_replay_safe(spark, sf_dir):
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     with tempfile.TemporaryDirectory() as work:
-        handler = pipeline_batch_handler(f"{work}/sink", with_metrics=True)
+        handler = pipeline_batch_handler(f"{work}/sink")
         handler(half_a, 0)
         # the batch's cached chain is released: no cache per micro-batch
         assert cache.isEmpty()
@@ -553,7 +563,7 @@ def test_streaming_events_sink_compaction(spark, sf_dir):
 
     with tempfile.TemporaryDirectory() as work:
         sink = f"{work}/sink"
-        handler = pipeline_batch_handler(sink, with_metrics=True)
+        handler = pipeline_batch_handler(sink)
         for i in range(3):
             handler(parts[i], i)
         before_events = rows(spark.read.parquet(f"{sink}/events"))
@@ -628,8 +638,8 @@ def test_streaming_docdedup_equals_batch_any_order(spark, sf_dir):
     doc_ids first, so first-arrival and batch-min genuinely diverge and
     only the commuting (min, count) partials can reconcile them."""
     from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
+    from slog_agent_spark.streaming.store import STORES, compact
     from slog_agent_spark.streaming.stream import (
-        compact_docdedup_store,
         docdedup_batch_handler,
         docdedup_rollup,
     )
@@ -676,7 +686,7 @@ def test_streaming_docdedup_equals_batch_any_order(spark, sf_dir):
         assert rows(docdedup_rollup(spark, store)) == want
 
         # compaction folds committed batches and preserves the rollup
-        report = compact_docdedup_store(spark, store)
+        report = compact(spark, store, STORES["docdedup"])
         assert report["hashes"]["files_after"] <= (
             report["hashes"]["files_before"]
         )
@@ -761,6 +771,27 @@ def test_incremental_fold_crash_heal(spark, sf_dir):
         assert batch_ids == [-1, 2]
 
 
+def test_rollups_on_undrained_store_name_the_missing_table(spark):
+    """A rollup over a store no drain has written fails with an error
+    naming the missing table's path."""
+    import re
+
+    import pytest
+
+    from slog_agent_spark.streaming.stream import (
+        docdedup_rollup,
+        stream_metrics_total,
+    )
+
+    with tempfile.TemporaryDirectory() as work:
+        with pytest.raises(FileNotFoundError,
+                           match=re.escape(f"{work}/metrics")):
+            stream_metrics_total(spark, work)
+        with pytest.raises(FileNotFoundError,
+                           match=re.escape(f"{work}/hashes")):
+            docdedup_rollup(spark, work)
+
+
 def test_streaming_training_cut_equals_batch_in_order(spark, sf_dir):
     """Draining the corpus in ascending doc_id ranges, the streamed cut
     table is value-identical to the batch corpus_training_cut composite
@@ -768,8 +799,8 @@ def test_streaming_training_cut_equals_batch_in_order(spark, sf_dir):
     doc_id; pack offsets compose through the totals table) — and stays
     identical after compacting every store the handler grows."""
     from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
+    from slog_agent_spark.streaming.store import STORES, compact
     from slog_agent_spark.streaming.stream import (
-        compact_training_cut_store,
         training_cut_batch_handler,
         training_cut_rollup,
     )
@@ -799,7 +830,7 @@ def test_streaming_training_cut_equals_batch_in_order(spark, sf_dir):
         assert got == want and len(got) == docs.count()
         assert any(r[3] for r in got)        # some docs selected
         assert any(not r[1] for r in got)    # some docs cut
-        rep = compact_training_cut_store(spark, f"{work}/store")
+        rep = compact(spark, f"{work}/store", STORES["trainingcut"])
         assert "cut" in rep and "totals" in rep
         assert set(rep) == store_tables(f"{work}/store")
         after = sorted(
@@ -850,7 +881,8 @@ def test_streaming_attrib_equals_batch(spark, sf_dir):
     is the right primitive, with state bounded by the join's own time
     horizon."""
     from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
-    from slog_agent_spark.streaming.stream import run_stream_attrib
+    from slog_agent_spark.streaming.store import drain
+    from slog_agent_spark.streaming.stream import attrib_stream, stream_events
 
     with tempfile.TemporaryDirectory() as work:
         edir = f"{work}/events"
@@ -859,7 +891,8 @@ def test_streaming_attrib_equals_batch(spark, sf_dir):
             .repartition(8)
             .write.parquet(edir)
         )
-        run_stream_attrib(spark, edir, f"{work}/out", f"{work}/ckpt")
+        drain(attrib_stream(stream_events(spark, edir)), f"{work}/ckpt",
+              f"{work}/out")
         got = sorted(
             map(tuple, spark.read.parquet(f"{work}/out").select(
                 "probe_event_id", "mark_event_id", "user_id",
@@ -911,10 +944,10 @@ def test_streaming_boilerplate_first_arrival_and_freq_rollup(spark):
     cuts docs FROM that batch on, never retroactively (first-arrival
     policy); the frequency rollup itself is order-independent and equals
     the corpus-wide counts. Store reads stay candidate-bounded."""
+    from slog_agent_spark.streaming.store import STORES, compact
     from slog_agent_spark.streaming.stream import (
         boilerplate_batch_handler,
         boilerplate_freq_rollup,
-        compact_boilerplate_store,
     )
 
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")  # noqa: E731
@@ -945,7 +978,7 @@ def test_streaming_boilerplate_first_arrival_and_freq_rollup(spark):
         assert max(freq.values()) == 3  # the span's shingle: docs 1,3,4
         # the store read was bounded by the batch's shingle set
         assert stats[1]["store_freq_rows_scanned"] <= stats[1]["n_batch_shingles"]
-        rep = compact_boilerplate_store(spark, f"{work}/store")
+        rep = compact(spark, f"{work}/store", STORES["boilerplate"])
         assert "freq" in rep and "cut" in rep
         assert set(rep) == store_tables(f"{work}/store")
         after = {
@@ -961,10 +994,8 @@ def test_streaming_simhash_equals_batch(spark, sf_dir):
     banded-Hamming pair set — every pair exactly once, same Hamming
     values; replaying the last batch changes nothing."""
     from slog_agent_spark.plans.corpus import DEFAULT_QUERIES as Q
-    from slog_agent_spark.streaming.stream import (
-        compact_simhash_store,
-        simhash_batch_handler,
-    )
+    from slog_agent_spark.streaming.store import STORES, compact
+    from slog_agent_spark.streaming.stream import simhash_batch_handler
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -994,7 +1025,7 @@ def test_streaming_simhash_equals_batch(spark, sf_dir):
         )
         handler(splits[-1], 2)  # replay
         assert read_pairs() == got
-        rep = compact_simhash_store(spark, f"{work}/store")
+        rep = compact(spark, f"{work}/store", STORES["simhash"])
         assert "sketches" in rep and "bands" in rep
         assert set(rep) == store_tables(f"{work}/store")
         assert read_pairs() == got
@@ -1008,7 +1039,6 @@ def test_drain_continuous_equals_available_now(spark, sf_dir):
     from slog_agent_spark.streaming.store import drain
     from slog_agent_spark.streaming.stream import (
         docdedup_batch_handler,
-        run_stream_docdedup,
         stream_documents,
     )
 
@@ -1020,7 +1050,8 @@ def test_drain_continuous_equals_available_now(spark, sf_dir):
             .repartition(8)  # 8 files / maxFilesPerTrigger=4 → 2 batches
             .write.parquet(ddir)
         )
-        run_stream_docdedup(spark, ddir, f"{work}/once", f"{work}/ckpt1")
+        drain(stream_documents(spark, ddir), f"{work}/ckpt1",
+              docdedup_batch_handler(f"{work}/once"))
         q = drain(
             stream_documents(spark, ddir), f"{work}/ckpt2",
             docdedup_batch_handler(f"{work}/continuous"),
