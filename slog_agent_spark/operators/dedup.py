@@ -192,8 +192,6 @@ def minhash_pairs_ctes(
         f"SELECT doc_id, shingle_set, '{b}' AS band_id, {b} AS band_key FROM sigs"
         for b in bands
     )
-    jac = jaccard_expr(d, "a.shingle_set", "b.shingle_set")
-    fence = d.fence_field()
     return f"""
     sigs AS (SELECT doc_id, shingle_set, {band_sel} FROM {sigs_rel}),
     banded AS ({band_rows}),
@@ -203,12 +201,23 @@ def minhash_pairs_ctes(
         ON a.band_id = b.band_id AND a.band_key = b.band_key
        AND a.doc_id < b.doc_id
     ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b, {jac} AS jaccard{fence}
-      FROM candidates c
+    verified AS ({jaccard_verify_sql(d, "candidates", sigs_rel)})"""
+
+
+def jaccard_verify_sql(d: SqlDialect, cand_rel: str, sigs_rel: str) -> str:
+    """The MinHash verify — the body of ``verified``: (doc_a, doc_b,
+    jaccard) by true Jaccard over the shingle sets of ``sigs_rel``
+    (doc_id, shingle_set, ...) for the candidate pairs of ``cand_rel``
+    (doc_a, doc_b), fenced for :func:`minhash_pairs_final`'s cut. Shared
+    by the batch CTE chains and the streaming handler
+    (streaming/stream.neardup_batch_handler)."""
+    jac = jaccard_expr(d, "a.shingle_set", "b.shingle_set")
+    return f"""
+      SELECT c.doc_a, c.doc_b, {jac} AS jaccard{d.fence_field()}
+      FROM {cand_rel} c
       JOIN {sigs_rel} a ON a.doc_id = c.doc_a
       JOIN {sigs_rel} b ON b.doc_id = c.doc_b
-    )"""
+    """
 
 
 def minhash_pairs_final(d: SqlDialect, threshold) -> str:
@@ -295,8 +304,6 @@ def minhash_salted_ctes(
             "SELECT doc_id, band_id, band_key, blk, t FROM blocked, "
             f"(SELECT unnest(generate_series(0, {salt_blocks - 1})) AS t)"
         )
-    jac = jaccard_expr(d, "a.shingle_set", "b.shingle_set")
-    fence = d.fence_field()
     return f"""
     sigs AS (SELECT doc_id, shingle_set, {band_sel} FROM {sigs_rel}),
     banded AS ({band_rows}),
@@ -311,12 +318,7 @@ def minhash_salted_ctes(
        AND a.t = b.blk AND b.t = a.blk
        AND a.doc_id < b.doc_id
     ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b, {jac} AS jaccard{fence}
-      FROM candidates c
-      JOIN {sigs_rel} a ON a.doc_id = c.doc_a
-      JOIN {sigs_rel} b ON b.doc_id = c.doc_b
-    )"""
+    verified AS ({jaccard_verify_sql(d, "candidates", sigs_rel)})"""
 
 
 def minhash_lsh_pairs_sql(
@@ -558,8 +560,8 @@ def simhash_neardup_pairs_sql(
     assert k < bands, "banding guarantees recall only for k < bands"
     return (
         f"WITH sk0 AS ({simhash_sketches_sql(d, docs_rel, bands, band_bits)}), "
-        + simhash_pairs_ctes(d, "sk0", bands, band_bits)
-        + f" SELECT doc_a, doc_b, hamming FROM verified WHERE {d.fence_pred()}hamming <= {k}"
+        + simhash_pairs_ctes(d, "sk0", bands)
+        + " " + simhash_pairs_final(d, k)
     )
 
 
@@ -585,33 +587,55 @@ def simhash_sketches_sql(
 
 
 def simhash_pairs_ctes(
-    d: SqlDialect,
-    sk_rel: str,
-    bands: int = SIMHASH_BANDS,
-    band_bits: int = SIMHASH_BAND_BITS,
+    d: SqlDialect, sk_rel: str, bands: int = SIMHASH_BANDS,
 ) -> str:
-    band_names = [f"sb{b}" for b in range(bands)]
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_key, '{b}' AS band_id FROM {sk_rel}"
-        for b in band_names
-    )
-    hamming = " + ".join(
-        d.bit_count(d.xor(f"a.{b}", f"b.{b}")) for b in band_names
-    )
     return f"""
-    banded AS ({band_rows}),
+    banded AS ({simhash_band_rows_sql(sk_rel, bands)}),
     candidates AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a JOIN banded b
         ON a.band_id = b.band_id AND a.band_key = b.band_key
        AND a.doc_id < b.doc_id
     ),
-    verified AS (
+    verified AS ({hamming_verify_sql(d, "candidates", sk_rel, bands)})"""
+
+
+def simhash_band_rows_sql(sk_rel: str, bands: int) -> str:
+    """(doc_id, band_key, band_id) rows, one per band of each sketch in
+    ``sk_rel`` (doc_id, sb0..sb{bands-1}) — the batch ``banded`` CTE and
+    the streaming handler's band rows (streaming/stream.simhash_batch_handler)."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, sb{b} AS band_key, 'sb{b}' AS band_id FROM {sk_rel}"
+        for b in range(bands)
+    )
+
+
+def hamming_verify_sql(
+    d: SqlDialect, cand_rel: str, sk_rel: str, bands: int,
+) -> str:
+    """The SimHash verify — the body of ``verified``: (doc_a, doc_b,
+    hamming) by true Hamming distance over the sketches of ``sk_rel``
+    for the candidate pairs of ``cand_rel`` (doc_a, doc_b), fenced for
+    :func:`simhash_pairs_final`'s cut. Shared by the batch CTE chain and
+    the streaming handler."""
+    hamming = " + ".join(
+        d.bit_count(d.xor(f"a.sb{b}", f"b.sb{b}")) for b in range(bands)
+    )
+    return f"""
       SELECT c.doc_a, c.doc_b, CAST(({hamming}) AS INT) AS hamming{d.fence_field()}
-      FROM candidates c
+      FROM {cand_rel} c
       JOIN {sk_rel} a ON a.doc_id = c.doc_a
       JOIN {sk_rel} b ON b.doc_id = c.doc_b
-    )"""
+    """
+
+
+def simhash_pairs_final(d: SqlDialect, k: int) -> str:
+    """Hamming-distance pair cut over ``verified`` (fenced on Spark, as
+    :func:`minhash_pairs_final`)."""
+    return (
+        f"SELECT doc_a, doc_b, hamming FROM verified "
+        f"WHERE {d.fence_pred()}hamming <= {k}"
+    )
 
 
 def simhash_pairs_from_sketches_sql(
@@ -619,12 +643,11 @@ def simhash_pairs_from_sketches_sql(
     sk_rel: str,
     k: int = SIMHASH_HAMMING_K,
     bands: int = SIMHASH_BANDS,
-    band_bits: int = SIMHASH_BAND_BITS,
 ) -> str:
     """Stage 2 of the SimHash near-dup, over a materialized sketch relation."""
     return (
-        f"WITH {simhash_pairs_ctes(d, sk_rel, bands, band_bits)} "
-        f"SELECT doc_a, doc_b, hamming FROM verified WHERE {d.fence_pred()}hamming <= {k}"
+        f"WITH {simhash_pairs_ctes(d, sk_rel, bands)} "
+        + simhash_pairs_final(d, k)
     )
 
 

@@ -1,13 +1,23 @@
 """Similarity search over the `embeddings` table (array<float> column).
 
-Two tiers, both pure SQL expressions (no Python in the scoring path):
+Pure SQL (no Python in the scoring path) over a brute-force cosine
+top-k baseline and IVF (inverted-file) lists — the first C vectors as
+centroids, or k-means-trained ones. At cluster scale the centroid table
+broadcasts and probing P lists prunes (C-P)/C of the corpus. Every IVF
+operator is built from two shared pieces:
 
-- brute-force cosine top-k: the correctness baseline. One pass, no
-  shuffle except the final top-k.
-- IVF (inverted-file) variant: deterministic centroids (the first C
-  vectors), assignment = argmax centroid cosine, probe the best P lists.
-  At cluster scale the centroid table broadcasts and the probe prunes
-  (C-P)/C of the corpus — the standard ANN scale path.
+- ONE top-r: :func:`ivf_multi_assign_sql` is the only place "each row's
+  r nearest centroids" is written — Spark's aggregate
+  (:func:`spark_topr_assign_sql`), the oracle's row_number window
+  (:func:`_window_assign_sql`), one rounded cosine and one centroid_id
+  tie rule. The list assignment (r = 1), the near-dup multi-assignment,
+  each k-means step and every probe set (the top-``probes`` assignment
+  of the query relation) run it; only ``ann_topk_batch_sql``'s
+  per-query final rank stays a window.
+- ONE pair verify: :func:`cosine_verify_sql` scores candidate pairs
+  with hoisted norms and cuts at the threshold, one text for both
+  dialects; the batch near-dups and the streaming near-dup handler
+  (streaming/ann_stream.py) call it.
 
 Cosine is computed in DOUBLE with left-to-right accumulation in both
 engines and rounded, keeping the DuckDB oracle hash-identical.
@@ -22,8 +32,13 @@ from ..plans.corpus_config import CorpusParams, DEFAULT_CORPUS_PARAMS
 # caller-facing knob); aliases kept for default-sizing callers.
 _P = DEFAULT_CORPUS_PARAMS
 IVF_CENTROIDS = _P.ivf_centroids
-IVF_PROBES = _P.ivf_probes
 TOPK = _P.topk
+
+# The embedding near-dup sizing, shared by the batch builders, the
+# staged Spark runner and the streaming handler: the cosine cut and the
+# number of lists each vector lands in (multi-assignment).
+NEARDUP_THRESHOLD = 0.3
+NEARDUP_ASSIGN_R = 2
 
 
 def dot_expr(d: SqlDialect, a: str, b: str) -> str:
@@ -105,41 +120,27 @@ def ann_bruteforce_sql(
     """
 
 
+def _first_centroids(emb_rel: str, params: CorpusParams) -> str:
+    """The untrained centroid relation (centroid_id, emb): the first
+    ``params.ivf_centroids`` vectors (deterministic, shared with the
+    oracle)."""
+    return (
+        f"(SELECT vec_id AS centroid_id, embedding AS emb "
+        f"FROM {emb_rel} WHERE vec_id < {params.ivf_centroids})"
+    )
+
+
 def ivf_assign_sql(
     d: SqlDialect, emb_rel: str = "embeddings",
     params: CorpusParams = DEFAULT_CORPUS_PARAMS,
 ) -> str:
-    """Assign every vector to its nearest deterministic centroid.
-
-    Centroids = the first ``params.ivf_centroids`` vectors
-    (deterministic, shared with the oracle). The centroid side is tiny →
-    broadcast join at scale. Spark runs the aggregate argmax
-    (:func:`spark_topr_assign_sql`); the oracle keeps the row_number
-    text, which also carries the winning cosine (no consumer reads it).
-    """
-    if d.name == d.SPARK:
-        return spark_topr_assign_sql(
-            emb_rel,
-            f"(SELECT vec_id AS centroid_id, embedding AS emb "
-            f"FROM {emb_rel} WHERE vec_id < {params.ivf_centroids})",
-            1,
-        )
-    cos = cosine_expr(d, "e.embedding", "c.embedding")
-    return f"""
-    WITH c AS (SELECT vec_id AS centroid_id, embedding
-               FROM {emb_rel} WHERE vec_id < {params.ivf_centroids}),
-    scored AS (
-      SELECT e.vec_id, c.centroid_id, {cos} AS cos_c
-      FROM {emb_rel} e, c
-    ),
-    ranked AS (
-      SELECT vec_id, centroid_id, cos_c,
-             row_number() OVER (PARTITION BY vec_id
-                                ORDER BY cos_c DESC, centroid_id) AS rn
-      FROM scored
+    """Assign every vector to its nearest deterministic centroid: the
+    top-1 of :func:`ivf_multi_assign_sql` over the first
+    ``params.ivf_centroids`` vectors. The centroid side is tiny →
+    broadcast join at scale."""
+    return ivf_multi_assign_sql(
+        d, emb_rel, _first_centroids(emb_rel, params), 1
     )
-    SELECT vec_id, centroid_id, cos_c FROM ranked WHERE rn = 1
-    """
 
 
 def ivf_topk_sql(
@@ -148,28 +149,20 @@ def ivf_topk_sql(
     params: CorpusParams = DEFAULT_CORPUS_PARAMS,
 ) -> str:
     """ANN top-k probing the ``params.ivf_probes`` centroid lists nearest
-    the query."""
+    the query: the probe set is the query's top-``ivf_probes``
+    assignment, whose rank 1 is the query's own list."""
     k = params.topk if k is None else k
     cos_q = cosine_prenorm_expr(
         d, "e.embedding", "q.embedding", norm_expr(d, "e.embedding"), "q.qn"
     )
-    assign = ivf_assign_sql(d, emb_rel, params)
+    probes = ivf_multi_assign_sql(
+        d, "q", _first_centroids(emb_rel, params), params.ivf_probes
+    )
     return f"""
-    WITH assigned AS ({assign}),
-    q AS (SELECT embedding, {norm_expr(d, "embedding")} AS qn
+    WITH assigned AS ({ivf_assign_sql(d, emb_rel, params)}),
+    q AS (SELECT vec_id, embedding, {norm_expr(d, "embedding")} AS qn
           FROM {emb_rel} WHERE vec_id = {query_vec_id}),
-    probe AS (
-      SELECT centroid_id FROM assigned WHERE vec_id = {query_vec_id}
-      UNION ALL
-      SELECT centroid_id FROM (
-        SELECT c.vec_id AS centroid_id,
-               row_number() OVER (PARTITION BY c.vec_id % 1
-                 ORDER BY {cosine_expr(d, "c.embedding", "q.embedding")} DESC,
-                          c.vec_id) AS rn
-        FROM {emb_rel} c, q WHERE c.vec_id < {params.ivf_centroids}
-      ) ranked_probe WHERE rn <= {params.ivf_probes}
-    ),
-    probe_set AS (SELECT DISTINCT centroid_id FROM probe),
+    probe_set AS ({probes}),
     pruned AS (
       SELECT a.vec_id FROM assigned a
       JOIN probe_set p ON a.centroid_id = p.centroid_id
@@ -184,15 +177,6 @@ def ivf_topk_sql(
 
 KMEANS_SAMPLE_MOD = _P.kmeans_sample_mod  # deterministic 1/mod sample (hash-picked)
 KMEANS_ITERS = _P.kmeans_iters
-TRAINED_CENTROIDS = _P.trained_centroids  # oversegments (lists ≥ clusters)
-TRAINED_PROBES = _P.trained_probes
-
-
-def _arr_at(d: SqlDialect, arr: str, idx1: str) -> str:
-    """1-based array element access."""
-    if d.name == d.SPARK:
-        return f"element_at({arr}, CAST({idx1} AS INT))"
-    return f"{arr}[{idx1}]"
 
 
 def kmeans_centroids_ctes(
@@ -235,19 +219,9 @@ def kmeans_centroids_ctes(
     ]
     prev = "c0"
     for t in range(1, iters + 1):
-        if d.name == d.SPARK:
-            parts.append(
-                f"a{t} AS ({spark_topr_assign_sql('samp', prev, 1, 'emb')})"
-            )
-        else:
-            parts.append(
-                f"a{t} AS (SELECT vec_id, centroid_id FROM ("
-                f"SELECT s.vec_id, c.centroid_id, "
-                f"row_number() OVER (PARTITION BY s.vec_id "
-                f"ORDER BY {cosine_expr(d, 's.emb', 'c.emb')} DESC, "
-                f"c.centroid_id) AS rn "
-                f"FROM samp s CROSS JOIN {prev} c) x WHERE rn = 1)"
-            )
+        parts.append(
+            f"a{t} AS ({ivf_multi_assign_sql(d, 'samp', prev, 1, 'emb')})"
+        )
         if d.name == d.SPARK:
             # Bucket-wise VECTOR mean, no per-dimension explode: the old
             # d{t} stage unnested sample × dims rows through a
@@ -282,9 +256,8 @@ def kmeans_centroids_ctes(
         else:
             # oracle dialect: fixture-scale only, the per-dimension
             # unnest is fine and keeps the SQL simple
-            val = _arr_at(d, "s.emb", "t.pos")
             parts.append(
-                f"d{t} AS (SELECT a.centroid_id, t.pos, avg({val}) AS v "
+                f"d{t} AS (SELECT a.centroid_id, t.pos, avg(s.emb[t.pos]) AS v "
                 f"FROM a{t} a JOIN samp s USING (vec_id) "
                 f"CROSS JOIN LATERAL (SELECT unnest(generate_series(1, "
                 f"len(s.emb))) AS pos) t "
@@ -347,20 +320,12 @@ def ann_ivf_trained_sql(
     cos_q = cosine_prenorm_expr(
         d, "e.embedding", "q.embedding", norm_expr(d, "e.embedding"), "q.qn"
     )
-    cos_probe = cosine_expr(d, "c.emb", "q.embedding")
     return f"""
     {prelude}
     assigned AS ({_argmax_body(d, emb_rel, cents, assigned_rel)}),
-    q AS (SELECT embedding, {norm_expr(d, "embedding")} AS qn
+    q AS (SELECT vec_id, embedding, {norm_expr(d, "embedding")} AS qn
           FROM {emb_rel} WHERE vec_id = {query_vec_id}),
-    probe_set AS (
-      SELECT centroid_id FROM (
-        SELECT c.centroid_id,
-               row_number() OVER (PARTITION BY c.centroid_id % 1
-                 ORDER BY {cos_probe} DESC, c.centroid_id) AS rn
-        FROM {cents} c CROSS JOIN q
-      ) rp WHERE rn <= {probes}
-    ),
+    probe_set AS ({ivf_multi_assign_sql(d, "q", cents, probes)}),
     pruned AS (
       SELECT a.vec_id FROM assigned a
       JOIN probe_set p ON a.centroid_id = p.centroid_id
@@ -374,44 +339,28 @@ def ann_ivf_trained_sql(
 
 
 def embedding_neardup_sql(
-    d: SqlDialect, threshold: float = 0.3, emb_rel: str = "embeddings"
+    d: SqlDialect, threshold: float = NEARDUP_THRESHOLD,
+    emb_rel: str = "embeddings",
+    params: CorpusParams = DEFAULT_CORPUS_PARAMS,
 ) -> str:
-    """Embedding-cosine near-duplicate pairs, IVF-bucketed.
+    """Embedding-cosine near-duplicate pairs, IVF-bucketed over the
+    ``params.ivf_centroids`` untrained lists (:func:`ivf_assign_sql`).
 
     Pairs are only compared within the same centroid list, so the
-    comparison count scales with bucket sizes (not |corpus|²).
+    comparison count scales with bucket sizes (not |corpus|²). Same pair
+    stage as the trained variant (:func:`neardup_pairs_from_assigned_sql`;
+    its DISTINCT finds no duplicates under single assignment).
     """
-    assign = ivf_assign_sql(d, emb_rel)
-    cos = cosine_prenorm_expr(
-        d, "ea.embedding", "eb.embedding", "ea.nrm", "eb.nrm"
+    pairs = neardup_pairs_from_assigned_sql(d, "norms", "assigned", threshold)
+    return (
+        f"WITH assigned AS ({ivf_assign_sql(d, emb_rel, params)}), "
+        f"norms AS ({emb_norms_sql(d, emb_rel)}) {pairs}"
     )
-    if d.name == d.SPARK:
-        # fenced cut — see neardup_pairs_from_assigned_sql
-        return f"""
-    WITH assigned AS ({assign}),
-    norms AS ({emb_norms_sql(d, emb_rel)})
-    SELECT vec_a, vec_b, cosine FROM (
-      SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine{d.fence_field()}
-      FROM assigned a
-      JOIN assigned b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-      JOIN norms ea ON ea.vec_id = a.vec_id
-      JOIN norms eb ON eb.vec_id = b.vec_id
-    ) verified WHERE {d.fence_pred()}cosine >= {threshold}
-    """
-    return f"""
-    WITH assigned AS ({assign}),
-    norms AS ({emb_norms_sql(d, emb_rel)})
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine
-    FROM assigned a
-    JOIN assigned b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-    JOIN norms ea ON ea.vec_id = a.vec_id
-    JOIN norms eb ON eb.vec_id = b.vec_id
-    WHERE {cos} >= {threshold}
-    """
 
 
 def embedding_neardup_exact_sql(
-    d: SqlDialect, threshold: float = 0.3, emb_rel: str = "embeddings"
+    d: SqlDialect, threshold: float = NEARDUP_THRESHOLD,
+    emb_rel: str = "embeddings",
 ) -> str:
     """Embedding-cosine near-duplicate pairs, exact all-pairs baseline.
 
@@ -420,13 +369,14 @@ def embedding_neardup_exact_sql(
     variant (`embedding_neardup_sql`), never on the full corpus. At
     100 TB the bucketed join is the only viable shape; this query is
     what its recall is measured against (tests/test_corpus_ops.py).
+    The pairs are scored where they are formed (no candidate relation
+    to join back to the norms); the threshold cut is fenced as in
+    :func:`cosine_verify_sql`.
     """
     cos = cosine_prenorm_expr(
         d, "ea.embedding", "eb.embedding", "ea.nrm", "eb.nrm"
     )
-    if d.name == d.SPARK:
-        # fenced cut — see neardup_pairs_from_assigned_sql
-        return f"""
+    return f"""
     WITH norms AS ({emb_norms_sql(d, emb_rel)})
     SELECT vec_a, vec_b, cosine FROM (
       SELECT ea.vec_id AS vec_a, eb.vec_id AS vec_b, {cos} AS cosine{d.fence_field()}
@@ -434,21 +384,14 @@ def embedding_neardup_exact_sql(
       JOIN norms eb ON ea.vec_id < eb.vec_id
     ) verified WHERE {d.fence_pred()}cosine >= {threshold}
     """
-    return f"""
-    WITH norms AS ({emb_norms_sql(d, emb_rel)})
-    SELECT ea.vec_id AS vec_a, eb.vec_id AS vec_b, {cos} AS cosine
-    FROM norms ea
-    JOIN norms eb ON ea.vec_id < eb.vec_id
-    WHERE {cos} >= {threshold}
-    """
 
 
 def embedding_neardup_trained_sql(
     d: SqlDialect,
-    threshold: float = 0.3,
+    threshold: float = NEARDUP_THRESHOLD,
     emb_rel: str = "embeddings",
     n_centroids: int | None = None,
-    assign_r: int = 2,
+    assign_r: int = NEARDUP_ASSIGN_R,
     cents_rel: str | None = None,
     params: CorpusParams = DEFAULT_CORPUS_PARAMS,
 ) -> str:
@@ -538,33 +481,29 @@ def spark_topr_assign_sql(
 
 
 def _window_assign_sql(
-    d: SqlDialect, emb_rel: str, cents_rel: str, cut: str
+    d: SqlDialect, emb_rel: str, cents_rel: str, assign_r: int, vec_col: str,
 ) -> str:
-    """The oracle's assignment: row_number over the (vector, centroid)
-    cross join, kept where ``rn {cut}`` (the callers' texts are pinned
-    byte-for-byte, trailing whitespace included)."""
-    cos_assign = cosine_expr(d, "e.embedding", "c.emb")
+    """The oracle's top-r assignment: row_number over the (vector,
+    centroid) cross join, kept where ``rn <= assign_r``."""
+    cos_assign = cosine_expr(d, f"e.{vec_col}", "c.emb")
     return f"""
       SELECT vec_id, centroid_id FROM (
         SELECT e.vec_id, c.centroid_id,
                row_number() OVER (PARTITION BY e.vec_id
                                   ORDER BY {cos_assign} DESC, c.centroid_id) AS rn
         FROM {emb_rel} e CROSS JOIN {cents_rel} c
-      ) x WHERE rn {cut}"""
+      ) x WHERE rn <= {assign_r}"""
 
 
 def _argmax_body(
     d: SqlDialect, emb_rel: str, cents: str, assigned_rel: str | None,
-    cut: str = "= 1\n    ",
 ) -> str:
     """The ``assigned`` CTE of the single-assignment trained builders:
     the runner's materialized ``assigned_rel`` when given, else the
-    argmax in the dialect's form."""
+    top-1 of :func:`ivf_multi_assign_sql`."""
     if assigned_rel is not None:
         return f"SELECT vec_id, centroid_id FROM {assigned_rel}"
-    if d.name == d.SPARK:
-        return spark_topr_assign_sql(emb_rel, cents, 1)
-    return _window_assign_sql(d, emb_rel, cents, cut)
+    return ivf_multi_assign_sql(d, emb_rel, cents, 1)
 
 
 def _cents_prelude(
@@ -729,68 +668,69 @@ def assign_df(
 
 
 def ivf_multi_assign_sql(
-    d: SqlDialect, emb_rel: str, cents_rel: str, assign_r: int = 2
+    d: SqlDialect, emb_rel: str, cents_rel: str,
+    assign_r: int = NEARDUP_ASSIGN_R, vec_col: str = "embedding",
 ) -> str:
-    """Multi-assignment stage: each vector's ``assign_r`` closest
-    centroids. Staged separately so the Spark runner can materialize it:
-    the pair join reads it from BOTH sides. Spark runs the aggregate
-    top-r (:func:`spark_topr_assign_sql`, which adds the rank as
-    ``arank``); the oracle keeps the row_number-over-cross-join text,
-    (vec_id, centroid_id)."""
+    """THE top-r over centroids: each row of ``emb_rel`` (vec_id,
+    ``vec_col``) with its ``assign_r`` closest centroids of
+    ``cents_rel`` (centroid_id, emb) — by rounded cosine, ties to the
+    lower centroid_id. Every assignment, k-means step and probe set runs
+    it; staged separately where the Spark runner materializes it (the
+    pair join reads it from BOTH sides). Spark runs the aggregate top-r
+    (:func:`spark_topr_assign_sql`, which adds the rank as ``arank``);
+    the oracle runs the row_number window (:func:`_window_assign_sql`,
+    (vec_id, centroid_id))."""
     if d.name == d.SPARK:
-        return spark_topr_assign_sql(emb_rel, cents_rel, assign_r)
-    return _window_assign_sql(d, emb_rel, cents_rel, f"<= {assign_r}")
+        return spark_topr_assign_sql(emb_rel, cents_rel, assign_r, vec_col)
+    return _window_assign_sql(d, emb_rel, cents_rel, assign_r, vec_col)
 
 
-def neardup_pairs_from_assigned_sql(
-    d: SqlDialect, norms_rel: str, assigned_rel: str, threshold: float = 0.3
+def cosine_verify_sql(
+    d: SqlDialect, cand_rel: str, norms_rel: str, threshold: float,
 ) -> str:
-    """Pair stage over (materialized) multi-assignment + norm relations.
-
-    ``norms_rel`` must expose (vec_id, embedding, nrm) — see
-    :func:`emb_norms_sql`; the verify then pays one dot per pair."""
+    """THE embedding pair verify: (vec_a, vec_b, cosine) for the
+    candidate pairs of ``cand_rel`` (vec_a, vec_b) whose cosine reaches
+    ``threshold``, scored with the hoisted norms of ``norms_rel``
+    (vec_id, embedding, nrm — see :func:`emb_norms_sql`): one dot per
+    pair. One text for both dialects: on Spark the threshold cut is
+    fenced (dialect.fence_field) — without it the WHERE re-evaluates the
+    pair dot below the projection (Filter predicates get no
+    subexpression elimination), 2 dots per candidate pair instead of 1,
+    measured ~2x the verify stage at 48M candidates; on DuckDB the fence
+    emits nothing."""
     cos = cosine_prenorm_expr(
         d, "ea.embedding", "eb.embedding", "ea.nrm", "eb.nrm"
     )
-    if d.name == d.SPARK:
-        # fenced threshold cut (dialect.fence_field): without it the
-        # WHERE re-evaluates the pair dot below the projection (Filter
-        # predicates get no subexpression elimination) — 2 dots per
-        # candidate pair instead of 1, measured ~2x the verify stage at
-        # 48M candidates. DuckDB keeps the original single-SELECT text
-        # (its optimizer CSEs the shared aggregate).
-        return f"""
+    return f"""
     SELECT vec_a, vec_b, cosine FROM (
       SELECT c.vec_a, c.vec_b, {cos} AS cosine{d.fence_field()}
-      FROM (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM {assigned_rel} a
-        JOIN {assigned_rel} b
-          ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-      ) c
+      FROM {cand_rel} c
       JOIN {norms_rel} ea ON ea.vec_id = c.vec_a
       JOIN {norms_rel} eb ON eb.vec_id = c.vec_b
     ) verified WHERE {d.fence_pred()}cosine >= {threshold}
     """
-    return f"""
-    SELECT c.vec_a, c.vec_b, {cos} AS cosine
-    FROM (
-      SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-      FROM {assigned_rel} a
-      JOIN {assigned_rel} b
-        ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-    ) c
-    JOIN {norms_rel} ea ON ea.vec_id = c.vec_a
-    JOIN {norms_rel} eb ON eb.vec_id = c.vec_b
-    WHERE {cos} >= {threshold}
-    """
+
+
+def neardup_pairs_from_assigned_sql(
+    d: SqlDialect, norms_rel: str, assigned_rel: str,
+    threshold: float = NEARDUP_THRESHOLD,
+) -> str:
+    """Pair stage over (materialized) multi-assignment + norm relations:
+    the distinct pairs sharing a list, through :func:`cosine_verify_sql`."""
+    cand = f"""(
+        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM {assigned_rel} a
+        JOIN {assigned_rel} b
+          ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
+      )"""
+    return cosine_verify_sql(d, cand, norms_rel, threshold)
 
 
 def neardup_pairs_from_assigned_df(
     spark,
     norms_rel: str,
     assigned_rel: str,
-    threshold: float = 0.3,
+    threshold: float = NEARDUP_THRESHOLD,
 ):
     """DataFrame twin of :func:`neardup_pairs_from_assigned_sql` with the
     per-pair dot products computed as per-BUCKET vectorized batches in
@@ -949,7 +889,7 @@ def ivf_occupancy_sql(
     prelude, cents = _cents_prelude(d, emb_rel, cents_rel, None, params)
     return f"""
     {prelude}
-    assigned AS ({_argmax_body(d, emb_rel, cents, assigned_rel, "<= 1")}),
+    assigned AS ({_argmax_body(d, emb_rel, cents, assigned_rel)}),
     tot AS (SELECT count(*) AS n FROM assigned)
     SELECT centroid_id,
            CAST(count(*) AS BIGINT) AS n_vectors,
@@ -975,9 +915,15 @@ def ann_topk_batch_sql(
     a batch, kNN-label a batch), not one query at a time.
 
     Scale shape: the query relation and centroid relation are both tiny
-    (broadcast); every query probes its best ``probes`` k-means lists;
+    (broadcast); every query probes its best ``probes`` k-means lists
+    (its top-``probes`` assignment, :func:`ivf_multi_assign_sql`);
     candidates come from ONE bucket join (assignment × probe set);
-    ranking is one window partitioned BY QUERY. Corpus rows outside
+    ranking is one window partitioned BY QUERY. On the sf0.01 plan
+    Spark 4.1 cuts its ``rnk <= k`` with a (Final) WindowGroupLimit and
+    adds no exchange: the candidates arrive hash-partitioned by query,
+    the key of the probe set's top-r aggregate (ann_stream's
+    ``ann_query_store``, whose probe set is checkpointed, gets a Partial
+    plus Final pair around a query-keyed exchange). Corpus rows outside
     every probed list are never scored. With Q queries the cost is
     Q × probed-fraction of the corpus — never Q × |corpus|.
 
@@ -987,27 +933,19 @@ def ann_topk_batch_sql(
     k = params.topk if k is None else k
     probes = params.trained_probes if probes is None else probes
     prelude, cents = _cents_prelude(d, emb_rel, cents_rel, None, params)
-    cos_probe = cosine_expr(d, "c.emb", "q.embedding")
     cos_q = cosine_prenorm_expr(
         d, "n.embedding", "q.embedding", "n.nrm", "q.qn"
     )
     return f"""
     {prelude}
     assigned AS ({_argmax_body(d, emb_rel, cents, assigned_rel)}),
-    q AS (SELECT vec_id AS q_id, embedding, {norm_expr(d, "embedding")} AS qn
+    q AS (SELECT vec_id, embedding, {norm_expr(d, "embedding")} AS qn
           FROM {emb_rel} WHERE vec_id < {n_queries}),
-    probe_set AS (
-      SELECT q_id, centroid_id FROM (
-        SELECT q.q_id, c.centroid_id,
-               row_number() OVER (PARTITION BY q.q_id
-                                  ORDER BY {cos_probe} DESC, c.centroid_id) AS rn
-        FROM {cents} c CROSS JOIN q
-      ) rp WHERE rn <= {probes}
-    ),
+    probe_set AS ({ivf_multi_assign_sql(d, "q", cents, probes)}),
     cand AS (
-      SELECT p.q_id, a.vec_id
+      SELECT p.vec_id AS q_id, a.vec_id
       FROM probe_set p JOIN assigned a ON a.centroid_id = p.centroid_id
-      WHERE a.vec_id != p.q_id
+      WHERE a.vec_id != p.vec_id
     ),
     norms AS (SELECT vec_id, label, embedding,
               {norm_expr(d, "embedding")} AS nrm FROM {emb_rel})
@@ -1017,7 +955,7 @@ def ann_topk_batch_sql(
                                 ORDER BY {cos_q} DESC, c.vec_id) AS rnk
       FROM cand c
       JOIN norms n ON n.vec_id = c.vec_id
-      JOIN q ON q.q_id = c.q_id
+      JOIN q ON q.vec_id = c.q_id
     ) ranked WHERE rnk <= {k}
     """
 

@@ -136,7 +136,8 @@ def emb_neardup_trained_query(
         # centroids (pure codegen projection; same rows as the Spark
         # aggregate form and the oracle's row_number text — see
         # similarity.assign_df)
-        ("ivf_assigned", _df_stage(partial(similarity.assign_df, assign_r=2))),
+        ("ivf_assigned", _df_stage(partial(
+            similarity.assign_df, assign_r=similarity.NEARDUP_ASSIGN_R))),
         ("emb_norms", similarity.emb_norms_sql),
     ])
     return similarity.neardup_pairs_from_assigned_df(
@@ -281,8 +282,6 @@ def build_corpus_queries(params):
     ngram_sets = ("ngram_sets", _df_stage(shingle_batch.ngram_sets_df))
     retention = partial(dedup.corpus_retention_from_sigs_sql,
                         docs_rel="documents", sigs_rel="minhash_sigs", params=p)
-    sim = dict(k=p.simhash_hamming_k, bands=p.simhash_bands,
-               band_bits=p.simhash_band_bits)
 
     def ivf_staged(builder):
         # the trained-ANN runners stage the argmax ASSIGNMENT as well as
@@ -348,8 +347,9 @@ def build_corpus_queries(params):
                 shingle_batch.simhash_sketches_df, bands=p.simhash_bands,
                 band_bits=p.simhash_band_bits)))],
             lambda d: dedup.simhash_pairs_from_sketches_sql(
-                d, "simhash_sketches", **sim),
-            partial(dedup.simhash_neardup_pairs_sql, **sim),
+                d, "simhash_sketches", p.simhash_hamming_k, p.simhash_bands),
+            partial(dedup.simhash_neardup_pairs_sql, k=p.simhash_hamming_k,
+                    bands=p.simhash_bands, band_bits=p.simhash_band_bits),
             docs,
         ),
         "dedup_ngram_jaccard": _staged_query(
@@ -371,7 +371,8 @@ def build_corpus_queries(params):
             partial(similarity.ann_topk_ivf_quantized_sql, params=p), emb),
         "ann_topk_ivf_trained": ivf_staged(similarity.ann_ivf_trained_sql),
         "ann_topk_batch": ivf_staged(similarity.ann_topk_batch_sql),
-        "embedding_neardup_ivf": _sql_query(similarity.embedding_neardup_sql, emb),
+        "embedding_neardup_ivf": _sql_query(
+            partial(similarity.embedding_neardup_sql, params=p), emb),
         "embedding_neardup_exact": _sql_query(
             similarity.embedding_neardup_exact_sql, emb),
         "embedding_neardup_trained": (

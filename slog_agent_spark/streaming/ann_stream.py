@@ -18,8 +18,8 @@ at a time —
   cannot change it — hoist each vector's norm, and append to
   ``<store>/vectors`` partitioned by (batch_id, centroid_id).
 - QUERY any time (:func:`ann_query_store`): pick each query's probed
-  lists with the batch engine's aggregate top-r
-  (similarity.spark_topr_assign_sql, r = probes) over the tiny
+  lists with the batch engine's top-r (similarity.ivf_multi_assign_sql,
+  r = probes: on Spark the aggregate form) over the tiny
   centroid table, read the store PARTITION-PRUNED to the probed
   centroid_ids — the scan is the probed lists, never the corpus — and
   rank with the stored norms. Value-identical to the batch
@@ -141,19 +141,18 @@ def ann_ingest_batch_handler(store_dir: str, cents_path: str):
 
 
 def ann_neardup_batch_handler(
-    store_dir: str,
-    cents_path: str,
-    threshold: float = 0.3,
-    assign_r: int = 2,
-    stats: list | None = None,
+    store_dir: str, cents_path: str, stats: list | None = None,
 ):
     """foreachBatch handler for INCREMENTAL embedding-cosine near-dup —
     the streaming twin of the batch ``embedding_neardup_trained`` query
-    (multi-assignment IVF bucketing, cosine verify): each micro-batch
-    multi-assigns its vectors, joins its assignments against the vector
-    store's touched lists (new-vs-store catches pairs across batches,
-    new-vs-new within one), verifies candidates with the stored norms,
-    and appends (vectors, pairs) to the store.
+    (multi-assignment IVF bucketing, cosine verify, at the batch
+    query's sizing: similarity.NEARDUP_ASSIGN_R lists per vector,
+    similarity.NEARDUP_THRESHOLD): each micro-batch multi-assigns its
+    vectors, joins its assignments against the vector store's touched
+    lists (new-vs-store catches pairs across batches, new-vs-new within
+    one), verifies candidates with the stored norms through the batch
+    engine's verify (similarity.cosine_verify_sql), and appends
+    (vectors, pairs) to the store.
 
     Invariant (tested): after draining any input split, the union of
     per-batch pair outputs equals the batch trained near-dup pair set
@@ -167,11 +166,14 @@ def ann_neardup_batch_handler(
     embedding and norm. ``stats`` receives per-batch candidate/scan
     counts.
     """
+    verify = similarity.cosine_verify_sql(
+        SPARK_D, "cand", "embs", similarity.NEARDUP_THRESHOLD
+    )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         new_assigned = _assign_batch(
-            batch_df, cents_path, assign_r
+            batch_df, cents_path, similarity.NEARDUP_ASSIGN_R
         ).localCheckpoint()
         new_assigned.createOrReplaceTempView("annd_new")
         pruned, touched = _store.read_prior(
@@ -190,9 +192,6 @@ def ann_neardup_batch_handler(
         store_rows = (
             "UNION ALL SELECT vec_id, centroid_id FROM annd_store"
             if has_store else ""
-        )
-        cos = similarity.cosine_prenorm_expr(
-            SPARK_D, "ea.embedding", "eb.embedding", "ea.nrm", "eb.nrm"
         )
         emb_rows = (
             "UNION ALL SELECT vec_id, embedding, nrm FROM annd_store"
@@ -218,13 +217,7 @@ def ann_neardup_batch_handler(
             FROM (SELECT vec_id, embedding, nrm FROM annd_new {emb_rows})
           ) z WHERE dd = 1
         )
-        SELECT vec_a, vec_b, cosine FROM (
-          SELECT c.vec_a, c.vec_b, {cos} AS cosine{SPARK_D.fence_field()}
-          FROM cand c
-          JOIN embs ea ON ea.vec_id = c.vec_a
-          JOIN embs eb ON eb.vec_id = c.vec_b
-        ) v WHERE {SPARK_D.fence_pred()}cosine >= {threshold}
-        """)
+        {verify}""")
         _store.commit_batch(pairs, store_dir, _PAIRS, batch_id)
         _store.commit_batch(new_assigned, store_dir, _VECTORS, batch_id)
         if stats is not None:
@@ -255,8 +248,12 @@ def ann_query_store(
     Scale shape: probe ranking touches only the centroid table; the
     store scan is partition-pruned to the probed centroid_ids (the
     union over queries), so rows scored = the probed lists' occupancy,
-    never the corpus. ``stats`` (a dict) receives scanned/total row
-    counts — the bounded-read evidence the tests assert on.
+    never the corpus. The final rank stays a window: on the sf0.01 plan
+    Spark 4.1 cuts ``rnk <= k`` with a Partial WindowGroupLimit below
+    the query-keyed exchange and a Final one above it, so at most k rows
+    per query and partition are shuffled. ``stats`` (a dict) receives
+    scanned/total row counts — the bounded-read evidence the tests
+    assert on.
     """
     k = params.topk if k is None else k
     probes = params.trained_probes if probes is None else probes
@@ -269,9 +266,9 @@ def ann_query_store(
     spark.read.parquet(cents_path).createOrReplaceTempView("ann_cents")
     # query relation: tiny (vec_id pushdown on the parquet scan)
     store.where(F.col("vec_id") < n_queries).createOrReplaceTempView("ann_q")
-    # each query's ``probes`` nearest lists: the aggregate top-r
+    # each query's ``probes`` nearest lists: the batch engine's top-r
     probe_set = spark.sql(
-        similarity.spark_topr_assign_sql("ann_q", "ann_cents", probes)
+        similarity.ivf_multi_assign_sql(SPARK_D, "ann_q", "ann_cents", probes)
     ).localCheckpoint()
     probe_set.createOrReplaceTempView("ann_probe_set")
 

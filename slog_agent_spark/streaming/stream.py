@@ -80,21 +80,19 @@ def pipeline_batch_handler(sink_dir: str):
     return handle_batch
 
 
-def stream_metrics_total(
-    spark: SparkSession, sink_dir: str, cfg=None
-) -> DataFrame:
+def stream_metrics_total(spark: SparkSession, sink_dir: str) -> DataFrame:
     """Cumulative per-keyset process counters across every drained
     micro-batch — value- and schema-identical to the batch job's
     ``process_metrics`` over the union of the batch inputs (pinned by
     tests/test_streaming.py). Every counter is additive, so the rollup
     is one groupBy over the key columns summing each counter partial;
     feed the result to ``operators.metrics.prometheus_dump`` for the
-    reference's .prom shape."""
+    reference's .prom shape. The keys are ``DEFAULT_CONFIG``'s, the ones
+    :func:`pipeline_batch_handler` writes."""
     from ..plans.config import DEFAULT_CONFIG
 
-    cfg = cfg or DEFAULT_CONFIG
     df = _store.drained_table(spark, f"{sink_dir}/metrics")
-    keys = list(cfg.orchestration_keys) + list(cfg.metric_keys)
+    keys = [*DEFAULT_CONFIG.orchestration_keys, *DEFAULT_CONFIG.metric_keys]
     counters = [c for c in df.columns if c not in keys + ["batch_id"]]
     return df.groupBy(*keys).agg(
         *[F.sum(c).cast("long").alias(c) for c in counters]
@@ -357,15 +355,11 @@ def neardup_batch_handler(
     from ..plans.corpus_config import DEFAULT_CORPUS_PARAMS
 
     params = params or DEFAULT_CORPUS_PARAMS
-    jac = dedup.jaccard_expr(SPARK_D, "a.shingle_set", "b.shingle_set")
-    verify = f"""
-    SELECT doc_a, doc_b, jaccard FROM (
-      SELECT c.doc_a, c.doc_b, {jac} AS jaccard{SPARK_D.fence_field()}
-      FROM nd_cand c
-      JOIN nd_payload a ON a.doc_id = c.doc_a
-      JOIN nd_payload b ON b.doc_id = c.doc_b
-    ) WHERE {SPARK_D.fence_pred()}jaccard >= {params.jaccard_threshold}
-    """
+    verify = (
+        f"WITH verified AS "
+        f"({dedup.jaccard_verify_sql(SPARK_D, 'nd_cand', 'nd_payload')}) "
+        + dedup.minhash_pairs_final(SPARK_D, params.jaccard_threshold)
+    )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -922,24 +916,13 @@ def simhash_batch_handler(store_dir: str, stats: list | None = None):
     from ..functions.dialect import SPARK as SPARK_D
     from ..operators import dedup, shingle_batch
 
-    band_names = [f"sb{b}" for b in range(dedup.SIMHASH_BANDS)]
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_key, '{b}' AS band_id FROM sh_new_sk"
-        for b in band_names
+    bands = dedup.SIMHASH_BANDS
+    band_rows = dedup.simhash_band_rows_sql("sh_new_sk", bands)
+    verify = (
+        f"WITH verified AS "
+        f"({dedup.hamming_verify_sql(SPARK_D, 'sh_cand', 'sh_payload', bands)}) "
+        + dedup.simhash_pairs_final(SPARK_D, dedup.SIMHASH_HAMMING_K)
     )
-    hamming = " + ".join(
-        SPARK_D.bit_count(SPARK_D.xor(f"a.{b}", f"b.{b}"))
-        for b in band_names
-    )
-    verify = f"""
-    SELECT doc_a, doc_b, hamming FROM (
-      SELECT c.doc_a, c.doc_b,
-             CAST(({hamming}) AS INT) AS hamming{SPARK_D.fence_field()}
-      FROM sh_cand c
-      JOIN sh_payload a ON a.doc_id = c.doc_a
-      JOIN sh_payload b ON b.doc_id = c.doc_b
-    ) scored WHERE {SPARK_D.fence_pred()}hamming <= {dedup.SIMHASH_HAMMING_K}
-    """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -953,7 +936,7 @@ def simhash_batch_handler(store_dir: str, stats: list | None = None):
         new_banded = spark.sql(band_rows).localCheckpoint()
         _, n = _banded_lsh(
             store_dir, _store.SIMHASH, batch_id, new_sk, new_banded,
-            band_names, "sh", verify, stats is not None,
+            [f"sb{b}" for b in range(bands)], "sh", verify, stats is not None,
         )
         if stats is not None:
             stats.append({

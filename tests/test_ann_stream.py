@@ -184,3 +184,21 @@ def test_query_probe_set_runs_no_window(spark, sf_dir, monkeypatch):
              for ln in plan.toString().splitlines()]
     assert "Window" not in nodes
     assert any(n.endswith("Aggregate") for n in nodes)
+
+
+def test_batch_probe_sets_run_no_window(spark, sf_dir):
+    """The batch IVF probe sets are the query relation's top-probes
+    assignment (similarity.ivf_multi_assign_sql), the aggregate top-r on
+    Spark: the single-query top-k plans hold no Window node, and
+    ann_topk_batch holds exactly one, its per-query final rank."""
+    def windows(name):
+        plan = Q[name][0](spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        return [ln.lstrip(" :+-").split(" ")[0]
+                for ln in plan.toString().splitlines()].count("Window")
+
+    names = ("ann_topk_ivf", "ann_topk_ivf_quantized", "ann_topk_ivf_trained",
+             "ann_topk_batch")
+    assert {n: windows(n) for n in names} == {
+        "ann_topk_ivf": 0, "ann_topk_ivf_quantized": 0,
+        "ann_topk_ivf_trained": 0, "ann_topk_batch": 1,
+    }

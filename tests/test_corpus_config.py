@@ -89,19 +89,21 @@ def test_minhash_k24_bands3_is_live(spark, duck, sf_dir):
 
 @pytest.mark.parametrize(
     "name",
-    ["dedup_minhash_lsh_salted", "ann_topk_ivf_quantized", "ann_list_occupancy"],
+    ["dedup_minhash_lsh_salted", "ann_topk_ivf_quantized", "ann_list_occupancy",
+     "embedding_neardup_ivf"],
 )
 def test_job_sizing_is_live(spark, duck, sf_dir, name):
     """The corpus job's runner takes the configured sizing: its result
     matches the oracle twin AT those params, whose SQL differs from the
     default's. Each knob changes the fixture's rows (2 bands of 12 rows
     keep 27 of the 28 default MinHash pairs, 5 of 10 top-k rows, 12 of
-    16 lists), so a runner left at default sizing fails."""
+    16 lists, 196 of 238 IVF near-dup pairs over 12 untrained lists), so
+    a runner left at default sizing fails."""
     from jobs.run_corpus import registry
 
     params = dataclasses.replace(
         DEFAULT_CORPUS_PARAMS, minhash_k=24, lsh_bands=2,
-        trained_centroids=12, topk=5,
+        trained_centroids=12, topk=5, ivf_centroids=12,
     ).validate()
     _, oracle = build_corpus_queries(params)[name]
     assert oracle() != DEFAULT_QUERIES[name][1]()
