@@ -7,8 +7,35 @@ API — whole-stage codegen, predicate pushdown all apply). On the oracle
 path the same compiler emits DuckDB SQL, so the two engines execute the
 same compiled semantics and the driver's DuckDB comparison is meaningful.
 
-Only constructs with clean equivalents in both dialects are exposed;
-anything engine-specific must go through a method here, never inline.
+Every engine spelling lives in a method here: string, regex and hash
+functions, the array/list functions and generators, type names, the
+VALUES form. Each method emits one construct in both dialects, and its
+docstring names the inputs on which the two spellings disagree, so no
+caller relies on an equivalence that does not hold.
+
+An operator branches on ``d.name`` only where the two engines run
+different algorithms. These ten structural sites each carry a one-line
+comment with the reason:
+
+- ``eventops.asof_enrich_sql``: DuckDB's native ASOF JOIN against the
+  Spark carry window;
+- ``eventops.asof_enrich_segmented_sql``: the oracle delegates to the
+  plain as-of form;
+- ``eventops.funnel_sql``: a sorted-array scan against the
+  conditional-min chain;
+- ``similarity.kmeans_centroids_ctes``: the tree-aggregate vector mean
+  against a per-dimension unnest;
+- ``similarity.ivf_multi_assign_sql``: an aggregate against a window,
+  kept by measurement;
+- ``dedup.ngram_postings_sql``: a window df against groupBy + join,
+  kept by measurement;
+- ``dedup.dedup_groups_sql``: DuckDB-only (Spark runs the iterative
+  runner);
+- ``dedup.minhash_salted_ctes``: LATERAL VIEW against a cross join;
+- ``textops.doc_length_quantiles_sql``: ``approx_percentile`` against
+  ``quantile_disc``;
+- ``textops.boilerplate_from_common_sql``: the positional ``filter``
+  lambda against a list comprehension with ``coalesce``.
 """
 
 from __future__ import annotations
@@ -186,16 +213,171 @@ class SqlDialect:
 
     # -- maps / pools ----------------------------------------------------
     def pool(self, items: list[str], idx0: str) -> str:
-        lits = ", ".join(self.lit(s) for s in items)
-        if self.name == self.SPARK:
-            return f"element_at(array({lits}), CAST(({idx0}) + 1 AS INT))"
-        return f"[{lits}][CAST(({idx0}) + 1 AS INT)]"
+        lits = [self.lit(s) for s in items]
+        return self.element_at(self.array(*lits), f"CAST(({idx0}) + 1 AS INT)")
 
     def map_lookup(self, mapping: dict[str, str], key: str, default: str) -> str:
         """Constant dict lookup with default expr (small dims: stays a
         literal CASE — at bigger sizes callers should broadcast-join)."""
         whens = [(f"{key} = {self.lit(k)}", self.lit(v)) for k, v in mapping.items()]
         return self.case(whens, default)
+
+    # -- arrays, generators, aggregates -----------------------------------
+    # Spark's array functions against DuckDB's list functions, one name
+    # pair per construct. Each docstring names the inputs on which the
+    # two spellings disagree: no caller may rely on an equivalence that
+    # is not stated here.
+
+    def _fn(self, spark: str, duckdb: str, *args: str) -> str:
+        fn = spark if self.name == self.SPARK else duckdb
+        return f"{fn}({', '.join(args)})"
+
+    def size(self, arr: str) -> str:
+        """Element count. A NULL array gives NULL on both only under
+        Spark's ANSI mode (the default); without it Spark's ``size``
+        gives -1. Coalesce the array first where a NULL can reach it,
+        as :meth:`regexp_count` does."""
+        return self._fn("size", "len", arr)
+
+    def filter(self, arr: str, lam: str) -> str:
+        """Elements for which ``lam`` (``x -> pred``) holds, in order."""
+        return self._fn("filter", "list_filter", arr, lam)
+
+    def transform(self, arr: str, lam: str) -> str:
+        """``lam`` (``x -> expr``) applied to every element, in order."""
+        return self._fn("transform", "list_transform", arr, lam)
+
+    def array_distinct(self, arr: str) -> str:
+        """Distinct elements. Only the SET agrees: Spark keeps
+        first-occurrence order and one NULL, DuckDB's order is
+        unspecified and it drops NULLs."""
+        return self._fn("array_distinct", "list_distinct", arr)
+
+    def array_min(self, arr: str) -> str:
+        """Least non-NULL element; NULL for an empty array on both."""
+        return self._fn("array_min", "list_min", arr)
+
+    def array_max(self, arr: str) -> str:
+        """Greatest non-NULL element; NULL for an empty array on both."""
+        return self._fn("array_max", "list_max", arr)
+
+    def array_intersect(self, a: str, b: str) -> str:
+        """Distinct elements of ``a`` also in ``b``. Only the SET agrees:
+        Spark keeps ``a``'s order, DuckDB's order is unspecified."""
+        return self._fn("array_intersect", "list_intersect", a, b)
+
+    def array_union(self, a: str, b: str) -> str:
+        """Distinct elements of ``a`` or ``b``. Only the SET agrees, as
+        :meth:`array_distinct` (DuckDB drops NULLs)."""
+        if self.name == self.SPARK:
+            return f"array_union({a}, {b})"
+        return f"list_distinct(list_concat({a}, {b}))"
+
+    def explode(self, arr: str) -> str:
+        """Generator: one row per element; a NULL or empty array yields
+        no row on both."""
+        return self._fn("explode", "unnest", arr)
+
+    def sequence(self, start: str, stop: str) -> str:
+        """Integers ``start``..``stop``, both ends inclusive. Diverges
+        when ``stop < start``: Spark counts DOWN (``sequence(1, 0)`` is
+        ``[1, 0]``), DuckDB's ``generate_series(1, 0)`` is empty."""
+        return self._fn("sequence", "generate_series", start, stop)
+
+    def array_join(self, arr: str, sep: str) -> str:
+        """Elements joined by the literal ``sep``; NULL elements are
+        skipped on both. An EMPTY array diverges: Spark gives ``''``,
+        DuckDB's ``array_to_string`` NULL."""
+        return self._fn("array_join", "array_to_string", arr, self.lit(sep))
+
+    def slice(self, arr: str, start: str, length: int) -> str:
+        """``length`` elements from 1-based ``start`` (>= 1; Spark counts
+        a negative start from the end and rejects 0), clamped at the
+        array's end on both."""
+        if self.name == self.SPARK:
+            return f"slice({arr}, {start}, {length})"
+        return f"{arr}[{start}:{start}+{length - 1}]"
+
+    def str_split(self, col: str, sep: str) -> str:
+        """Split at every ``sep``. Spark's ``split`` reads ``sep`` as a
+        regex, so it must hold no regex metacharacter. ``''`` splits to
+        ``['']`` on both."""
+        return self._fn("split", "str_split", col, self.lit(sep))
+
+    def regexp_split(self, col: str, pattern: str) -> str:
+        """Split at every match of ``pattern`` (Java regex ∩ RE2)."""
+        return self._fn(
+            "split", "regexp_split_to_array", col, self.lit(pattern)
+        )
+
+    def array(self, *items: str) -> str:
+        """Array literal of the given element expressions."""
+        if self.name == self.SPARK:
+            return f"array({', '.join(items)})"
+        return f"[{', '.join(items)}]"
+
+    def element_at(self, arr: str, idx: str) -> str:
+        """1-based element ``idx`` (an INT on Spark). Past the end
+        DuckDB gives NULL; Spark's ANSI mode raises."""
+        if self.name == self.SPARK:
+            return f"element_at({arr}, {idx})"
+        return f"{arr}[{idx}]"
+
+    def collect_list(self, expr: str) -> str:
+        """Aggregate to an array, order unspecified on both. NULL inputs
+        diverge: Spark's ``collect_list`` skips them, DuckDB's ``list``
+        keeps them."""
+        return self._fn("collect_list", "list", expr)
+
+    def percentile(self, col: str, p: str) -> str:
+        """Exact quantile ``p`` with linear interpolation between ranks
+        (Spark ``percentile`` ≡ DuckDB ``quantile_cont``)."""
+        return self._fn("percentile", "quantile_cont", col, p)
+
+    def double_array(self, expr: str) -> str:
+        """``expr`` cast to an array of DOUBLE."""
+        t = "ARRAY<DOUBLE>" if self.name == self.SPARK else "DOUBLE[]"
+        return f"CAST({expr} AS {t})"
+
+    def dot(self, a: str, b: str) -> str:
+        """Dot product of two vectors, in DOUBLE and accumulated left to
+        right on both engines. Lengths must match: Spark's ``zip_with``
+        pads the shorter with NULL (a NULL dot), DuckDB's
+        ``list_dot_product`` raises."""
+        a, b = self.double_array(a), self.double_array(b)
+        if self.name == self.SPARK:
+            return (
+                f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+                f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+            )
+        return f"list_dot_product({a}, {b})"
+
+    def dot_operand(self, col: str) -> str:
+        """SELECT item carrying vector column ``col`` into a relation
+        whose rows feed :meth:`dot`. Spark pre-casts it to ARRAY<DOUBLE>
+        once per vector, so every per-pair CAST in the dot is a no-op
+        (SimplifyCasts) instead of a fresh array; DuckDB's dot casts in
+        place, so the column passes as is. Same values (float→double is
+        exact)."""
+        if self.name == self.SPARK:
+            return f"{self.double_array(col)} AS {col}"
+        return col
+
+    def concat_fn(self, *parts: str) -> str:
+        """String concatenation without :meth:`concat`'s parentheses:
+        Spark's ``concat(...)`` call, DuckDB's bare ``||`` chain (its
+        ``concat()`` skips NULLs; ``||`` and Spark's ``concat`` return
+        NULL on any NULL part)."""
+        if self.name == self.SPARK:
+            return f"concat({', '.join(parts)})"
+        return " || ".join(parts)
+
+    def values(self, rows: str, alias: str) -> str:
+        """FROM item for the constant rows ``rows`` (``(a, b), ...``)
+        named ``alias`` (``t(c1, c2)``)."""
+        if self.name == self.SPARK:
+            return f"VALUES {rows} AS {alias}"
+        return f"(VALUES {rows}) {alias}"
 
     # -- hashing -----------------------------------------------------------
     def md5(self, col: str) -> str:

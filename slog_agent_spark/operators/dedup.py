@@ -32,22 +32,12 @@ JACCARD_THRESHOLD = _P.jaccard_threshold
 SIMHASH_BITS = 16
 
 
-def _size(d: SqlDialect, arr: str) -> str:
-    return f"size({arr})" if d.name == d.SPARK else f"len({arr})"
-
-
 def shingles_expr(d: SqlDialect, text_col: str = "text") -> str:
     """3-token shingles, hashed (md5) — the dedup unit for MinHash/Jaccard."""
     toks = tokens_expr(d, text_col)
-    n = _size(d, toks)
-    if d.name == d.SPARK:
-        return (
-            f"transform(sequence(1, greatest({n} - 2, 1)), "
-            f"i -> md5(array_join(slice({toks}, i, 3), ' ')))"
-        )
-    return (
-        f"list_transform(generate_series(1, greatest({n} - 2, 1)), "
-        f"i -> md5(array_to_string({toks}[i:i+2], ' ')))"
+    return d.transform(
+        d.sequence("1", f"greatest({d.size(toks)} - 2, 1)"),
+        f"i -> {d.md5(d.array_join(d.slice(toks, 'i', 3), ' '))}",
     )
 
 
@@ -67,14 +57,8 @@ def minhash_items(
     and the Jaccard verify."""
     items: dict[str, str] = {}
     for i in range(params.minhash_k):
-        if d.name == d.SPARK:
-            items[f"mh{i}"] = (
-                f"array_min(transform({arr_col}, x -> md5(concat(x, 'seed{i}'))))"
-            )
-        else:
-            items[f"mh{i}"] = (
-                f"list_min(list_transform({arr_col}, x -> md5(x || 'seed{i}')))"
-            )
+        seeded = d.md5(d.concat_fn("x", f"'seed{i}'"))
+        items[f"mh{i}"] = d.array_min(d.transform(arr_col, f"x -> {seeded}"))
     return items
 
 
@@ -103,12 +87,8 @@ def exact_dedup_sql(d: SqlDialect, docs_rel: str = "documents") -> str:
 
 def jaccard_expr(d: SqlDialect, a: str, b: str) -> str:
     """Exact Jaccard over two shingle-set columns."""
-    if d.name == d.SPARK:
-        inter = f"size(array_intersect({a}, {b}))"
-        union = f"size(array_union({a}, {b}))"
-    else:
-        inter = f"len(list_intersect({a}, {b}))"
-        union = f"len(list_distinct(list_concat({a}, {b})))"
+    inter = d.size(d.array_intersect(a, b))
+    union = d.size(d.array_union(a, b))
     return f"round(CAST({inter} AS DOUBLE) / greatest({union}, 1), 6)"
 
 
@@ -128,13 +108,10 @@ def minhash_signatures_sql(
     """
     mh = minhash_items(d, params=params)
     mh_sel = ", ".join(f"{e} AS {k}" for k, e in mh.items())
-    sh = shingles_expr(d)
-    dedup_shingles = (
-        f"array_distinct({sh})" if d.name == d.SPARK else f"list_distinct({sh})"
-    )
+    shingle_set = d.array_distinct(shingles_expr(d))
     return f"""
     WITH sets AS (
-      SELECT doc_id, {dedup_shingles} AS shingle_set FROM {docs_rel}
+      SELECT doc_id, {shingle_set} AS shingle_set FROM {docs_rel}
     )
     SELECT doc_id, shingle_set, {mh_sel} FROM sets
     """
@@ -294,16 +271,13 @@ def minhash_salted_ctes(
     )
     h = d.hex_to_long(d.md5(d.to_string("doc_id")))
     blk = f"CAST(({h} % {salt_blocks}) AS INT)"
+    gen = d.explode(d.sequence("0", str(salt_blocks - 1)))
+    repl = "SELECT doc_id, band_id, band_key, blk, t FROM blocked"
+    # structural: Spark's LATERAL VIEW against DuckDB's cross join
     if d.name == d.SPARK:
-        repl = (
-            "SELECT doc_id, band_id, band_key, blk, t FROM blocked "
-            f"LATERAL VIEW explode(sequence(0, {salt_blocks - 1})) x AS t"
-        )
+        repl += f" LATERAL VIEW {gen} x AS t"
     else:
-        repl = (
-            "SELECT doc_id, band_id, band_key, blk, t FROM blocked, "
-            f"(SELECT unnest(generate_series(0, {salt_blocks - 1})) AS t)"
-        )
+        repl += f", (SELECT {gen} AS t)"
     return f"""
     sigs AS (SELECT doc_id, shingle_set, {band_sel} FROM {sigs_rel}),
     banded AS ({band_rows}),
@@ -376,14 +350,10 @@ def ngram_sets_sql(d: SqlDialect, docs_rel: str = "documents") -> str:
     count, the pair join, and BOTH size lookups all reference it, and a
     multi-referenced CTE re-executes the shingle md5 pipeline per
     reference (same trap as minhash_signatures_sql)."""
-    sh = shingles_expr(d)
-    if d.name == d.SPARK:
-        dedup_sh, sz = f"array_distinct({sh})", "size(shingle_set)"
-    else:
-        dedup_sh, sz = f"list_distinct({sh})", "len(shingle_set)"
     return (
-        f"WITH s0 AS (SELECT doc_id, {dedup_sh} AS shingle_set "
-        f"FROM {docs_rel}) SELECT doc_id, shingle_set, {sz} AS n_sh FROM s0"
+        f"WITH s0 AS (SELECT doc_id, {d.array_distinct(shingles_expr(d))} "
+        f"AS shingle_set FROM {docs_rel}) "
+        f"SELECT doc_id, shingle_set, {d.size('shingle_set')} AS n_sh FROM s0"
     )
 
 
@@ -404,16 +374,17 @@ def ngram_postings_sql(
     form trades no robustness — both degrade linearly in the hottest
     df, both spill through the same external sorter. The oracle keeps
     the groupBy+join text."""
+    post = f"SELECT doc_id, {d.explode('shingle_set')} AS shingle FROM {sets_rel}"
+    # structural: window df against groupBy+join, kept by measurement
     if d.name == d.SPARK:
         return f"""
     SELECT doc_id, shingle FROM (
       SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
-      FROM (SELECT doc_id, explode(shingle_set) AS shingle FROM {sets_rel}) p
+      FROM ({post}) p
     ) w WHERE df BETWEEN 2 AND {params.ngram_df_cap}
     """
-    unnest = "unnest(shingle_set)"
     return f"""
-    WITH postings AS (SELECT doc_id, {unnest} AS shingle FROM {sets_rel}),
+    WITH postings AS ({post}),
     freq AS (SELECT shingle, count(*) AS df FROM postings GROUP BY shingle)
     SELECT postings.doc_id, postings.shingle
     FROM postings JOIN freq ON postings.shingle = freq.shingle
@@ -465,15 +436,12 @@ def simhash_items(
     array once first — inlining shingles_expr here would recompute the
     tokenize+md5 pipeline per bit (measured ~16× slowdown)."""
     sh = arr_col
-    n = _size(d, sh)
+    n = d.size(sh)
     bit_terms = []
     for j in range(SIMHASH_BITS):
         # bit j := high bit of hex digit j of each shingle's md5
         pred = f"substr(x, {j + 1}, 1) IN ('8','9','a','b','c','d','e','f')"
-        if d.name == d.SPARK:
-            cnt = f"size(filter({sh}, x -> {pred}))"
-        else:
-            cnt = f"len(list_filter({sh}, x -> {pred}))"
+        cnt = d.size(d.filter(sh, f"x -> {pred}"))
         bit_terms.append(f"(CASE WHEN 2 * ({cnt}) > {n} THEN {1 << j} ELSE 0 END)")
     return {"simhash16": "(" + " + ".join(bit_terms) + ")"}
 
@@ -520,7 +488,7 @@ def simhash_band_items(
     """
     assert band_bits % 4 == 0 and bands * band_bits <= 128
     sh = arr_col
-    n = _size(d, sh)
+    n = d.size(sh)
     digits_per_band = band_bits // 4
     items: dict[str, str] = {}
     for b in range(bands):
@@ -530,10 +498,7 @@ def simhash_band_items(
             bit = r % 4
             val = d.hex_digit(f"substr(x, {digit_pos}, 1)")
             pred = f"((({val}) >> {bit}) & 1) = 1"
-            if d.name == d.SPARK:
-                cnt = f"size(filter({sh}, x -> {pred}))"
-            else:
-                cnt = f"len(list_filter({sh}, x -> {pred}))"
+            cnt = d.size(d.filter(sh, f"x -> {pred}"))
             terms.append(
                 f"(CASE WHEN 2 * ({cnt}) > {n} "
                 f"THEN CAST({1 << r} AS BIGINT) ELSE 0 END)"
@@ -904,6 +869,7 @@ def dedup_groups_sql(
     shuffle bounded by the PAIR graph, orders of magnitude smaller than
     the corpus (log-diameter rounds, or large-star/small-star).
     """
+    # structural: Spark runs the convergence-checked iterative runner
     assert d.name == d.DUCKDB, "Spark path runs the iterative runner"
     mat = "AS MATERIALIZED "
     parts = [

@@ -49,7 +49,9 @@ def asof_enrich_sql(
     operator at all. The oracle is DuckDB's native ASOF LEFT JOIN over
     (user, ts)-deduped marks — different algorithm, same relation.
     """
+    # structural: DuckDB's native ASOF JOIN against the Spark window
     if d.name == d.DUCKDB:
+        p_us, m_us = d.unix_micros("p.ts"), d.unix_micros("m.ts")
         return f"""
         WITH marks AS (
           SELECT user_id, ts, max(event_id) AS mark_event_id,
@@ -62,10 +64,10 @@ def asof_enrich_sql(
           WHERE event_type = '{probe_type}'
         )
         SELECT p.event_id, p.user_id,
-               epoch_us(p.ts) AS ts_us, p.value,
-               m.mark_event_id, epoch_us(m.ts) AS mark_ts_us,
+               {p_us} AS ts_us, p.value,
+               m.mark_event_id, {m_us} AS mark_ts_us,
                m.mark_value,
-               epoch_us(p.ts) - epoch_us(m.ts) AS staleness_us
+               {p_us} - {m_us} AS staleness_us
         FROM probes p ASOF LEFT JOIN marks m
           ON p.user_id = m.user_id AND p.ts >= m.ts
         """
@@ -125,11 +127,7 @@ def window_attrib_sql(
     h_us = horizon_sec * us
     probe_epoch = d.unix_micros("p.ts")
     mark_epoch = d.unix_micros("m.ts")
-    b = "bucket"
-    if d.name == d.SPARK:
-        gen = f"explode(array({b}, {b} - 1))"
-    else:
-        gen = f"unnest([{b}, {b} - 1])"
+    gen = d.explode(d.array("bucket", "bucket - 1"))
     return f"""
     WITH marks AS (
       SELECT user_id, ts, event_id, value,
@@ -189,6 +187,7 @@ def asof_enrich_segmented_sql(
     The DuckDB oracle is the plain :func:`asof_enrich_sql` oracle —
     segmentation is placement-only, like the salted LSH join.
     """
+    # structural: the oracle delegates to the plain ASOF JOIN form
     if d.name == d.DUCKDB:
         return asof_enrich_sql(d, rel, mark_type, probe_type)
     block_us = block_sec * 1_000_000
@@ -342,6 +341,7 @@ def funnel_sql(
     """
     us = 1_000_000
     h = step_horizon_sec * us
+    # structural: a sorted-array scan against the conditional-min chain
     if d.name == d.SPARK:
         lines = [
             "WITH per_user AS (",
@@ -376,21 +376,22 @@ def funnel_sql(
         )
         return "\n".join(lines)
     # DuckDB: k-stage conditional-min chain
+    e_us = d.unix_micros("e.ts")
     ctes = [
         f"users AS (SELECT DISTINCT user_id FROM {rel})",
         f"""s0 AS (
-          SELECT user_id, min(epoch_us(ts)) AS t0 FROM {rel}
+          SELECT user_id, min({d.unix_micros("ts")}) AS t0 FROM {rel}
           WHERE event_type = '{steps[0]}' GROUP BY user_id
         )""",
     ]
     for i, step in enumerate(steps[1:], start=1):
         ctes.append(f"""s{i} AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS t{i}
+          SELECT e.user_id, min({e_us}) AS t{i}
           FROM (SELECT * FROM {rel}) e
           JOIN s{i - 1} p ON p.user_id = e.user_id
           WHERE e.event_type = '{step}'
-            AND epoch_us(e.ts) >= p.t{i - 1}
-            AND epoch_us(e.ts) <= p.t{i - 1} + {h}
+            AND {e_us} >= p.t{i - 1}
+            AND {e_us} <= p.t{i - 1} + {h}
           GROUP BY e.user_id
         )""")
     sel = ["u.user_id"]

@@ -41,23 +41,13 @@ NEARDUP_THRESHOLD = 0.3
 NEARDUP_ASSIGN_R = 2
 
 
-def dot_expr(d: SqlDialect, a: str, b: str) -> str:
-    if d.name == d.SPARK:
-        return (
-            f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), "
-            f"CAST({b} AS ARRAY<DOUBLE>), (x, y) -> x * y), "
-            f"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-    return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-
-
 def norm_expr(d: SqlDialect, a: str) -> str:
-    return f"sqrt({dot_expr(d, a, a)})"
+    return f"sqrt({d.dot(a, a)})"
 
 
 def cosine_expr(d: SqlDialect, a: str, b: str) -> str:
     return (
-        f"round({dot_expr(d, a, b)} / "
+        f"round({d.dot(a, b)} / "
         f"greatest({norm_expr(d, a)} * {norm_expr(d, b)}, 1e-12), 4)"
     )
 
@@ -72,7 +62,7 @@ def cosine_prenorm_expr(d: SqlDialect, a: str, b: str, na: str, nb: str) -> str:
     O(candidate pairs).
     """
     return (
-        f"round({dot_expr(d, a, b)} / greatest({na} * {nb}, 1e-12), 4)"
+        f"round({d.dot(a, b)} / greatest({na} * {nb}, 1e-12), 4)"
     )
 
 
@@ -84,15 +74,10 @@ def emb_norms_sql(d: SqlDialect, emb_rel: str = "embeddings") -> str:
     the per-PAIR dot's CAST becomes a no-op (SimplifyCasts removes it)
     instead of allocating a fresh double array per pair side — same
     value (float→double is exact), 2 fewer array materializations per
-    candidate pair in the verify stage."""
-    if d.name == d.SPARK:
-        return (
-            f"SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS embedding, "
-            f"{norm_expr(d, 'embedding')} AS nrm FROM {emb_rel}"
-        )
+    candidate pair in the verify stage (dialect.dot_operand)."""
     return (
-        f"SELECT vec_id, embedding, {norm_expr(d, 'embedding')} AS nrm "
-        f"FROM {emb_rel}"
+        f"SELECT vec_id, {d.dot_operand('embedding')}, "
+        f"{norm_expr(d, 'embedding')} AS nrm FROM {emb_rel}"
     )
 
 
@@ -202,7 +187,6 @@ def kmeans_centroids_ctes(
     in the usual IVF training budget (~10^5-10^6 vectors); the fixture
     default (20%) is sized for the test corpora.
     """
-    dbl = "ARRAY<DOUBLE>" if d.name == d.SPARK else "DOUBLE[]"
     vid_hash = d.hex_to_long(d.md5(d.to_string("vec_id")))
     # hash-decorrelated deterministic sample + hash-ordered seeds: id
     # arithmetic (vec_id % mod) correlates with id-derived data layouts
@@ -210,7 +194,7 @@ def kmeans_centroids_ctes(
     # hashing makes both the sample and the seed pick pseudo-random while
     # staying engine-portable and deterministic.
     parts = [
-        f"samp AS (SELECT vec_id, CAST(embedding AS {dbl}) AS emb "
+        f"samp AS (SELECT vec_id, {d.double_array('embedding')} AS emb "
         f"FROM {emb_rel} WHERE ({vid_hash}) % {sample_mod} = 0)",
         f"c0 AS (SELECT vec_id AS centroid_id, emb FROM ("
         f"SELECT vec_id, emb FROM samp "
@@ -222,6 +206,7 @@ def kmeans_centroids_ctes(
         parts.append(
             f"a{t} AS ({ivf_multi_assign_sql(d, 'samp', prev, 1, 'emb')})"
         )
+        # structural: tree-aggregate vector mean against per-dimension unnest
         if d.name == d.SPARK:
             # Bucket-wise VECTOR mean, no per-dimension explode: the old
             # d{t} stage unnested sample × dims rows through a
@@ -433,7 +418,7 @@ def _spark_prenorm_sides(emb_rel: str, cents_rel: str,
         f"{norm_expr(d, 'emb')} AS cn FROM {cents_rel}) c"
     )
     cos = (
-        f"round({dot_expr(d, 'e.emb', 'c.emb')} / "
+        f"round({d.dot('e.emb', 'c.emb')} / "
         f"greatest(e.en * c.cn, 1e-12), 4)"
     )
     return e_side, c_side, cos
@@ -680,6 +665,7 @@ def ivf_multi_assign_sql(
     (:func:`spark_topr_assign_sql`, which adds the rank as ``arank``);
     the oracle runs the row_number window (:func:`_window_assign_sql`,
     (vec_id, centroid_id))."""
+    # structural: aggregate against window, kept by measurement
     if d.name == d.SPARK:
         return spark_topr_assign_sql(emb_rel, cents_rel, assign_r, vec_col)
     return _window_assign_sql(d, emb_rel, cents_rel, assign_r, vec_col)
@@ -974,24 +960,9 @@ def quantized_embeddings_sql(d: SqlDialect, emb_rel: str = "embeddings") -> str:
     scale DOUBLE) — 4x smaller vector bytes than float32 at 100 TB
     (the production form writes TINYINT parquet; the logical scheme is
     what the gate pins)."""
-    if d.name == d.SPARK:
-        ma = (
-            "greatest(array_max(transform(CAST(embedding AS ARRAY<DOUBLE>),"
-            " x -> abs(x))), 1e-12)"
-        )
-        qv = (
-            "transform(CAST(embedding AS ARRAY<DOUBLE>), "
-            "x -> CAST(floor(x * 127 / ma + 0.5) AS INT))"
-        )
-    else:
-        ma = (
-            "greatest(list_max(list_transform(CAST(embedding AS DOUBLE[]),"
-            " x -> abs(x))), 1e-12)"
-        )
-        qv = (
-            "list_transform(CAST(embedding AS DOUBLE[]), "
-            "x -> CAST(floor(x * 127 / ma + 0.5) AS INT))"
-        )
+    emb = d.double_array("embedding")
+    ma = f"greatest({d.array_max(d.transform(emb, 'x -> abs(x)'))}, 1e-12)"
+    qv = d.transform(emb, "x -> CAST(floor(x * 127 / ma + 0.5) AS INT)")
     return f"""
     SELECT vec_id, label, {qv} AS qvec, ma / 127 AS scale
     FROM (SELECT *, {ma} AS ma FROM {emb_rel}) withmax
@@ -1002,12 +973,8 @@ def dequantized_embeddings_sql(d: SqlDialect, emb_rel: str = "embeddings") -> st
     """What the engine reads back from the int8 store: the same
     (vec_id, label, embedding) relation with quantization error applied
     — so every float-vector operator runs UNCHANGED over it."""
-    dq = (
-        "transform(qvec, x -> x * scale)" if d.name == d.SPARK
-        else "list_transform(qvec, x -> x * scale)"
-    )
     return f"""
-    SELECT vec_id, label, {dq} AS embedding
+    SELECT vec_id, label, {d.transform("qvec", "x -> x * scale")} AS embedding
     FROM ({quantized_embeddings_sql(d, emb_rel)}) quantized
     """
 

@@ -31,32 +31,15 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 
 def tokens_expr(d: SqlDialect, col: str) -> str:
-    if d.name == d.SPARK:
-        return f"split(lower({col}), '{TOKEN_SPLIT_RE}')"
-    return f"regexp_split_to_array(lower({col}), '{TOKEN_SPLIT_RE}')"
-
-
-def _size(d: SqlDialect, arr: str) -> str:
-    return f"size({arr})" if d.name == d.SPARK else f"len({arr})"
-
-
-def _filter_count(d: SqlDialect, arr: str, lambda_body: str) -> str:
-    """Count of elements matching a lambda predicate over variable x."""
-    if d.name == d.SPARK:
-        return f"size(filter({arr}, x -> {lambda_body}))"
-    return f"len(list_filter({arr}, x -> {lambda_body}))"
-
-
-def _array_distinct(d: SqlDialect, arr: str) -> str:
-    return f"array_distinct({arr})" if d.name == d.SPARK else f"list_distinct({arr})"
+    return d.regexp_split(f"lower({col})", TOKEN_SPLIT_RE)
 
 
 def token_count_items(d: SqlDialect, text_col: str = "text") -> dict[str, str]:
     """Whitespace token count + BPE-ish subword estimate."""
     toks = tokens_expr(d, text_col)
     return {
-        "n_tokens": _size(d, toks),
-        "n_distinct_tokens": _size(d, _array_distinct(d, toks)),
+        "n_tokens": d.size(toks),
+        "n_distinct_tokens": d.size(d.array_distinct(toks)),
         "n_chars": d.length(text_col),
         "bpe_token_estimate": d.int_div(
             f"{d.length(text_col)} + {BPE_CHARS_PER_TOKEN - 1}",
@@ -69,10 +52,10 @@ def quality_items(d: SqlDialect, text_col: str = "text") -> dict[str, str]:
     """Quality heuristics: length, stopword ratio, lexical diversity,
     punctuation density — the standard pretraining-corpus filters."""
     toks = tokens_expr(d, text_col)
-    n = f"greatest({_size(d, toks)}, 1)"
+    n = f"greatest({d.size(toks)}, 1)"
     stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
-    stop_cnt = _filter_count(d, toks, f"x IN ({stop_list})")
-    distinct_ratio = f"CAST({_size(d, _array_distinct(d, toks))} AS DOUBLE) / {n}"
+    stop_cnt = d.size(d.filter(toks, f"x -> x IN ({stop_list})"))
+    distinct_ratio = f"CAST({d.size(d.array_distinct(toks))} AS DOUBLE) / {n}"
     stop_ratio = f"CAST({stop_cnt} AS DOUBLE) / {n}"
     alnum = d.regexp_replace_all(text_col, "[a-zA-Z0-9 ]", "")
     punct_ratio = (
@@ -87,7 +70,7 @@ def quality_items(d: SqlDialect, text_col: str = "text") -> dict[str, str]:
         "punct_ratio": f"round({punct_ratio}, 6)",
         "mean_token_len": f"round({mean_tok_len}, 6)",
         "quality_score": (
-            f"round(least(1.0, CAST({_size(d, toks)} AS DOUBLE) / 100)"
+            f"round(least(1.0, CAST({d.size(toks)} AS DOUBLE) / 100)"
             f" * (1.0 - {punct_ratio}) * least(1.0, 4 * {stop_ratio} + 0.5), 6)"
         ),
     }
@@ -99,7 +82,7 @@ def langid_items(d: SqlDialect, text_col: str = "text") -> dict[str, str]:
     scores = {}
     for lang, markers in LANG_MARKERS.items():
         lst = ", ".join(f"'{m}'" for m in markers)
-        scores[lang] = _filter_count(d, toks, f"x IN ({lst})")
+        scores[lang] = d.size(d.filter(toks, f"x -> x IN ({lst})"))
     # deterministic argmax: iterate in fixed order, strictly-greater wins
     langs = list(LANG_MARKERS)
     pred = f"'{langs[0]}'"
@@ -116,24 +99,13 @@ def fingerprint_items(d: SqlDialect, text_col: str = "text") -> dict[str, str]:
     """Winnowing-style fingerprint: min hash over sliding 8-token windows
     + a whole-document content hash."""
     toks = tokens_expr(d, text_col)
-    n = _size(d, toks)
-    if d.name == d.SPARK:
-        windows = (
-            f"transform(sequence(1, greatest({n} - 7, 1)), "
-            f"i -> md5(array_join(slice({toks}, i, 8), ' ')))"
-        )
-        win_min = f"array_min({windows})"
-        joined = f"array_join({toks}, ' ')"
-    else:
-        windows = (
-            f"list_transform(generate_series(1, greatest({n} - 7, 1)), "
-            f"i -> md5(array_to_string({toks}[i:i+7], ' ')))"
-        )
-        win_min = f"list_min({windows})"
-        joined = f"array_to_string({toks}, ' ')"
+    windows = d.transform(
+        d.sequence("1", f"greatest({d.size(toks)} - 7, 1)"),
+        f"i -> {d.md5(d.array_join(d.slice(toks, 'i', 8), ' '))}",
+    )
     return {
-        "content_hash": d.md5(joined),
-        "winnow_fingerprint": win_min,
+        "content_hash": d.md5(d.array_join(toks, " ")),
+        "winnow_fingerprint": d.array_min(windows),
     }
 
 
@@ -210,13 +182,7 @@ def doc_length_histogram_sql(d: SqlDialect, rel: str = "documents") -> str:
         + [f"'{a}-{b - 1}'" for a, b in zip(edges, edges[1:])]
         + [f"'>= {edges[-1]}'"]
     )
-    label_arr = ", ".join(labels)
-    idx = "bucket + 1"
-    label = (
-        f"element_at(array({label_arr}), CAST({idx} AS INT))"
-        if d.name == d.SPARK
-        else f"[{label_arr}][CAST({idx} AS INT)]"
-    )
+    label = d.element_at(d.array(*labels), "CAST(bucket + 1 AS INT)")
     return f"""
     WITH per_doc AS (SELECT {toks} AS n_tokens FROM {rel}),
     b AS (SELECT n_tokens, {ladder} AS bucket FROM per_doc)
@@ -270,23 +236,14 @@ def doc_length_quantiles_sql(d: SqlDialect, rel: str = "documents") -> str:
     stop_ok = (
         f"({quality_items(d)['stopword_ratio']}) >= {GOPHER_MIN_STOPWORD}"
     )
-    probs = ", ".join(str(p) for p in QUANTILE_PROBS)
+    probs = d.array(*map(str, QUANTILE_PROBS))
+    # structural: Spark's mergeable sketch against DuckDB's exact rank
     if d.name == d.SPARK:
-        qs = (
-            f"approx_percentile(n_tokens, array({probs}), "
-            f"{QUANTILE_ACCURACY})"
-        )
-
-        def at(i: int) -> str:
-            return f"element_at(qs, {i})"
+        qs = f"approx_percentile(n_tokens, {probs}, {QUANTILE_ACCURACY})"
     else:
-        qs = f"quantile_disc(n_tokens, [{probs}])"
-
-        def at(i: int) -> str:
-            return f"qs[{i}]"
-
+        qs = f"quantile_disc(n_tokens, {probs})"
     cols = ", ".join(
-        f"CAST({at(i + 1)} AS BIGINT) AS p{int(p * 100)}"
+        f"CAST({d.element_at('qs', str(i + 1))} AS BIGINT) AS p{int(p * 100)}"
         for i, p in enumerate(QUANTILE_PROBS)
     )
     return f"""
@@ -342,15 +299,10 @@ def doc_chunk_split_sql(
     n_chunks = (
         f"greatest(1, {d.int_div(f'greatest({n} - {overlap}, 0) + {stride} - 1', str(stride))})"
     )
-    if d.name == d.SPARK:
-        gen = f"explode(sequence(0, CAST({n_chunks} AS INT) - 1))"
-        chunk = f"array_join(slice(toks, chunk_idx * {stride} + 1, {size}), ' ')"
-    else:
-        gen = f"unnest(generate_series(0, CAST({n_chunks} AS INT) - 1))"
-        chunk = (
-            f"array_to_string(list_slice(toks, chunk_idx * {stride} + 1, "
-            f"chunk_idx * {stride} + {size}), ' ')"
-        )
+    gen = d.explode(d.sequence("0", f"CAST({n_chunks} AS INT) - 1"))
+    chunk = d.array_join(
+        d.slice("toks", f"chunk_idx * {stride} + 1", size), " "
+    )
     return f"""
     WITH per_doc AS (
       SELECT doc_id, {toks} AS toks, {token_count_items(d)['n_tokens']} AS n_tokens
@@ -401,12 +353,10 @@ def contamination_sql(
         sets_rel = "sets"
     else:
         sets = ""
-    unnest = (
-        "explode(shingle_set)" if d.name == d.SPARK else "unnest(shingle_set)"
-    )
+    post = d.explode("shingle_set")
     return f"""
     WITH {sets}
-    post AS (SELECT doc_id, {unnest} AS shingle FROM {sets_rel}),
+    post AS (SELECT doc_id, {post} AS shingle FROM {sets_rel}),
     eval_post AS (SELECT doc_id AS eval_doc, shingle FROM post
                   WHERE doc_id < {eval_max_id}),
     hits AS (
@@ -441,23 +391,19 @@ def repetition_items(d: SqlDialect, text_col: str = "text") -> dict[str, str]:
     shuffle."""
     from .dedup import shingles_expr
 
-    nl = "'\\n'" if d.name == d.SPARK else "chr(10)"
-    lines = (
-        f"split({text_col}, {nl})" if d.name == d.SPARK
-        else f"str_split({text_col}, {nl})"
-    )
-    n_lines = f"greatest({_size(d, lines)}, 1)"
+    lines = d.str_split(text_col, "\n")
+    n_lines = f"greatest({d.size(lines)}, 1)"
     dup_line = (
-        f"1.0 - CAST({_size(d, _array_distinct(d, lines))} AS DOUBLE)"
+        f"1.0 - CAST({d.size(d.array_distinct(lines))} AS DOUBLE)"
         f" / {n_lines}"
     )
     sh = shingles_expr(d, text_col)
-    n_sh = f"greatest({_size(d, sh)}, 1)"
+    n_sh = f"greatest({d.size(sh)}, 1)"
     dup_sh = (
-        f"1.0 - CAST({_size(d, _array_distinct(d, sh))} AS DOUBLE) / {n_sh}"
+        f"1.0 - CAST({d.size(d.array_distinct(sh))} AS DOUBLE) / {n_sh}"
     )
     return {
-        "n_lines": f"CAST({_size(d, lines)} AS INT)",
+        "n_lines": f"CAST({d.size(lines)} AS INT)",
         "dup_line_ratio": f"round({dup_line}, 6)",
         "dup_shingle_ratio": f"round({dup_sh}, 6)",
     }
@@ -729,9 +675,8 @@ def vocab_top_sql(
     rows, not the corpus).
     """
     toks = tokens_expr(d, "text")
-    unnest = f"explode({toks})" if d.name == d.SPARK else f"unnest({toks})"
     return f"""
-    WITH posting AS (SELECT doc_id, {unnest} AS token FROM {rel}),
+    WITH posting AS (SELECT doc_id, {d.explode(toks)} AS token FROM {rel}),
     freq AS (
       SELECT token,
              CAST(count(*) AS BIGINT) AS n_occurrences,
@@ -772,12 +717,8 @@ def boilerplate_post_sql(d: SqlDialect, rel: str = "documents") -> str:
     """
     n = BOILERPLATE_NGRAM
     toks = tokens_expr(d, "text")
-    if d.name == d.SPARK:
-        gen = f"explode(sequence(1, greatest(size(t) - {n - 1}, 1)))"
-        sh = f"md5(array_join(slice(t, pos, {n}), ' '))"
-    else:
-        gen = f"unnest(generate_series(1, greatest(len(t) - {n - 1}, 1)))"
-        sh = f"md5(array_to_string(t[pos:pos + {n - 1}], ' '))"
+    gen = d.explode(d.sequence("1", f"greatest({d.size('t')} - {n - 1}, 1)"))
+    sh = d.md5(d.array_join(d.slice("t", "pos", n), " "))
     return f"""
     WITH toks AS (SELECT doc_id, {toks} AS t FROM {rel}),
     positions AS (SELECT doc_id, t, {gen} AS pos FROM toks)
@@ -800,38 +741,26 @@ def boilerplate_from_common_sql(
     frequency sources."""
     n = BOILERPLATE_NGRAM
     toks = tokens_expr(d, "text")
+    span = d.sequence("x", f"least(x + {n - 1}, {d.size('t.t')})")
+    cov = d.array_distinct(f"flatten({d.transform('h.hits', f'x -> {span}')})")
+    # structural: Spark's positional filter lambda vs a list comprehension
     if d.name == d.SPARK:
-        hits_agg = "collect_list(p.pos)"
-        n_toks = "size(t.t)"
-        cov = (
-            "array_distinct(flatten(transform(h.hits, "
-            f"x -> sequence(x, least(x + {n - 1}, size(t.t))))))"
-        )
         clean = (
             "array_join(filter(t, (x, i) -> "
             "NOT array_contains(cov, i + 1)), ' ')"
         )
-        full = "array_join(t, ' ')"
     else:
-        hits_agg = "list(p.pos)"
-        n_toks = "len(t.t)"
-        cov = (
-            "list_distinct(flatten(list_transform(h.hits, "
-            f"x -> generate_series(x, least(x + {n - 1}, len(t.t))))))"
-        )
-        # coalesce: DuckDB's array_to_string([]) is NULL where Spark's
-        # array_join(empty) is '' (a fully-covered doc must hash '')
+        # coalesce: DuckDB joins an empty array to NULL, Spark to '' (a
+        # fully-covered doc must hash '')
         clean = (
             "coalesce(array_to_string([t[i] for i in "
             "generate_series(1, len(t)) if NOT list_contains(cov, i)], "
             "' '), '')"
         )
-        full = "array_to_string(t, ' ')"
-    size_cov = "size(cov)" if d.name == d.SPARK else "len(cov)"
-    size_hits = "size(hits)" if d.name == d.SPARK else "len(hits)"
+    full = d.array_join("t", " ")
     return f"""
     WITH hitpos AS (
-      SELECT p.doc_id, {hits_agg} AS hits
+      SELECT p.doc_id, {d.collect_list("p.pos")} AS hits
       FROM {post_rel} p JOIN {common_rel} f ON p.shingle = f.shingle
       GROUP BY p.doc_id
     ),
@@ -842,14 +771,14 @@ def boilerplate_from_common_sql(
       LEFT JOIN hitpos h ON t.doc_id = h.doc_id
     )
     SELECT doc_id,
-           CAST({n_toks.replace('t.t', 't')} AS INT) AS n_tokens,
-           CAST(CASE WHEN hits IS NULL THEN 0 ELSE {size_hits} END AS INT)
+           CAST({d.size("t")} AS INT) AS n_tokens,
+           CAST(CASE WHEN hits IS NULL THEN 0 ELSE {d.size("hits")} END AS INT)
              AS n_hit_shingles,
-           CAST(CASE WHEN cov IS NULL THEN 0 ELSE {size_cov} END AS INT)
+           CAST(CASE WHEN cov IS NULL THEN 0 ELSE {d.size("cov")} END AS INT)
              AS n_covered_tokens,
-           round(CAST(CASE WHEN cov IS NULL THEN 0 ELSE {size_cov} END
+           round(CAST(CASE WHEN cov IS NULL THEN 0 ELSE {d.size("cov")} END
                       AS DOUBLE)
-                 / greatest({n_toks.replace('t.t', 't')}, 1), 6)
+                 / greatest({d.size("t")}, 1), 6)
              AS boilerplate_ratio,
            {d.md5(f"CASE WHEN cov IS NULL THEN {full} ELSE {clean} END")}
              AS clean_hash
@@ -916,7 +845,6 @@ def bpe_words_sql(d: SqlDialect, rel: str = "documents") -> str:
     (' c1 c2 ... ') — the representation every merge round rewrites
     with one non-overlapping left-to-right replace()."""
     toks = tokens_expr(d, "text")
-    unnest = f"explode({toks})" if d.name == d.SPARK else f"unnest({toks})"
     # each symbol carries its OWN leading+trailing space (' a  b  c '):
     # adjacent pair occurrences are then character-DISJOINT, so one
     # non-overlapping replace() applies the merge with classic BPE's
@@ -927,7 +855,7 @@ def bpe_words_sql(d: SqlDialect, rel: str = "documents") -> str:
     return f"""
     SELECT word, CAST(count(*) AS BIGINT) AS cnt,
            {chars} AS spaced
-    FROM (SELECT {unnest} AS word FROM {rel}) words
+    FROM (SELECT {d.explode(toks)} AS word FROM {rel}) words
     WHERE word <> ''
     GROUP BY word
     """
@@ -938,16 +866,10 @@ def bpe_top_pair_sql(d: SqlDialect, words_rel: str) -> str:
     vocabulary (count DESC, then lexicographic — the deterministic tie
     rule both engines share). Overlapping occurrences count, as in
     classic BPE ('a a a' contributes (a,a) twice)."""
-    if d.name == d.SPARK:
-        arr = "split(trim(spaced), ' +')"
-        gen = "explode(sequence(1, size(arr) - 1))"
-        at = "element_at(arr, CAST(i AS INT))"
-        at1 = "element_at(arr, CAST(i + 1 AS INT))"
-    else:
-        arr = "string_split_regex(trim(spaced), ' +')"
-        gen = "unnest(generate_series(1, len(arr) - 1))"
-        at = "arr[i]"
-        at1 = "arr[i + 1]"
+    arr = d.regexp_split("trim(spaced)", " +")
+    gen = d.explode(d.sequence("1", f"{d.size('arr')} - 1"))
+    at = d.element_at("arr", "CAST(i AS INT)")
+    at1 = d.element_at("arr", "CAST(i + 1 AS INT)")
     return f"""
     SELECT left_sym, right_sym, CAST(sum(cnt) AS BIGINT) AS pair_count
     FROM (
@@ -960,7 +882,7 @@ def bpe_top_pair_sql(d: SqlDialect, words_rel: str) -> str:
           -- empty like DuckDB's generate_series)
           SELECT cnt, {arr} AS arr FROM {words_rel}
         ) witharr
-        WHERE {"size(arr)" if d.name == d.SPARK else "len(arr)"} >= 2
+        WHERE {d.size("arr")} >= 2
       ) positions
     ) pairs
     GROUP BY left_sym, right_sym

@@ -688,9 +688,7 @@ ENRICH_DIM: list[tuple[str, str, str]] = [
 
 def enrich_dim_sql(d: SqlDialect) -> str:
     rows = ", ".join(f"('{a}', '{t}', '{tr}')" for a, t, tr in ENRICH_DIM)
-    if d.name == d.SPARK:
-        return f"SELECT * FROM VALUES {rows} AS dim(app, team, tier)"
-    return f"SELECT * FROM (VALUES {rows}) dim(app, team, tier)"
+    return f"SELECT * FROM {d.values(rows, 'dim(app, team, tier)')}"
 
 
 ENRICH_ROLLUP_FINAL = """
@@ -743,16 +741,15 @@ def keyset_length_stats_sql(d: SqlDialect, rel: str) -> str:
     measures like record length; for unbounded measures swap in
     approx_percentile (t-digest sketch), same plan shape.
     """
-    pct = "percentile" if d.name == d.SPARK else "quantile_cont"
     passed = "CASE WHEN NOT dropped THEN raw_length END"
     keys = ", ".join(ORCHESTRATION_KEYS)
     return f"""
     SELECT {keys},
            CAST(count({passed}) AS BIGINT) AS n_passed,
            round(avg({passed}), 4) AS mean_len,
-           round({pct}({passed}, 0.5), 4) AS p50_len,
-           round({pct}({passed}, 0.9), 4) AS p90_len,
-           round({pct}({passed}, 0.99), 4) AS p99_len,
+           round({d.percentile(passed, "0.5")}, 4) AS p50_len,
+           round({d.percentile(passed, "0.9")}, 4) AS p90_len,
+           round({d.percentile(passed, "0.99")}, 4) AS p99_len,
            CAST(max({passed}) AS BIGINT) AS max_len
     FROM {rel}
     GROUP BY {keys}

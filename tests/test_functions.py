@@ -17,14 +17,20 @@ from slog_agent_spark.functions.match import compile_match, compile_value_match
 from slog_agent_spark.functions.template import compile_template, template_fields
 
 
-def eval_both(spark, duck, build_expr, fields: dict[str, str]):
-    """Evaluate an expression over one row on both engines; assert equal."""
+def eval_each(spark, duck, build_expr, fields: dict[str, str]):
+    """(Spark value, DuckDB value) of an expression over one row."""
     s_expr = build_expr(SPARK)
     d_expr = build_expr(DUCKDB)
     row = spark.createDataFrame([tuple(fields.values())], list(fields.keys()))
     s_val = row.select(F.expr(s_expr).alias("v")).first()["v"]
     cols = ", ".join(f"'{v}' AS {k}" for k, v in fields.items())
     d_val = duck.execute(f"SELECT {d_expr} AS v FROM (SELECT {cols})").fetchone()[0]
+    return s_val, d_val
+
+
+def eval_both(spark, duck, build_expr, fields: dict[str, str]):
+    """Evaluate an expression over one row on both engines; assert equal."""
+    s_val, d_val = eval_each(spark, duck, build_expr, fields)
     assert s_val == d_val, f"engines differ: spark={s_val!r} duck={d_val!r}"
     return s_val
 
@@ -139,15 +145,84 @@ DIALECT_HELPER_CASES = [
     (lambda d: d.hex_digit("substr(s, 1, 1)"), {"s": "f0"}, 15),
     (lambda d: d.bit_count(d.xor("CAST(5 AS BIGINT)", "CAST(3 AS BIGINT)")),
      {"s": "x"}, 2),
+    # array / generator / aggregate vocabulary (one case per method)
+    (lambda d: d.size(d.array("'a'", "s")), {"s": "b"}, 2),
+    (lambda d: d.filter(d.array("1", "2", "3"), "x -> x > 1"), {"s": "x"}, [2, 3]),
+    (lambda d: d.transform(d.array("1", "2"), "x -> x * 10"), {"s": "x"}, [10, 20]),
+    (lambda d: d.size(d.array_distinct(d.str_split("s", ","))), {"s": "a,b,a"}, 2),
+    (lambda d: d.array_min(d.array("3", "1", "2")), {"s": "x"}, 1),
+    (lambda d: d.array_max(d.array("3", "1", "2")), {"s": "x"}, 3),
+    (lambda d: d.size(d.array_intersect(d.array("1", "1", "2", "3"),
+                                        d.array("2", "1"))), {"s": "x"}, 2),
+    (lambda d: d.size(d.array_union(d.array("1", "2"), d.array("2", "3"))),
+     {"s": "x"}, 3),
+    (lambda d: d.explode(d.array("'b'", "s")), {"s": "c"}, "b"),
+    (lambda d: d.sequence("1", "3"), {"s": "x"}, [1, 2, 3]),
+    (lambda d: d.array_join(d.array("'a'", "s"), " "), {"s": "b"}, "a b"),
+    (lambda d: d.slice(d.str_split("s", ","), "2", 2), {"s": "a,b,c,d"},
+     ["b", "c"]),
+    (lambda d: d.slice(d.str_split("s", ","), "3", 5), {"s": "a,b,c,d"},
+     ["c", "d"]),
+    (lambda d: d.str_split("s", "\n"), {"s": "a\nb"}, ["a", "b"]),
+    (lambda d: d.regexp_split("s", " +"), {"s": "a  b c"}, ["a", "b", "c"]),
+    (lambda d: d.array("'a'", "s"), {"s": "b"}, ["a", "b"]),
+    (lambda d: d.element_at(d.array("'a'", "s"), "2"), {"s": "b"}, "b"),
+    (lambda d: d.collect_list("s"), {"s": "b"}, ["b"]),
+    (lambda d: d.percentile("CAST(s AS DOUBLE)", "0.5"), {"s": "3"}, 3.0),
+    (lambda d: d.double_array(d.array("1", "2")), {"s": "x"}, [1.0, 2.0]),
+    (lambda d: d.dot(d.array("1", "2"), d.array("3", "4")), {"s": "x"}, 11.0),
+    (lambda d: d.concat_fn("s", "'-x'"), {"s": "a"}, "a-x"),
+    (lambda d: d.concat_fn("s", d.to_string("NULL")), {"s": "a"}, None),
 ]
 
 
 @pytest.mark.parametrize("builder,fields,expected", DIALECT_HELPER_CASES)
 def test_dialect_helpers_dual_engine(spark, duck, builder, fields, expected):
-    """locate/rtrim/hex/xor helpers power the regex-free extract paths —
-    both engines must agree exactly (values compared as strings/ints)."""
+    """locate/rtrim/hex/xor helpers power the regex-free extract paths,
+    and the array/generator/aggregate methods every corpus operator
+    composes — both engines must agree exactly (values compared as
+    strings/ints/lists)."""
     got = eval_both(spark, duck, builder, fields)
     assert got == expected
+
+
+def test_dialect_relation_items_dual_engine(spark, duck):
+    """values() (a FROM item) and dot_operand() (a SELECT item) return
+    the same rows on both engines."""
+    def sql(d):
+        inner = (
+            f"SELECT n, {d.array('1', '2')} AS v "
+            f"FROM {d.values('(1), (2)', 't(n)')}"
+        )
+        return f"SELECT n, {d.dot_operand('v')} FROM ({inner}) x"
+
+    s_rows = sorted(tuple(r) for r in spark.sql(sql(SPARK)).collect())
+    d_rows = sorted(duck.execute(sql(DUCKDB)).fetchall())
+    assert s_rows == d_rows == [(1, [1.0, 2.0]), (2, [1.0, 2.0])]
+
+
+def test_dialect_divergences_the_call_sites_guard(spark, duck):
+    """Inputs on which a method's two spellings disagree (each named in
+    the method's docstring), pinned so no call site silently relies on
+    an equivalence:
+
+    - array_join of an EMPTY array: '' on Spark, NULL from DuckDB's
+      array_to_string — boilerplate_from_common_sql's coalesce;
+    - sequence(1, 0) counts down on Spark, generate_series(1, 0) is
+      empty — bpe_top_pair_sql's ``size(arr) >= 2`` filter;
+    - size of a NULL array: NULL on both under this session's ANSI mode
+      (Spark gives -1 without it) — regexp_count's coalesce."""
+    empty = lambda d: d.filter(d.array("'a'"), "x -> x = 'b'")  # noqa: E731
+    assert eval_each(
+        spark, duck, lambda d: d.array_join(empty(d), " "), {"s": "x"}
+    ) == ("", None)
+    assert eval_each(
+        spark, duck, lambda d: d.sequence("1", "0"), {"s": "x"}
+    ) == ([1, 0], [])
+    null_arr = lambda d: d.str_split(d.to_string("NULL"), ",")  # noqa: E731
+    assert eval_each(
+        spark, duck, lambda d: d.size(null_arr(d)), {"s": "x"}
+    ) == (None, None)
 
 
 # ---------------------------------------------------------------------------

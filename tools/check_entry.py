@@ -88,7 +88,7 @@ def _fresh_con(sf_dir: str):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = build_session(master="local[8]", shuffle_partitions=16)
+    spark = build_session(shuffle_partitions=16)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

@@ -58,7 +58,7 @@ def main() -> None:
     from slog_agent_spark.sources.parser import parse_transcripts
     from slog_agent_spark.sources.transcripts import transcripts_df
 
-    spark = build_session(master="local[8]", shuffle_partitions=16)
+    spark = build_session(shuffle_partitions=16)
     sf = args.sf_dir
 
     sections: list[tuple[str, str, str]] = []  # (title, commentary, plan text)
