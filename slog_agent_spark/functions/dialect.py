@@ -50,6 +50,11 @@ class SqlDialect:
             raise ValueError(f"unknown dialect {name!r}")
         self.name = name
 
+    def _fn(self, spark: str, duckdb: str, *args: str) -> str:
+        """A call of the function each engine names differently."""
+        fn = spark if self.name == self.SPARK else duckdb
+        return f"{fn}({', '.join(args)})"
+
     # -- literals -----------------------------------------------------
     def lit(self, s: str) -> str:
         """Quote a Python string as a SQL string literal.
@@ -136,12 +141,10 @@ class SqlDialect:
         return f"replace({col}, {self.lit(search)}, {self.lit(replacement)})"
 
     def starts_with(self, col: str, prefix: str) -> str:
-        fn = "startswith" if self.name == self.SPARK else "starts_with"
-        return f"{fn}({col}, {self.lit(prefix)})"
+        return self._fn("startswith", "starts_with", col, self.lit(prefix))
 
     def ends_with(self, col: str, suffix: str) -> str:
-        fn = "endswith" if self.name == self.SPARK else "ends_with"
-        return f"{fn}({col}, {self.lit(suffix)})"
+        return self._fn("endswith", "ends_with", col, self.lit(suffix))
 
     def contains(self, col: str, needle: str) -> str:
         return f"contains({col}, {self.lit(needle)})"
@@ -227,10 +230,6 @@ class SqlDialect:
     # pair per construct. Each docstring names the inputs on which the
     # two spellings disagree: no caller may rely on an equivalence that
     # is not stated here.
-
-    def _fn(self, spark: str, duckdb: str, *args: str) -> str:
-        fn = spark if self.name == self.SPARK else duckdb
-        return f"{fn}({', '.join(args)})"
 
     def size(self, arr: str) -> str:
         """Element count. A NULL array gives NULL on both only under
